@@ -55,7 +55,7 @@ object Bench {
       import org.apache.spark.sql.functions._
       val tmp = Files.createTempDirectory("graft-bench-in")
       Seq("nation", "region", "customer", "supplier", "part", "orders",
-        "lineitem", "documents", "embeddings").foreach { t =>
+        "lineitem").foreach { t =>
         Files.createSymbolicLink(tmp.resolve(s"$t.parquet"),
           Paths.get(s"$sfDir/$t.parquet"))
       }

@@ -7,7 +7,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * `localCheckpoint()` persists its backing RDD in the block store, and —
   * unlike DataFrame caches — `spark.catalog.clearCache()` never frees it:
   * only GC-driven cleaning does, which in a long-lived session (Verify's
-  * ~80-query pass, a bench loop, a production driver) accumulates blocks +
+  * ~60-query pass, a bench loop, a production driver) accumulates blocks +
   * disk spill indefinitely. This registry makes the release explicit:
   *
   *  - loop-internal checkpoints (SameAs.closureIterative's per-pass label

@@ -44,74 +44,10 @@ object SparkEntry {
     // §2.8 F9/F10 partial-precision date literals + interval expansion
     "kg_dates" -> ((s, d) => operators.Dates.dateLiterals(Pipeline.transcripts(s, d))),
 
-    // --- training-data ops over documents/embeddings/events ---
-    // exact dedup (hash groupBy)
-    "doc_dedup_exact" -> ((s, d) =>
-      operators.Dedup.exact(operators.Dedup.corpus(sources.Tables.documents(s, d)))),
-    // MinHash+LSH candidate pairs. shinglesRaw (no distinct): min is
-    // duplicate-insensitive, so the signatures/bands/candidates are
-    // provably identical and the distinct exchange over the widest
-    // intermediate is skipped (the verify queries keep the distinct —
-    // their Jaccard counts are set arithmetic).
-    "doc_minhash_lsh" -> ((s, d) => {
-      val c = operators.Dedup.corpus(sources.Tables.documents(s, d))
-      operators.Dedup.lshCandidates(operators.Dedup.bands(
-        operators.Dedup.minhash(operators.Dedup.shinglesRaw(c))))
-    }),
-    // LSH candidates verified with exact n-gram Jaccard (integer decision).
-    // The shingle set feeds minhash + both sides of the verify join —
-    // localCheckpoint it once (a self-join over a merely CACHED plan
-    // silently rebuilds one side, like the canonicalize self-union).
-    "doc_dedup_verified" -> ((s, d) => {
-      val c = operators.Dedup.corpus(sources.Tables.documents(s, d))
-      val sh = operators.Dedup.shingles(c).localCheckpoint()
-      val cand = operators.Dedup.lshCandidates(operators.Dedup.bands(
-        operators.Dedup.minhash(sh)))
-      operators.Dedup.jaccardVerify(cand, sh)
-    }),
-    // SimHash fingerprints
-    "doc_simhash" -> ((s, d) =>
-      operators.Dedup.simhash(operators.Dedup.corpus(sources.Tables.documents(s, d)))),
-    // token counting
-    "doc_token_stats" -> ((s, d) => operators.TextOps.tokenStats(sources.Tables.documents(s, d))),
-    // quality scoring
-    "doc_quality" -> ((s, d) => operators.TextOps.quality(sources.Tables.documents(s, d))),
-    // language-ID heuristic
-    "doc_langid" -> ((s, d) => operators.TextOps.langId(sources.Tables.documents(s, d))),
-    // document fingerprinting (full + k-min sketch)
-    "doc_fingerprint" -> ((s, d) => operators.TextOps.fingerprint(sources.Tables.documents(s, d))),
-    // brute-force cosine top-k ANN
-    "ann_topk" -> ((s, d) => operators.Ann.bruteForceTopK(sources.Tables.embeddings(s, d))),
-    // random-hyperplane LSH bucket signatures
-    "ann_lsh_buckets" -> ((s, d) => operators.Ann.lshBuckets(sources.Tables.embeddings(s, d))),
-    // LSH-bucketed ANN search (candidates = same signature; the scale path)
-    "ann_lsh_search" -> ((s, d) => operators.Ann.lshSearch(sources.Tables.embeddings(s, d))),
-    // embedding-cosine near-duplicate pairs
-    "emb_neardup" -> ((s, d) => operators.Ann.nearDupPairs(sources.Tables.embeddings(s, d))),
-    // IVF coarse-quantizer cell assignment (deterministic Lloyd-refined centroids)
-    "ann_ivf_cells" -> ((s, d) => operators.Ann.ivfCells(sources.Tables.embeddings(s, d))),
-    // IVF-flat probed search (NumProbe nearest cells scanned per query)
-    "ann_ivf_search" -> ((s, d) => operators.Ann.ivfSearch(sources.Tables.embeddings(s, d))),
-    // multimodal binary-column featurization (relational twin of the kernel)
-    "mm_features" -> ((s, d) => operators.Multimodal.featurizeRelational(sources.Tables.documents(s, d))),
-    // gap sessionization (batch twin of the streaming stateful op)
-    "events_sessionize" -> ((s, d) => operators.Sessions.sessionize(sources.Tables.events(s, d))),
-    // tumbling-window aggregation (batch twin of streaming windowed agg)
-    "events_hourly" -> ((s, d) => operators.Sessions.hourlyAgg(sources.Tables.events(s, d))),
     // Structured Streaming parity: same operators lifted onto readStream,
     // drained to completion — checked against the SAME oracles as batch
     "stream_mentions" -> ((s, d) => streaming.StreamOps.runToBatch(
       s, streaming.StreamOps.mentionStream(s, d), "stream_mentions_tbl", "append")),
-    "stream_hourly" -> ((s, d) => streaming.StreamOps.runToBatch(
-      s, streaming.StreamOps.hourlyStream(s, d), "stream_hourly_tbl", "complete")),
-    // stateful streaming: flatMapGroupsWithState gap sessionization with
-    // event-time timeouts — emits every session the watermark has closed
-    "stream_sessions" -> ((s, d) => streaming.StreamOps.runToBatch(
-      s, streaming.StreamOps.sessionStream(s, d), "stream_sessions_tbl", "append")),
-    // streaming exact dedup: the streaming-agg state store plays the
-    // content-hash dedup index; Complete mode emits the keeper table
-    "stream_dedup" -> ((s, d) => streaming.StreamOps.runToBatch(
-      s, streaming.StreamOps.dedupStream(s, d), "stream_dedup_tbl", "complete")),
     // streaming extraction + broadcast linking (stream-static join)
     "stream_linked" -> ((s, d) => streaming.StreamOps.runToBatch(
       s, streaming.StreamOps.linkedStream(s, d), "stream_linked_tbl", "append")),
@@ -172,43 +108,6 @@ object SparkEntry {
     // §2.8 F15 real %-encoding in minted agent URIs (modsBib.py:960-961)
     "kg_agent_uris" -> ((s, d) =>
       operators.Extras.agentUris(Pipeline.mentions(s, d))),
-    // direct n-gram Jaccard on the known near-dup pairs (no LSH)
-    // near-dup CLUSTER COLLAPSE: verified duplicate pairs closed into
-    // connected components through the SAME generic closure the sameAs
-    // machinery uses (driver union-find ≤100k edges, min-label beyond) —
-    // the final (doc_id, keep_id) decision a curation pipeline acts on.
-    // Doc ids ride as lpad-9 strings so the closure's lexicographic min
-    // IS the numeric min.
-    "doc_dedup_clusters" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      val c = operators.Dedup.corpus(sources.Tables.documents(s, d))
-      val sh = operators.Dedup.shingles(c).localCheckpoint()
-      val cand = operators.Dedup.lshCandidates(
-        operators.Dedup.bands(operators.Dedup.minhash(sh)))
-      def key(x: org.apache.spark.sql.Column) = lpad(x.cast("string"), 9, "0")
-      val dup = operators.Dedup.jaccardVerify(cand, sh).filter(col("is_dup"))
-        .select(key(col("a")).as("a"), key(col("b")).as("b"))
-      val canon = operators.SameAs.closure(dup)
-      c.select(col("doc_id"))
-        .join(canon, key(col("doc_id")) === col("node"), "left")
-        .select(col("doc_id"),
-          coalesce(col("canon").cast("long"), col("doc_id")).as("keep_id"))
-    }),
-    "doc_jaccard_pairs" -> ((s, d) => {
-      val c = operators.Dedup.corpus(sources.Tables.documents(s, d))
-      val sh = operators.Dedup.shingles(c).localCheckpoint()
-      import org.apache.spark.sql.functions._
-      val pairs = sources.Tables.documents(s, d)
-        .select(col("doc_id").as("a"), (col("doc_id") + 100000).as("b"))
-      operators.Dedup.jaccardVerify(pairs, sh)
-    }),
-    // multimodal frame sampling (relational twin of the byte kernel)
-    "mm_frames" -> ((s, d) =>
-      operators.Multimodal.frameSampleRelational(sources.Tables.documents(s, d))),
-    // north-star batched mapPartitions kernel over salted conv buckets —
-    // must equal the Catalyst projection (same oracle as kg_mentions)
-    "kg_mentions_kernel" -> ((s, d) =>
-      operators.MentionKernel.extract(s, Pipeline.transcripts(s, d))),
     // personname family (personname.py): typed NameEntity variants with
     // connotation dispatch, birth-name part graphs, IndexedName std entry
     "kg_names" -> ((s, d) =>

@@ -121,7 +121,7 @@ object Works {
     val slim = broadcast(customer.select(col("c_custkey").as("o_custkey"),
       col("c_nationkey")))
     // spread an under-split orders table across the cores (file-index
-    // probe — the Ann.prepared/Dedup.corpus contract): the single-file
+    // probe — the SynthTranscripts.apply contract): the single-file
     // fixture reads as ~4 scan tasks, and since the single-pass emission
     // below no longer fans out into 23 union branches, those 4 tasks
     // would otherwise carry the whole partial aggregation of the final

@@ -274,14 +274,12 @@ reach AS (
 canon AS (SELECT n AS node, min(m) AS canon FROM reach GROUP BY n)
 """
 
-  // lazy: docQueries/annQueries/eventQueries are declared below and would
+  // lazy: quadSelect and streamQueries are declared below and would
   // otherwise still be null when this initializer runs.
   private lazy val baseQueries: Map[String, String] = Map(
     "kg_transcripts" ->
       (BASE + "SELECT conv_id, turn_idx, role, text, tool, ts FROM tr"),
     "kg_mentions" ->
-      (BASE + "SELECT conv_id, turn_idx, kind, midx, surface FROM men"),
-    "kg_mentions_kernel" ->
       (BASE + "SELECT conv_id, turn_idx, kind, midx, surface FROM men"),
     "kg_linked" ->
       (BASE + """SELECT conv_id, turn_idx, kind, midx, surface, matched,
@@ -423,8 +421,7 @@ SELECT conv_id, turn_idx, lexical,
        WHEN length(lexical) = 10 THEN lexical || ' 23:59:59'
        ELSE lexical END AS interval_end
 FROM lex""")
-  ) ++ extraQueries ++ round4Queries ++ round5Queries ++ docQueries ++
-    annQueries ++ eventQueries ++ streamQueries
+  ) ++ extraQueries ++ round4Queries ++ round5Queries ++ streamQueries
 
   // ----- round-5 families: education, friends/intimate, CF contexts -------
 
@@ -1206,386 +1203,15 @@ WHERE l.kind = 'person' AND l.matched"""),
        WHEN obj_lang <> '' THEN '"' || obj_value || '"@' || obj_lang
        WHEN obj_dtype <> '' THEN '"' || obj_value || '"^^<' || obj_dtype || '>'
        ELSE '"' || obj_value || '"' END || ' .' AS line
-FROM all_triples"""),
-    "mm_frames" -> """
-SELECT doc_id, frame_idx, ascii(substr(text, CAST(frame_idx AS INT) + 1, 1)) AS byte
-FROM (SELECT doc_id, text, unnest(range(0, strlen(text), 64)) AS frame_idx FROM documents)""")
-
-  // ----- documents: dedup + text analysis -----
-
-  /** augmented corpus + word k-gram shingle CTEs (DuckDB). */
-  private val CORPUS: String = """
-WITH corpus AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL
-  SELECT doc_id + 100000, array_to_string(list_slice(string_split(text,' '), 4, 100000000), ' ') FROM documents
-  UNION ALL
-  SELECT doc_id + 200000, text FROM documents WHERE doc_id < 50
-),
-sh3 AS (
-  SELECT DISTINCT doc_id, w[i] || ' ' || w[i+1] || ' ' || w[i+2] AS shingle
-  FROM (SELECT doc_id, w, unnest(range(1, greatest(len(w) - 1, 1))) AS i
-        FROM (SELECT doc_id, string_split(text, ' ') AS w FROM corpus))
-),
-mh AS (
-  SELECT doc_id,
-""" + (0 until 12).map(j => s"    min(CASE WHEN j = $j THEN h END) AS mh$j")
-    .mkString(",\n") + """
-  FROM (SELECT s.doc_id, t.j, md5(CAST(t.j AS VARCHAR) || '|' || s.shingle) AS h
-        FROM sh3 s, range(0, 12) t(j))
-  GROUP BY doc_id
-),
-bands AS (
-  SELECT doc_id, 0 AS band, md5(mh0 || mh1 || mh2) AS band_key FROM mh
-  UNION ALL SELECT doc_id, 1, md5(mh3 || mh4 || mh5) FROM mh
-  UNION ALL SELECT doc_id, 2, md5(mh6 || mh7 || mh8) FROM mh
-  UNION ALL SELECT doc_id, 3, md5(mh9 || mh10 || mh11) FROM mh
-),
-cand AS (
-  SELECT DISTINCT l.doc_id AS a, r.doc_id AS b
-  FROM bands l JOIN bands r
-    ON l.band = r.band AND l.band_key = r.band_key AND l.doc_id < r.doc_id
-)
-"""
-
-  private val docQueries: Map[String, String] = Map(
-    "doc_dedup_exact" -> (CORPUS + """
-, g AS (SELECT md5(text) AS h, min(doc_id) AS keep_id, count(*) AS group_n FROM corpus GROUP BY 1)
-SELECT c.doc_id, g.keep_id, g.group_n FROM corpus c JOIN g ON md5(c.text) = g.h"""),
-    "doc_minhash_lsh" -> (CORPUS + "SELECT a, b FROM cand"),
-    "doc_dedup_verified" -> (CORPUS + """
-, sizes AS (SELECT doc_id, count(*) AS n FROM sh3 GROUP BY 1),
-inter AS (
-  SELECT c.a, c.b, count(*) AS inter
-  FROM cand c JOIN sh3 sa ON sa.doc_id = c.a
-              JOIN sh3 sb ON sb.doc_id = c.b AND sb.shingle = sa.shingle
-  GROUP BY c.a, c.b)
-SELECT c.a, c.b, COALESCE(i.inter, 0) AS inter,
-       na.n + nb.n - COALESCE(i.inter, 0) AS uni,
-       COALESCE(i.inter, 0) * 5 >= (na.n + nb.n - COALESCE(i.inter, 0)) * 4 AS is_dup
-FROM cand c
-LEFT JOIN inter i ON i.a = c.a AND i.b = c.b
-JOIN sizes na ON na.doc_id = c.a
-JOIN sizes nb ON nb.doc_id = c.b"""),
-    // near-dup cluster collapse: connected components of the verified
-    // duplicate pairs via a recursive reachability CTE (min of the
-    // reachable set = the closure's min-label), LEAST'd with the node
-    // itself — exactly SameAs.closure's (node, min-of-component) contract
-    "doc_dedup_clusters" -> (CORPUS.replaceFirst("WITH corpus",
-      "WITH RECURSIVE corpus") + """
-, sizes AS (SELECT doc_id, count(*) AS n FROM sh3 GROUP BY 1),
-inter AS (
-  SELECT c.a, c.b, count(*) AS inter
-  FROM cand c JOIN sh3 sa ON sa.doc_id = c.a
-              JOIN sh3 sb ON sb.doc_id = c.b AND sb.shingle = sa.shingle
-  GROUP BY c.a, c.b),
-dup AS (
-  SELECT c.a, c.b FROM cand c
-  LEFT JOIN inter i ON i.a = c.a AND i.b = c.b
-  JOIN sizes na ON na.doc_id = c.a
-  JOIN sizes nb ON nb.doc_id = c.b
-  WHERE COALESCE(i.inter, 0) * 5 >= (na.n + nb.n - COALESCE(i.inter, 0)) * 4),
-ed AS (SELECT a, b FROM dup UNION ALL SELECT b, a FROM dup),
-reach AS (
-  SELECT a AS s, b AS t FROM ed
-  UNION
-  SELECT r.s, e.b FROM reach r JOIN ed e ON e.a = r.t),
-keeper AS (SELECT s AS node, min(t) AS k FROM reach GROUP BY 1)
-SELECT c.doc_id, CAST(COALESCE(LEAST(k.k, c.doc_id), c.doc_id) AS BIGINT) AS keep_id
-FROM corpus c LEFT JOIN keeper k ON k.node = c.doc_id"""),
-    "doc_jaccard_pairs" -> (CORPUS + """
-, pairs AS (SELECT doc_id AS a, doc_id + 100000 AS b FROM documents),
-sizes AS (SELECT doc_id, count(*) AS n FROM sh3 GROUP BY 1),
-inter AS (
-  SELECT p.a, p.b, count(*) AS inter
-  FROM pairs p JOIN sh3 sa ON sa.doc_id = p.a
-               JOIN sh3 sb ON sb.doc_id = p.b AND sb.shingle = sa.shingle
-  GROUP BY p.a, p.b)
-SELECT p.a, p.b, COALESCE(i.inter, 0) AS inter,
-       na.n + nb.n - COALESCE(i.inter, 0) AS uni,
-       COALESCE(i.inter, 0) * 5 >= (na.n + nb.n - COALESCE(i.inter, 0)) * 4 AS is_dup
-FROM pairs p
-LEFT JOIN inter i ON i.a = p.a AND i.b = p.b
-JOIN sizes na ON na.doc_id = p.a
-JOIN sizes nb ON nb.doc_id = p.b"""),
-    "doc_simhash" -> (CORPUS + """
-, wd AS (SELECT DISTINCT doc_id, unnest(string_split(text, ' ')) AS w FROM corpus),
-bits AS (
-  SELECT doc_id, t.b,
-    sum(CASE WHEN ((strpos('0123456789abcdef', substr(md5(w), CAST(t.b // 4 AS INT) + 1, 1)) - 1)
-                   // (1 << CAST(t.b % 4 AS INT))) % 2 = 1 THEN 1 ELSE -1 END) AS s
-  FROM wd, range(0, 64) t(b) GROUP BY doc_id, t.b),
-nibs AS (
-  SELECT doc_id, CAST(b // 4 AS INT) AS nib,
-    sum(CASE WHEN s > 0 THEN (1 << CAST(b % 4 AS INT)) ELSE 0 END) AS nibv
-  FROM bits GROUP BY doc_id, CAST(b // 4 AS INT))
-SELECT doc_id,
-  string_agg(substr('0123456789abcdef', CAST(nibv AS INT) + 1, 1), '' ORDER BY nib) AS simhash
-FROM nibs GROUP BY doc_id"""),
-    "doc_token_stats" -> """
-SELECT doc_id,
-  len(string_split(text, ' ')) AS n_ws_tokens,
-  len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9 ]')) AS n_bpe_tokens,
-  length(text) AS n_chars,
-  CAST(length(text) AS DOUBLE) / len(string_split(text, ' ')) AS avg_token_span
-FROM documents""",
-    "doc_quality" -> """
-WITH q AS (
-  SELECT doc_id, string_split(text, ' ') AS w,
-    len(list_filter(string_split(text, ' '), x -> x IN ('the','a','of','and','in'))) AS stop_hits,
-    len(regexp_extract_all(text, '[^A-Za-z0-9 ]')) AS punct_chars
-  FROM documents)
-SELECT doc_id, len(w) AS n_tokens, stop_hits,
-  CAST(stop_hits AS DOUBLE) / len(w) AS stop_ratio,
-  punct_chars,
-  len(list_distinct(w)) AS n_distinct,
-  CAST(len(list_distinct(w)) AS DOUBLE) / len(w) AS diversity,
-  CAST(len(w) BETWEEN 20 AND 90 AND stop_hits >= 1 AS INT) AS keep
-FROM q""",
-    "doc_langid" -> {
-      val markers = graft.operators.TextOps.langMarkers
-      val hitExprs = markers.map { case (l, ms) =>
-        s"len(list_filter(string_split(text, ' '), x -> x IN (${ms.map(m => s"'$m'").mkString(",")}))) AS ${l}_hits"
-      }.mkString(",\n    ")
-      val gr = s"greatest(${markers.map(_._1 + "_hits").mkString(",")})"
-      val predCases = markers.init.map { case (l, _) =>
-        s"WHEN ${l}_hits = $gr THEN '$l'"
-      }.mkString(" ")
-      s"""
-WITH q AS (
-  SELECT doc_id, lang,
-    $hitExprs
-  FROM documents)
-SELECT doc_id, lang AS declared_lang, ${markers.map(_._1 + "_hits").mkString(", ")},
-  CASE WHEN $gr = 0 THEN lang $predCases ELSE '${markers.last._1}' END AS pred_lang
-FROM q"""
-    },
-    "doc_fingerprint" -> """
-WITH sh5 AS (
-  SELECT DISTINCT doc_id,
-    w[i] || ' ' || w[i+1] || ' ' || w[i+2] || ' ' || w[i+3] || ' ' || w[i+4] AS s
-  FROM (SELECT doc_id, w, unnest(range(1, greatest(len(w) - 3, 1))) AS i
-        FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents))),
-km AS (SELECT doc_id, min(md5(s)) AS fp_kmin FROM sh5 GROUP BY 1)
-SELECT d.doc_id, md5(regexp_replace(trim(d.text), '\s+', ' ', 'g')) AS fp_full, km.fp_kmin
-FROM documents d LEFT JOIN km ON km.doc_id = d.doc_id""")
-
-  // ----- embeddings: ANN / near-dup -----
-
-  /** Driver-bounded sample moduli (mirror Ann.queryModFor/trainModFor):
-    * modulus = greatest(base, ceil(n / cap)) so the query set / training
-    * collect stays ≤ an absolute cap at any corpus size. */
-  private val qmodSub: String = {
-    import graft.operators.Ann.{QueryCap, QueryMod}
-    s"(SELECT greatest($QueryMod, (count(*) + ${QueryCap - 1}) // $QueryCap) FROM e)"
-  }
-
-  private lazy val annQueries: Map[String, String] = Map(
-    "ann_topk" -> s"""
-WITH e AS (
-  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
-n AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm FROM e),
-q AS (SELECT vec_id AS query_id, v AS qv, nrm AS qn FROM n WHERE vec_id % $qmodSub = 0),
-s AS (
-  SELECT q.query_id, n.vec_id AS neighbor_id,
-         list_dot_product(q.qv, n.v) / (q.qn * n.nrm) AS cos
-  FROM q JOIN n ON n.vec_id <> q.query_id),
-r AS (SELECT query_id, neighbor_id,
-        row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id ASC) AS rank
-      FROM s)
-SELECT query_id, neighbor_id, rank FROM r WHERE rank <= 5""",
-    "ann_lsh_buckets" -> """
-WITH e AS (
-  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
-d AS (SELECT vec_id, i - 1 AS i, v[i] AS x
-      FROM (SELECT vec_id, v, unnest(range(1, len(v) + 1)) AS i FROM e)),
-p AS (SELECT vec_id, i, x, t.pl,
-        CASE WHEN strpos('0123456789abcdef',
-               substr(md5(CAST(t.pl AS VARCHAR) || '_' || CAST(i AS VARCHAR)), 1, 1)) % 2 = 1
-             THEN 1.0 ELSE -1.0 END AS w
-      FROM d, range(0, 16) t(pl)),
-proj AS (SELECT vec_id, pl, sum(w * x) AS proj FROM p GROUP BY 1, 2)
-SELECT vec_id,
-  CAST(sum(CASE WHEN proj > 0 THEN (CAST(1 AS BIGINT) << CAST(pl AS INT)) ELSE 0 END) AS BIGINT) AS bucket
-FROM proj GROUP BY vec_id""",
-    "ann_lsh_search" -> s"""
-WITH e AS (
-  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
-n AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm FROM e),
-d AS (SELECT vec_id, i - 1 AS i, v[i] AS x
-      FROM (SELECT vec_id, v, unnest(range(1, len(v) + 1)) AS i FROM e)),
-p AS (SELECT vec_id, i, x, t.pl,
-        CASE WHEN strpos('0123456789abcdef',
-               substr(md5(CAST(t.pl AS VARCHAR) || '_' || CAST(i AS VARCHAR)), 1, 1)) % 2 = 1
-             THEN 1.0 ELSE -1.0 END AS w
-      FROM d, range(0, 16) t(pl)),
-proj AS (SELECT vec_id, pl, sum(w * x) AS proj FROM p GROUP BY 1, 2),
-buckets AS (
-  SELECT vec_id,
-    CAST(sum(CASE WHEN proj > 0 THEN (CAST(1 AS BIGINT) << CAST(pl AS INT)) ELSE 0 END) AS BIGINT) AS bucket
-  FROM proj GROUP BY vec_id),
-nb AS (SELECT n.vec_id, n.v, n.nrm, b.bucket FROM n JOIN buckets b ON b.vec_id = n.vec_id),
-q AS (SELECT vec_id AS query_id, v AS qv, nrm AS qn, bucket FROM nb WHERE vec_id % $qmodSub = 0),
-s AS (
-  -- OR-across-bands candidates (band = 8-bit slice of the 16-bit signature)
-  SELECT q.query_id, nb.vec_id AS neighbor_id,
-         list_dot_product(q.qv, nb.v) / (q.qn * nb.nrm) AS cos
-  FROM q JOIN nb ON (nb.bucket % 256 = q.bucket % 256
-                     OR nb.bucket // 256 = q.bucket // 256)
-                AND nb.vec_id <> q.query_id),
-r AS (SELECT query_id, neighbor_id,
-        row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id ASC) AS rank
-      FROM s)
-SELECT query_id, neighbor_id, rank FROM r WHERE rank <= 5""",
-    "emb_neardup" -> """
-WITH aug AS (
-  SELECT vec_id, embedding FROM embeddings
-  UNION ALL
-  SELECT vec_id + 100000, list_transform(embedding, x -> x * CAST(2.0 AS FLOAT)) FROM embeddings),
-e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM aug),
-n AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm FROM e),
-d AS (SELECT vec_id, i - 1 AS i, v[i] AS x
-      FROM (SELECT vec_id, v, unnest(range(1, len(v) + 1)) AS i FROM e)),
-p AS (SELECT vec_id, i, x, t.pl,
-        CASE WHEN strpos('0123456789abcdef',
-               substr(md5(CAST(t.pl AS VARCHAR) || '_' || CAST(i AS VARCHAR)), 1, 1)) % 2 = 1
-             THEN 1.0 ELSE -1.0 END AS w
-      FROM d, range(0, 16) t(pl)),
-proj AS (SELECT vec_id, pl, sum(w * x) AS proj FROM p GROUP BY 1, 2),
-buckets AS (
-  SELECT vec_id,
-    CAST(sum(CASE WHEN proj > 0 THEN (CAST(1 AS BIGINT) << CAST(pl AS INT)) ELSE 0 END) AS BIGINT) AS bucket
-  FROM proj GROUP BY vec_id),
-nb AS (SELECT n.vec_id, n.v, n.nrm, b.bucket FROM n JOIN buckets b ON b.vec_id = n.vec_id),
-bnd AS (SELECT vec_id, 0 AS band, bucket % 256 AS bkey FROM buckets
-        UNION ALL SELECT vec_id, 1, bucket // 256 FROM buckets),
-cand AS (SELECT DISTINCT l.vec_id AS a, r.vec_id AS b
-         FROM bnd l JOIN bnd r ON l.band = r.band AND l.bkey = r.bkey
-                               AND l.vec_id < r.vec_id)
-SELECT c.a, c.b
-FROM cand c JOIN nb la ON la.vec_id = c.a JOIN nb rb ON rb.vec_id = c.b
-WHERE list_dot_product(la.v, rb.v) / (la.nrm * rb.nrm) >= 0.999""",
-    "mm_features" -> """
-SELECT doc_id, strlen(text) AS n_bytes, strlen(text) % 640 AS width,
-       (strlen(text) * 7) % 480 AS height, 3 AS channels,
-       substr(md5(text), 1, 8) AS sig
-FROM documents""",
-    "ann_ivf_cells" -> (ivfCommon + "SELECT vec_id, cell FROM cells"),
-    "ann_ivf_search" -> (ivfCommon + s""",
-probes AS (SELECT vec_id AS query_id, cell FROM asg
-           WHERE vec_id % $qmodSub = 0 AND rn <= ${graft.operators.Ann.NumProbe}),
-q AS (SELECT vec_id AS query_id, v AS qv, nrm AS qn FROM n WHERE vec_id % $qmodSub = 0),
-pcand AS (
-  SELECT p.query_id, c.vec_id AS neighbor_id
-  FROM probes p JOIN cells c ON c.cell = p.cell
-  WHERE c.vec_id <> p.query_id),
-sc AS (
-  SELECT pcand.query_id, pcand.neighbor_id,
-         list_dot_product(q.qv, n.v) / (q.qn * n.nrm) AS cos
-  FROM pcand JOIN q ON q.query_id = pcand.query_id
-             JOIN n ON n.vec_id = pcand.neighbor_id),
-r AS (SELECT query_id, neighbor_id,
-        row_number() OVER (PARTITION BY query_id
-                           ORDER BY cos DESC, neighbor_id ASC) AS rank
-      FROM sc)
-SELECT query_id, neighbor_id, rank FROM r WHERE rank <= 5"""))
-
-  /** IVF centroid CTEs (mirrors Ann.centroids exactly): seed vectors =
-    * vec_id < NumCells, ONE Lloyd iteration over the vec_id % TrainMod
-    * sample; every float reduction is sequential in ascending (vec_id, dim)
-    * order (list_sum over list(ORDER BY ...)) so Spark's driver-side
-    * centroids reproduce bit-for-bit. */
-  private lazy val ivfCommon: String = {
-    val nc = graft.operators.Ann.NumCells
-    val tm = {
-      import graft.operators.Ann.{TrainCap, TrainMod}
-      s"(SELECT greatest($TrainMod, (count(*) + ${TrainCap - 1}) // $TrainCap) FROM e)"
-    }
-    s"""
-WITH e AS (
-  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
-n AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm FROM e),
-seeds AS (SELECT vec_id AS cell, v AS sv, sqrt(list_dot_product(v, v)) AS snrm
-          FROM e WHERE vec_id < $nc),
-tr0 AS (SELECT vec_id, v FROM e WHERE vec_id % $tm = 0),
-ta AS (SELECT t.vec_id, t.v, s.cell,
-        row_number() OVER (PARTITION BY t.vec_id
-                           ORDER BY list_dot_product(t.v, s.sv) / s.snrm DESC, s.cell ASC) AS rn
-       FROM tr0 t CROSS JOIN seeds s),
-tm1 AS (SELECT vec_id, v, cell FROM ta WHERE rn = 1),
-td AS (SELECT cell, vec_id, i, v[i] AS x
-       FROM (SELECT cell, vec_id, v, unnest(range(1, len(v) + 1)) AS i FROM tm1)),
-csum AS (SELECT cell, i, list_sum(list(x ORDER BY vec_id)) AS sx, count(*) AS cnt
-         FROM td GROUP BY 1, 2),
-cmean AS (SELECT cell, list(sx / cnt ORDER BY i) AS cv FROM csum GROUP BY 1),
-cent AS (SELECT s.cell, coalesce(m.cv, s.sv) AS cv
-         FROM seeds s LEFT JOIN cmean m ON m.cell = s.cell),
-cn AS (SELECT cell, cv, sqrt(list_dot_product(cv, cv)) AS cnrm FROM cent),
-asg AS (SELECT n.vec_id, c.cell,
-         row_number() OVER (PARTITION BY n.vec_id
-                            ORDER BY list_dot_product(n.v, c.cv) / c.cnrm DESC, c.cell ASC) AS rn
-        FROM n CROSS JOIN cn c),
-cells AS (SELECT vec_id, cell FROM asg WHERE rn = 1)"""
-  }
-
-  // ----- events: sessionization + windowed agg -----
-
-  private val eventQueries: Map[String, String] = Map(
-    "events_sessionize" -> """
-WITH s1 AS (
-  SELECT *, epoch_us(ts) AS us,
-         lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_us
-  FROM events),
-s2 AS (SELECT *, CASE WHEN prev_us IS NULL THEN 1
-                      WHEN us - prev_us > 30*60*1000000 THEN 1 ELSE 0 END AS new_s FROM s1),
-s3 AS (SELECT *, sum(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                                  ROWS UNBOUNDED PRECEDING) AS sess_idx FROM s2)
-SELECT user_id,
-  CAST(user_id AS VARCHAR) || '_' || CAST(sess_idx AS VARCHAR) AS session_id,
-  count(*) AS n_events, min(ts) AS start_ts, max(ts) AS end_ts,
-  CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT) AS value_cents
-FROM s3 GROUP BY user_id, session_id""",
-    "events_hourly" -> """
-SELECT date_trunc('hour', ts) AS hour, event_type, count(*) AS n,
-       CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT) AS value_cents
-FROM events GROUP BY 1, 2""")
+FROM all_triples"""))
 
   /** Streaming queries reuse the batch oracles — streaming/batch parity IS
     * the check. */
   private val streamQueries: Map[String, String] = Map(
     "stream_mentions" ->
       (BASE + "SELECT conv_id, turn_idx, kind, midx, surface FROM men"),
-    // the batch exact-dedup group table over the same augmented corpus
-    "stream_dedup" -> (CORPUS + """
-SELECT md5(text) AS text_hash, min(doc_id) AS keep_id,
-       count(*) AS group_n FROM corpus GROUP BY 1"""),
     // streaming broadcast-link ≡ the batch linked frame
     "stream_linked" ->
       (BASE + """SELECT conv_id, turn_idx, kind, midx, surface, matched,
-                 obj_value, obj_is_iri, obj_lang, obj_dtype FROM linked"""),
-    "stream_hourly" -> """
-SELECT date_trunc('hour', ts) AS hour, event_type, count(*) AS n,
-       CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT) AS value_cents
-FROM events GROUP BY 1, 2""",
-    // Closed sessions only: the stream's event-time timeout fires when the
-    // ms-domain watermark (max event time) strictly exceeds end + 30 min —
-    // the predicate is stated here in the same ms domain.
-    "stream_sessions" -> """
-WITH s1 AS (
-  SELECT *, epoch_us(ts) AS us,
-         lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_us
-  FROM events),
-s2 AS (SELECT *, CASE WHEN prev_us IS NULL THEN 1
-                      WHEN us - prev_us > 30*60*1000000 THEN 1 ELSE 0 END AS new_s FROM s1),
-s3 AS (SELECT *, sum(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                                  ROWS UNBOUNDED PRECEDING) AS sess_idx FROM s2),
-sess AS (
-  SELECT user_id,
-    CAST(user_id AS VARCHAR) || '_' || CAST(sess_idx AS VARCHAR) AS session_id,
-    count(*) AS n_events, min(ts) AS start_ts, max(ts) AS end_ts,
-    CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT) AS value_cents
-  FROM s3 GROUP BY user_id, session_id)
-SELECT * FROM sess
-WHERE (epoch_us(end_ts) // 1000) + 30*60*1000
-      < (SELECT epoch_us(max(ts)) // 1000 FROM events)""")
+                 obj_value, obj_is_iri, obj_lang, obj_dtype FROM linked"""))
 }

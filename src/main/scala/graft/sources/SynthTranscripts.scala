@@ -40,7 +40,7 @@ object SynthTranscripts {
   def apply(spark: SparkSession, dir: String): DataFrame = {
     val raw = Tables.events(spark, dir)
     val parts = spark.sparkContext.defaultParallelism
-    // under-split probe via the file index (same contract as Ann.prepared):
+    // under-split probe via the file index:
     // a single-row-group events file otherwise reads as ONE task and runs
     // the whole regex-extraction + link front of every COLD query path
     // single-threaded (measured 19 s vs ~2 s spread at sf0.1). The shuffled

@@ -20,6 +20,4 @@ object Tables {
   def part(s: SparkSession, d: String): DataFrame      = t(s, d, "part")
   def orders(s: SparkSession, d: String): DataFrame    = t(s, d, "orders")
   def lineitem(s: SparkSession, d: String): DataFrame  = t(s, d, "lineitem")
-  def documents(s: SparkSession, d: String): DataFrame = t(s, d, "documents")
-  def embeddings(s: SparkSession, d: String): DataFrame = t(s, d, "embeddings")
 }

@@ -3,8 +3,8 @@ package graft
 import graft.operators._
 import org.apache.spark.sql.functions._
 
-/** Per-operator specs: closure shapes, dedup decisions, kernel parity,
-  * and the BASELINE per-row invariant (SURVEY.md §5 items 2-3). */
+/** Per-operator specs: closure shapes and the BASELINE per-row invariant
+  * (SURVEY.md §5 items 2-3). */
 class SameAsSpec extends SparkSpec {
   import spark.implicits._
 
@@ -50,70 +50,6 @@ class SameAsSpec extends SparkSpec {
     val after = SameAs.closure(Seq(("a", "b"), ("m", "n"), ("b", "n")).toDF("a", "b"))
       .as[(String, String)].collect().toMap
     assert(Seq("a", "b", "m", "n").forall(after(_) == "a"))
-  }
-}
-
-class DedupSpec extends SparkSpec {
-  import spark.implicits._
-
-  test("exact dedup keeps min doc_id per identical text") {
-    val docs = Seq((1L, "a b c d e"), (2L, "a b c d e"), (3L, "different text here"))
-      .toDF("doc_id", "text")
-    val got = Dedup.exact(docs).as[(Long, Long, Long)].collect().toSet
-    assert(got == Set((1L, 1L, 2L), (2L, 1L, 2L), (3L, 3L, 1L)))
-  }
-
-  test("shingle jaccard integer decision: ≥0.8 via 5*inter >= 4*uni") {
-    val docs = Seq((1L, "a b c d e"), (2L, "a b c d x")).toDF("doc_id", "text")
-    val sh = Dedup.shingles(docs) // 3-grams: doc1 {abc,bcd,cde}, doc2 {abc,bcd,cdx}
-    val cand = Seq((1L, 2L)).toDF("a", "b")
-    val v = Dedup.jaccardVerify(cand, sh)
-      .as[(Long, Long, Long, Long, Boolean)].collect().head
-    assert(v == ((1L, 2L, 2L, 4L, false))) // j = 0.5 < 0.8
-  }
-
-  test("LSH finds exact copies (all bands agree) and drops unrelated docs") {
-    val docs = Seq(
-      (1L, "w1 w2 w3 w4 w5 w6 w7 w8"),
-      (2L, "w1 w2 w3 w4 w5 w6 w7 w8"),
-      (3L, "q1 q2 q3 q4 q5 q6 q7 q8")).toDF("doc_id", "text")
-    val cand = Dedup.lshCandidates(Dedup.bands(Dedup.minhash(Dedup.shingles(docs))))
-      .as[(Long, Long)].collect().toSet
-    assert(cand == Set((1L, 2L)))
-  }
-
-  test("simhash: identical word sets → identical hash; disjoint sets differ") {
-    val docs = Seq((1L, "alpha beta gamma"), (2L, "gamma alpha beta alpha"),
-      (3L, "zeta eta theta iota kappa")).toDF("doc_id", "text")
-    val h = Dedup.simhash(docs).as[(Long, String)].collect().toMap
-    assert(h(1L) == h(2L)) // set semantics: order/multiplicity irrelevant
-    assert(h(1L) != h(3L))
-    // 64-bit fingerprint: 16 lowercase hex chars
-    assert(h.values.forall(_.matches("[0-9a-f]{16}")))
-  }
-}
-
-class MultimodalSpec extends SparkSpec {
-  test("mapPartitions kernel ≡ relational twin on real documents") {
-    val docs = sources.Tables.documents(spark, sfDir)
-    val kernel = Multimodal.featurizeKernel(spark, docs).collect().toSet
-    val rel = Multimodal.featurizeRelational(docs).collect().toSet
-    assert(kernel == rel)
-    assert(kernel.nonEmpty)
-  }
-
-  test("frame-sample byte kernel ≡ relational twin (ASCII corpus)") {
-    val docs = sources.Tables.documents(spark, sfDir)
-    val kernel = Multimodal.frameSampleKernel(spark, docs).collect().toSet
-    val rel = Multimodal.frameSampleRelational(docs).collect().toSet
-    assert(kernel == rel)
-  }
-
-  test("resize stub preserves aspect and bounds the long side") {
-    val f = Multimodal.MediaFeatures(1L, 1000, 500, 320, 3, "x")
-    val r = Multimodal.resizeStub(f, 100)
-    assert(r.width == 100 && r.height == 64)
-    assert(Multimodal.resizeStub(r, 100) == r) // idempotent under bound
   }
 }
 

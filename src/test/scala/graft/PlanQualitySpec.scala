@@ -41,40 +41,6 @@ class PlanQualitySpec extends SparkSpec {
       !plan.contains("CartesianProduct"))
   }
 
-  test("emb_neardup pairs within LSH buckets — never a nested-loop/cartesian") {
-    spark.catalog.clearCache()
-    val plan = operators.Ann.nearDupPairs(
-      sources.Tables.embeddings(spark, sfDir))
-      .queryExecution.executedPlan.toString
-    assert(!plan.contains("BroadcastNestedLoopJoin") &&
-      !plan.contains("CartesianProduct"),
-      "near-dup verification must equi-join on the bucket signature")
-  }
-
-  test("lshBuckets is a narrow projection (no shuffle, no self-join)") {
-    spark.catalog.clearCache()
-    val plan = operators.Ann.lshBuckets(
-      sources.Tables.embeddings(spark, sfDir))
-      .queryExecution.executedPlan.toString
-    assert(!plan.contains("SortMergeJoin") && !plan.contains("HashAggregate"),
-      "signature computation must not aggregate or join")
-  }
-
-  test("ivf: cell assignment is a narrow projection; search never NLJ/cartesian") {
-    spark.catalog.clearCache()
-    val cellsPlan = operators.Ann.ivfCells(
-      sources.Tables.embeddings(spark, sfDir))
-      .queryExecution.executedPlan.toString
-    assert(!cellsPlan.contains("SortMergeJoin") && !cellsPlan.contains("HashAggregate"),
-      "IVF assignment must be a pure projection over inlined centroids")
-    val searchPlan = operators.Ann.ivfSearch(
-      sources.Tables.embeddings(spark, sfDir))
-      .queryExecution.executedPlan.toString
-    assert(!searchPlan.contains("BroadcastNestedLoopJoin") &&
-      !searchPlan.contains("CartesianProduct"),
-      "IVF search must equi-join probe cells, never scan all pairs")
-  }
-
   test("round-4 families: broadcast-only joins, fact side never shuffles") {
     spark.catalog.clearCache()
     // gender + family: one broadcast join against the people dictionary
@@ -158,29 +124,6 @@ class PlanQualitySpec extends SparkSpec {
     Caches.release(spark)
   }
 
-  test("dedup corpus is ONE scan; LSH candidates read materialized bands") {
-    spark.catalog.clearCache()
-    // r6 batch 7: the 3-way corpus augmentation is one per-row explode —
-    // an edit back to the base ∪ near ∪ exact self-union re-plans the
-    // documents scan + spread exchange once per branch (3× the read)
-    val corpus = operators.Dedup.corpus(sources.Tables.documents(spark, sfDir))
-    val cp = corpus.queryExecution.executedPlan.toString
-    val docScans = "documents\\.parquet".r.findAllIn(cp).size
-    assert(docScans == 1, s"corpus must scan documents once, found $docScans")
-    assert(cp.contains("Generate"), "corpus augmentation rides one explode")
-    // the band frame feeds BOTH sides of the bucket self-join: candidates
-    // must read the checkpointed frame, never re-run corpus→shingles→
-    // minhash→bands once per side (the r6 before-plan's 12-scan shape)
-    val cand = operators.Dedup.lshCandidates(operators.Dedup.bands(
-      operators.Dedup.minhash(operators.Dedup.shinglesRaw(corpus))))
-    val p = cand.queryExecution.executedPlan.toString
-    assert(p.contains("Scan ExistingRDD"),
-      "candidates must read the materialized band frame")
-    assert(!p.contains("parquet"),
-      "the candidate self-join must not re-scan the corpus per side")
-    Caches.release(spark)
-  }
-
   test("whole-stage codegen covers the extraction path (no UDF breaks)") {
     // the source spread's Exchange wraps the plan in AdaptiveSparkPlan,
     // which only shows its codegen spans once finalized — run the query,
@@ -204,8 +147,6 @@ class PlanQualitySpec extends SparkSpec {
     try {
       Pipeline.linked(spark, sfDir).count()          // extract+link+mint
       Pipeline.triples(spark, sfDir).count()         // full emission
-      operators.Ann.ivfCells(
-        sources.Tables.embeddings(spark, sfDir)).count() // inlined centroids
     } finally {
       prev match {
         case Some(v) => spark.conf.set("spark.sql.codegen.fallback", v)

@@ -61,22 +61,4 @@ class Round2OpsSpec extends SparkSpec {
     assert(got.exists(_._5.contains("_PLACEHOLDER_")))
     assert(got.exists(!_._5.contains("_PLACEHOLDER_")))
   }
-
-  test("streaming sessionization ≡ batch sessions closed at the watermark") {
-    val stream = streaming.StreamOps.runToBatch(spark,
-      streaming.StreamOps.sessionStream(spark, sfDir), "r2_sessions", "append")
-      .select("user_id", "session_id", "n_events", "value_cents")
-      .as[(Long, String, Long, Long)].collect().toSet
-    val batch = operators.Sessions.sessionize(sources.Tables.events(spark, sfDir))
-    val wMs = sources.Tables.events(spark, sfDir)
-      .agg(max(expr("unix_micros(CAST(ts AS TIMESTAMP)) DIV 1000"))).as[Long].head()
-    val closed = batch
-      .filter(expr("unix_micros(CAST(end_ts AS TIMESTAMP)) DIV 1000") + 30L * 60 * 1000 < wMs)
-      .select("user_id", "session_id", "n_events", "value_cents")
-      .as[(Long, String, Long, Long)].collect().toSet
-    assert(stream == closed)
-    assert(stream.nonEmpty)
-    // the final open session per user is withheld, so strictly fewer rows
-    assert(stream.size < batch.count())
-  }
 }

@@ -1,13 +1,12 @@
 package graft
 
 import graft.model.Ns
-import graft.operators.{Ann, Families}
+import graft.operators.Families
 import java.sql.Timestamp
 import org.apache.spark.sql.functions._
 
 /** Hand-checked specs for the round-4 families (gender, per-relation family
-  * predicates, cause-of-death, title refs, Writer Oeuvre) and the bounded
-  * ANN driver-side samples. */
+  * predicates, cause-of-death, title refs, Writer Oeuvre). */
 class Round4OpsSpec extends SparkSpec {
   import spark.implicits._
 
@@ -16,17 +15,6 @@ class Round4OpsSpec extends SparkSpec {
   private def tr(rows: (String, Int, String, String, String)*) =
     rows.map { case (c, t, r, x, tool) => (c, t, r, x, tool, ts) }
       .toDF("conv_id", "turn_idx", "role", "text", "tool", "ts")
-
-  test("ANN driver samples are ABSOLUTELY bounded at any corpus size") {
-    // fixture scale: the documented base moduli apply unchanged
-    assert(Ann.trainModFor(500L) == Ann.TrainMod)
-    assert(Ann.queryModFor(500L) == Ann.QueryMod)
-    // 10^9-vector scale: sample size = n / mod stays ≤ the cap
-    for (n <- Seq(1000000L, 123456789L, 1000000000L, 7777777777L)) {
-      assert(n / Ann.trainModFor(n) <= Ann.TrainCap, s"train sample at n=$n")
-      assert(n / Ann.queryModFor(n) <= Ann.QueryCap, s"query set at n=$n")
-    }
-  }
 
   test("family predicates: verbatim-map quirks drive the placeholder branch") {
     // familyMap replays the CSV verbatim: BROTHER carries ' MALE' (leading

@@ -192,21 +192,6 @@ class Round5OpsSpec extends SparkSpec {
     assert(got.size == 7)
   }
 
-  test("near-dup cluster collapse: exact copies and chains share one keeper") {
-    val got = SparkEntry.queries("doc_dedup_clusters")(spark, sfDir)
-      .as[(Long, Long)].collect().toMap
-    // every corpus doc gets a keeper; keepers are component minima
-    assert(got.nonEmpty && got.forall { case (d, k) => k <= d })
-    // exact copies (doc_id+200000, doc_id<50) share ALL bands with their
-    // base and verify at jaccard 1 → must collapse onto the base id
-    val exactCopies = got.keys.filter(_ >= 200000)
-    assert(exactCopies.nonEmpty)
-    exactCopies.foreach(d => assert(got(d) == got(d - 200000),
-      s"exact copy $d not in its base's cluster"))
-    // keepers are fixpoints: keeper of a keeper is itself
-    got.values.foreach(k => assert(got(k) == k, s"keeper $k not a fixpoint"))
-  }
-
   test("checkpoint registry: tracked blocks are freed, retained survive release") {
     val sc = spark.sparkContext
     val (a, aIds) = Caches.trackedCheckpoint(Seq(1, 2, 3).toDF("x"))

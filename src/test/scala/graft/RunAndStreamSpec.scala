@@ -49,15 +49,6 @@ class StreamParitySpec extends SparkSpec {
     assert(got.nonEmpty)
   }
 
-  test("streaming windowed agg ≡ batch hourlyAgg") {
-    val got = streaming.StreamOps.runToBatch(spark,
-      streaming.StreamOps.hourlyStream(spark, sfDir), "sp_hourly", "complete")
-      .collect().toSet
-    val want = operators.Sessions.hourlyAgg(sources.Tables.events(spark, sfDir))
-      .collect().toSet
-    assert(got == want)
-  }
-
   test("streaming runner lands linked parquet; restart is exactly-once") {
     val out = java.nio.file.Files.createTempDirectory("graft-stream-run").toString
     val n1 = streaming.StreamOps.executeStreaming(spark, sfDir, out)
@@ -82,22 +73,5 @@ class StreamParitySpec extends SparkSpec {
       .collect().toSet
     assert(got == want)
     assert(got.nonEmpty)
-  }
-
-  test("streaming exact-dedup keeper table ≡ batch Dedup group table") {
-    import org.apache.spark.sql.functions._
-    val got = streaming.StreamOps.runToBatch(spark,
-      streaming.StreamOps.dedupStream(spark, sfDir), "sp_dedup", "complete")
-      .collect().toSet
-    val want = operators.Dedup.corpus(sources.Tables.documents(spark, sfDir))
-      .groupBy(md5(col("text")).as("text_hash"))
-      .agg(min(col("doc_id").cast("long")).as("keep_id"),
-        count(lit(1)).as("group_n"))
-      .collect().toSet
-    assert(got == want)
-    assert(got.nonEmpty)
-    // the duplicate structure is visible: exact copies (doc_id+200000)
-    // share their base doc's hash, so some groups have n >= 2
-    assert(got.exists(_.getLong(2) >= 2))
   }
 }

@@ -16,7 +16,7 @@ import duckdb
 import pandas as pd
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "documents", "embeddings"]
+          "lineitem", "events"]
 
 
 def normalize(df: pd.DataFrame) -> pd.DataFrame:
