@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract: ONE JSON line on stdout).
   *
   * Headline = the end-to-end staged KG pipeline (graft.Run.execute: scan →
@@ -19,13 +17,7 @@ object Bench {
     // (single-JVM local[K] shares one heap/GC, which caps thread scaling
     // long before core count does).
     val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val spark = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
+    val spark = SparkSessions.builder("graft-bench", master, cpus)
       // At bench scale (hundreds of MB) the 64 MB default advisory size
       // coalesces shuffles to ~4 partitions, capping parallelism no matter
       // the core count; 4 MB keeps all cores fed. At production scale the
@@ -37,7 +29,6 @@ object Bench {
       // 8 MB splits keep the scan parallel; at 100 TB the default is right.
       .config("spark.sql.files.maxPartitionBytes",
         sys.env.getOrElse("SPARK_GRAFT_SPLIT_BYTES", "8m"))
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
@@ -128,9 +119,10 @@ object Bench {
     // above stays fully cold. SPARK_GRAFT_COLD_QUERIES=1 restores the old
     // cold-per-query behavior (cache cleared between queries).
     val coldQueries = sys.env.get("SPARK_GRAFT_COLD_QUERIES").contains("1")
+    val sc = spark.sparkContext
     var warmupSec = 0.0
+    var warm = Set.empty[Int] // the warm stages' blocks: kept for the pass
     if (allQueries.nonEmpty && !coldQueries) {
-      val sc = spark.sparkContext
       val before = sc.getPersistentRDDs.keySet.toSet
       val shared = Seq(
         "transcripts" -> Pipeline.transcripts(spark, sfDir),
@@ -141,14 +133,7 @@ object Bench {
         df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         df.count() // eager: downstream branches must never race the cache
       }
-      // the uber graph is a STAGE (one build per pass, shared by
-      // kg_uber/kg_uber_canon) — stage it in the warm-up so those queries
-      // measure their own operator cost (count / closure+rewrite), not a
-      // 16-branch rebuild
-      if (allQueries.exists { case (n, _) => n.startsWith("kg_uber") })
-        SparkEntry.uberStaged(spark, sfDir)
-      // warm blocks survive the per-query release below
-      Caches.retainIds(sc.getPersistentRDDs.keySet.toSet -- before)
+      warm = sc.getPersistentRDDs.keySet.toSet -- before
       warmupSec = (System.nanoTime() - w0) / 1e9
       System.err.println(f"[bench] pipeline warm-up $warmupSec%8.2fs")
     }
@@ -174,9 +159,10 @@ object Bench {
       val ok = times.forall(_._2)
       System.err.println(f"[bench] $name%-22s $sec%8.2fs  " +
         f"(reps ${secs.map(s => f"$s%.2f").mkString("/")}%s)")
-      // warm mode: free query-local checkpoints (retained warm stages and
-      // the staged uber graph survive); plain caches stay for the pass
-      if (!coldQueries) Caches.release(spark)
+      // warm mode: free everything the query materialized; the warm
+      // stages survive, and plain cache entries stay for the pass
+      if (!coldQueries)
+        Caches.unpersistIds(spark, sc.getPersistentRDDs.keySet.toSet -- warm)
       (name, sec, ok)
     }
     if (!coldQueries) spark.catalog.clearCache()

@@ -1,9 +1,8 @@
 package graft
 
-import graft.model.Ns
 import graft.operators._
 import graft.sources.SynthTranscripts
-import org.apache.spark.{storage}
+import org.apache.spark.storage.StorageLevel
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -25,59 +24,41 @@ object Pipeline {
     Link.linkAll(s, d, mentions(s, d))
 
   def triples(s: SparkSession, d: String): DataFrame =
-    Emit.allTriples(s, d, transcripts(s, d), linked(s, d))
+    Emit.allTriples(s, d, transcripts(s, d), sharedLinked(s, d))
 
   /** The triple table + precomputed `conv` column (for Quads/convStats —
     * drops the per-row subject regex those consumers otherwise pay). */
   def triplesWithConv(s: SparkSession, d: String): DataFrame =
-    Emit.allTriplesConv(s, d, transcripts(s, d), linked(s, d))
+    Emit.allTriplesConv(s, d, transcripts(s, d), sharedLinked(s, d))
+
+  /** `linked` for the factories that fan it out to several emitters,
+    * persisted here once. A persist, not a checkpoint: the cache manager
+    * matches it by plan, so a caller that already cached `linked` (Bench's
+    * warm stages) has its cache substituted. The harness frees it
+    * (`Caches.releaseAll`). */
+  private def sharedLinked(s: SparkSession, d: String): DataFrame =
+    linked(s, d).persist(StorageLevel.MEMORY_AND_DISK)
 
   def sameAsClusters(s: SparkSession, d: String): DataFrame =
     SameAs.closure(SameAs.edgesOf(triples(s, d)))
 
+  /** The canonical triple table. Only the fact triples are materialized
+    * (localCheckpoint): they feed the edge extraction and both rewrite
+    * branches — canonicalize's read-twice input contract. The
+    * snippet-heavy context/activity triples stream through exactly once,
+    * untouched by the rewrite (ctx/act subjects/objects are canon-inert by
+    * namespace), and a bare count over them prunes the string building
+    * entirely. Measured (local[2] × scale-19 compute-only, interleaved
+    * A/B): 55.7-57.7 s vs 248-355 s for a full-table checkpoint — the
+    * 58.7M-row copy materializes every string column and spills. */
   def canonTriples(s: SparkSession, d: String): DataFrame = {
-    // PLAN SELECTION by what is already materialized (both branches emit
-    // the identical row multiset; the cold branch is the Verify-gated
-    // plan, the cached branch is set-equality-tested against it):
-    //
-    // COLD (nothing cached — the scaling protocol's compute path, a
-    // standalone canon query): materialize ONLY the fact triples (they
-    // feed the edge extraction + both rewrite branches — canonicalize's
-    // read-twice input contract); the snippet-heavy context/activity
-    // triples stream through exactly once, untouched by the rewrite
-    // (ctx/act subjects/objects are canon-inert by namespace), and a
-    // bare count over them prunes the string building entirely.
-    // Measured (local[2] × scale-19 compute-only, interleaved A/B):
-    // 55.7-57.7 s vs 248-355 s for a full-table checkpoint — the
-    // 58.7M-row copy materializes every string column and spills.
-    //
-    // CACHED (the emission stage frame is already materialized — the
-    // warm harness, any staged context): checkpoint the full table once
-    // (a cheap cache read) and split it by subject namespace; fact
-    // emission is NOT re-run per call. Measured (full warm suite):
-    // 2.3-2.8 s vs 5.9-6.9 s for the fact-only shape, whose per-call
-    // fact re-emission (three shuffles + checkpoint) pays full price
-    // under the pass's cache pressure. In the staged Run the triples
-    // parquet plays the checkpoint's role outright.
-    val staged = triplesWithConv(s, d)
-    if (staged.storageLevel != org.apache.spark.storage.StorageLevel.NONE) {
-      import graft.model.Ns
-      val all = triples(s, d).localCheckpoint()
-      val isCtxAct =
-        col("subj").startsWith(Ns.ctx) || col("subj").startsWith(Ns.act)
-      val facts = all.filter(!isCtxAct)
-      val canon = SameAs.closure(SameAs.edgesOf(facts))
-      SameAs.canonicalize(facts, canon)
-        .unionAll(all.filter(isCtxAct)) // ctx/act rows — canon-inert bypass
-    } else {
-      val l = Emit.persistedLinked(linked(s, d))
-      val facts = Emit.factTriples(s, d, transcripts(s, d), l)
-        .localCheckpoint()
-      val canon = SameAs.closure(SameAs.edgesOf(facts))
-      SameAs.canonicalize(facts, canon)
-        .unionAll(Emit.contextTriples(l))
-        .unionAll(Emit.activityTriples(l)) // date/cert objects — canon-inert
-    }
+    val l = sharedLinked(s, d)
+    val facts = Emit.factTriples(s, d, transcripts(s, d), l)
+      .localCheckpoint()
+    val canon = SameAs.closure(SameAs.edgesOf(facts))
+    SameAs.canonicalize(facts, canon)
+      .unionAll(Emit.contextTriples(l))
+      .unionAll(Emit.activityTriples(l)) // date/cert objects — canon-inert
   }
 
   /** Context ordinals (W1/A5) surfaced directly for verification — the

@@ -20,16 +20,8 @@ object Run {
     val outDir = args(1)
     val resume = args.contains("--resume")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .appName("graft-kg-run")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-    // spark-submit injects spark.master; standalone runs fall back to local
-    val spark = (if (sys.props.contains("spark.master")) builder
-                 else builder.master(
-                   sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")))
+    val spark = SparkSessions.builder("graft-kg-run",
+      sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"), cpus)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     execute(spark, sfDir, outDir, resume)
@@ -71,12 +63,11 @@ object Run {
         .repartition(spark.sparkContext.defaultParallelism, col("bucket"))
     }
     val canon = m.stage("canon") {
-      // Measured and REJECTED (r6): routing ctx/act rows around the
-      // canonicalize rewrite (Pipeline.canonTriples's namespace split)
-      // was wall-neutral here — over a staged parquet input the rewrite's
-      // broadcast join is not the cost — and the two-branch union
-      // fragmented the stage output 65 → 129 partitions (worse file
-      // layout for every canon consumer). The single-pass rewrite stays.
+      // The written triples stage re-reads cheaply, so it meets
+      // canonicalize's read-twice input contract as is. One rewrite over
+      // the whole table: routing ctx/act rows around it measured
+      // wall-neutral over a parquet input (r6), and the two-branch union
+      // fragmented the stage output 65 → 129 partitions.
       val t = triples.drop("bucket")
       SameAs.canonicalize(t, SameAs.closure(SameAs.edgesOf(t)))
     }

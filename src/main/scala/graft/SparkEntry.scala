@@ -191,55 +191,26 @@ object SparkEntry {
     // semantics. One distinct shuffle over the combined output; every
     // branch is the same plan its own gate verifies. kg_labels excluded —
     // reviewTerms checks the graph, it doesn't emit into it.
-    "kg_uber" -> ((s, d) => uberStaged(s, d)),
+    "kg_uber" -> ((s, d) => uberGraph(s, d)),
     // ...and its canonical form: the uber graph rewritten through the
     // sameAs closure (families emit no sameAs edges, so the identity map
     // is exactly the core pipeline's — e.g. works' reified agent records
-    // get their person participants collapsed onto canonical ids).
-    // uberStaged() is one pass-lifetime localCheckpoint: kg_uber counts
-    // it, this query closes + rewrites over the SAME materialization (the
-    // staged-Run shape), and the checkpoint satisfies canonicalize's
-    // read-twice input contract by construction.
+    // get their person participants collapsed onto canonical ids). One
+    // localCheckpoint of the build feeds the closure and both rewrite
+    // branches — canonicalize's read-twice input contract.
     "kg_uber_canon" -> ((s, d) => {
-      val u = uberStaged(s, d)
+      val u = uberGraph(s, d).localCheckpoint()
       operators.SameAs.canonicalize(u,
         operators.SameAs.closure(operators.SameAs.edgesOf(u)))
     })
   )
 
-  /** Memo for the staged uber graph: one build + localCheckpoint per
-    * (SparkContext, dir), revalidated against the block store so a
-    * Caches.releaseAll (end of a verify/bench pass) naturally invalidates
-    * it. Keyed by context identity — RDD ids restart at 0 in a fresh
-    * context, so a dir-only key could false-positively "revalidate". */
-  private val uberMemo =
-    scala.collection.mutable.Map.empty[String, (DataFrame, Set[Int])]
-
-  /** The cross-module uber graph, staged (SURVEY §3.3): built once per
-    * pass, localCheckpoint'd, RETAINED across the harness's per-query
-    * Caches.release(). The union's branch list derives from
+  /** The cross-module uber graph (SURVEY §3.3): one cold build of the
+    * 16-branch union. The union's branch list derives from
     * OracleSql.uberParts (one branch per family fragment — keep them in
-    * lockstep). The in-query checkpoint is a harness-only construct: the
-    * production path is the staged Run, which materializes stage outputs
-    * as parquet instead. */
-  private[graft] def uberStaged(s: SparkSession, d: String): DataFrame =
-    synchronized {
-      val key = System.identityHashCode(s.sparkContext) + ":" + d
-      uberMemo.get(key) match {
-        case Some((df, ids)) if Caches.allLive(s, ids) => df
-        case _ =>
-          val (df, ids) = Caches.trackedCheckpoint(uberGraph(s, d))
-          Caches.retainIds(ids)
-          uberMemo(key) = (df, ids)
-          df
-      }
-    }
-
-  /** One cold build of the 16-branch union. The transcript frame feeds the
-    * family branches of one union job — persisted eagerly so the branches
-    * read one materialization instead of racing the cache into N
-    * re-syntheses; released once the caller's checkpoint has materialized
-    * the result. */
+    * lockstep). The transcript frame feeds the family branches of one
+    * union job — persisted eagerly so the branches read one
+    * materialization instead of racing the cache into N re-syntheses. */
   private def uberGraph(s: SparkSession, d: String): DataFrame = {
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val tr = Pipeline.transcripts(s, d).persist(lvl)
@@ -252,7 +223,10 @@ object SparkEntry {
     val mts = Pipeline.mentions(s, d).persist(lvl)
     val l = operators.Link.linkAll(s, d, mts).persist(lvl)
     l.count()
-    val u = operators.Emit.allTriples(s, d, tr, l)
+    // the tr/mts/linked caches are the harness's to free — NOT
+    // unpersisted here, because their plans may BE the bench's warm
+    // shared cache entries
+    operators.Emit.allTriples(s, d, tr, l)
       .unionAll(operators.Emit.freestandingEvents(tr))
       .unionAll(operators.Extras.childrenCounts(l))
       .unionAll(operators.Works.workTriples(
@@ -275,10 +249,6 @@ object SparkEntry {
       .unionAll(operators.Relations.intimateTriples(l))
       .unionAll(operators.Relations.cfContextTriples(tr))
       .distinct()
-    u // uberStaged checkpoints (materializes) this; the tr/mts/linked
-      // caches live until the harness's next Caches.release() — NOT
-      // unpersisted here, because their plans may BE the bench's warm
-      // shared cache entries
   }
 
   def oracleSql: Map[String, String] = OracleSql.queries

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -11,11 +10,7 @@ object Verify {
     // the driver always calls with exactly two args → full run)
     val only = args.drop(2).toSet
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = SparkSessions.builder("graft-verify", s"local[$cpus]", cpus)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
@@ -39,13 +34,10 @@ object Verify {
         -1L
       }
       spark.catalog.clearCache() // queries persist intermediates; isolate them
-      // ...and free their localCheckpoint blocks too (clearCache never
-      // does) — the retained staged uber graph survives so kg_uber_canon
-      // reuses kg_uber's materialization
-      Caches.release(spark)
+      // ...and free their localCheckpoint blocks too (clearCache never does)
+      Caches.releaseAll(spark)
       name -> n
     }
-    Caches.releaseAll(spark) // end of pass: zero residual checkpoint blocks
     Files.writeString(Paths.get(s"$outDir/manifest.json"),
       counts.map { case (k, v) => s""""$k": $v""" }.mkString("{", ",", "}"))
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

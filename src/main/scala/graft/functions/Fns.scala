@@ -140,11 +140,6 @@ object Fns {
     replace(noPunct, lit(" "), lit("_"))
   }
 
-  /** `make_standard_uri` (`Utils/utilities.py:307-316`): namespace prepend
-    * of the cleaned term. */
-  def mintUri(ns: String, term: Column): Column =
-    concat(lit(ns), removePunctuation(term))
-
   /** `strip_all_whitespace` (`Utils/utilities.py:210-212`). */
   def stripAllWhitespace(c: Column): Column = regexp_replace(c, "\\s+", "")
 

@@ -44,21 +44,8 @@ object Quads {
     // self-union over a merely cached plan silently rebuilds one branch
     // (Spark's cache substitution fails there — see SameAs.canonicalize
     // input contract); the RDD-backed checkpoint is eagerly materialized
-    // once and read by every branch, which also kills the cache-fill race
-    // the old eager persist worked around. When the caller's frame is
-    // ALREADY cached (the bench's eagerly-counted warm shared stage), the
-    // copy is skipped: an eager cache has no fill race, and re-copying
-    // 3M rows into checkpoint blocks per call was pure overhead.
-    // Measured (r6, warm, 5 reps): skip-if-cached + bounded copy-join
-    // broadcast 6.0 s vs always-checkpoint + broadcast 7.5 s vs original
-    // checkpoint + SortMergeJoin 8.7 s. An eagerly-counted cache has no
-    // fill race, and bfs's remaining full-width scans of t are few enough
-    // that re-copying 3M rows into checkpoint blocks per call cost more
-    // than the columnar-cache re-scans (canonTriples measures the other
-    // way — it re-reads its table three times).
-    val t = if (triples.storageLevel !=
-        org.apache.spark.storage.StorageLevel.NONE) triples
-      else triples.localCheckpoint()
+    // once and read by every branch.
+    val t = triples.localCheckpoint()
     val quads = export(t)
     // Frontier expansion factors through the DISTINCT IRI edge set: level
     // k+1's frontier = distinct (graph, obj) of frontier_k ⋈ triples, which

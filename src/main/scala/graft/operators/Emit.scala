@@ -257,17 +257,6 @@ object Emit {
     ev.select(explode(array(typed, label, date)).as("t")).select(col("t.*"))
   }
 
-  /** The full graph: union of all emitters + set-dedup (the reference's
-    * `uber_graph += graph`, `bio_extraction.py:78`). The distinct is the
-    * single biggest shuffle of the pipeline — partial aggregation
-    * (map-side combine) applies because it's a hash-aggregate over all
-    * columns; AQE coalesces the post-shuffle partitions.
-    */
-  /** Persist `linked` once — it feeds four fact emitters + contexts. */
-  def persistedLinked(linked: DataFrame): DataFrame =
-    if (linked.storageLevel != org.apache.spark.storage.StorageLevel.NONE) linked
-    else linked.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
   /** Fact triples (skeleton + mention facts + spatial + sameAs) with set
     * dedup. Set semantics (the reference's rdflib graph) — but only these
     * FACT triples can actually contain duplicates (the same (conv, pred,
@@ -284,6 +273,12 @@ object Emit {
       .unionAll(sameAsTriples(spark, dir, linked))
       .distinct()
 
+  /** The full graph: union of all emitters + set-dedup (the reference's
+    * `uber_graph += graph`, `bio_extraction.py:78`). The distinct is the
+    * single biggest shuffle of the pipeline — partial aggregation
+    * (map-side combine) applies because it's a hash-aggregate over all
+    * columns; AQE coalesces the post-shuffle partitions.
+    */
   def allTriples(spark: SparkSession, dir: String,
                  transcripts: DataFrame, linked: DataFrame): DataFrame =
     // one definition, two shapes: the plain table is the conv-annotated one
@@ -295,13 +290,13 @@ object Emit {
     * the bulk of the table — carry their conv from emission for free; only
     * the (post-distinct, much smaller) fact rows pay one regex. Plain
     * consumers that drop `conv` get the regex pruned away entirely by
-    * Catalyst, so allTriples keeps its exact cost. */
+    * Catalyst, so allTriples keeps its exact cost. `linked` feeds five
+    * emitters and is read as given: the caller decides whether it is
+    * materialized. */
   def allTriplesConv(spark: SparkSession, dir: String,
-                     transcripts: DataFrame, linked: DataFrame): DataFrame = {
-    val l = persistedLinked(linked)
-    factTriples(spark, dir, transcripts, l)
+                     transcripts: DataFrame, linked: DataFrame): DataFrame =
+    factTriples(spark, dir, transcripts, linked)
       .withColumn("conv", Fns.convOf(col("subj")))
-      .unionAll(contextTriplesConv(l))
-      .unionAll(activityTriplesConv(l))
-  }
+      .unionAll(contextTriplesConv(linked))
+      .unionAll(activityTriplesConv(linked))
 }

@@ -17,7 +17,6 @@ object Tables {
   def region(s: SparkSession, d: String): DataFrame    = t(s, d, "region")
   def customer(s: SparkSession, d: String): DataFrame  = t(s, d, "customer")
   def supplier(s: SparkSession, d: String): DataFrame  = t(s, d, "supplier")
-  def part(s: SparkSession, d: String): DataFrame      = t(s, d, "part")
   def orders(s: SparkSession, d: String): DataFrame    = t(s, d, "orders")
   def lineitem(s: SparkSession, d: String): DataFrame  = t(s, d, "lineitem")
 }

@@ -121,7 +121,7 @@ class PlanQualitySpec extends SparkSpec {
       "works_agents must read its checkpointed emission frame")
     assert(!wa.contains("Join") && !wa.contains("Window"),
       "works_agents emission must stay single-pass and join-free")
-    Caches.release(spark)
+    Caches.releaseAll(spark)
   }
 
   test("whole-stage codegen covers the extraction path (no UDF breaks)") {

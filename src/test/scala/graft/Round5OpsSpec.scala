@@ -192,25 +192,28 @@ class Round5OpsSpec extends SparkSpec {
     assert(got.size == 7)
   }
 
+  // "retained" = a tracked checkpoint whose ids are not handed to the release
+  // (unpersistIds): it must survive until releaseAll
   test("checkpoint registry: tracked blocks are freed, retained survive release") {
     val sc = spark.sparkContext
     val (a, aIds) = Caches.trackedCheckpoint(Seq(1, 2, 3).toDF("x"))
-    val b = Caches.retainedCheckpoint(Seq(4, 5).toDF("x"))
+    val (b, bIds) = Caches.trackedCheckpoint(Seq(4, 5).toDF("x"))
     assert(aIds.nonEmpty && a.count() == 3 && b.count() == 2)
-    Caches.release(spark)
-    // release is async (unpersist(blocking=false)) — poll briefly
+    Caches.unpersistIds(spark, aIds)
+    // unpersist is async (blocking=false) — poll briefly, with a fresh
+    // deadline per wait (ADVICE r5 — a reused deadline could expire
+    // immediately and flake)
     def live = sc.getPersistentRDDs.keySet.toSet
-    val deadline = System.currentTimeMillis() + 10000
-    while ((aIds & live).nonEmpty && System.currentTimeMillis() < deadline)
-      Thread.sleep(50)
+    def await(done: => Boolean): Unit = {
+      val deadline = System.currentTimeMillis() + 10000
+      while (!done && System.currentTimeMillis() < deadline) Thread.sleep(50)
+    }
+    await((aIds & live).isEmpty)
     assert((aIds & live).isEmpty, "tracked checkpoint blocks not freed")
-    assert(b.count() == 2, "retained checkpoint must survive release()")
+    assert(bIds.subsetOf(live) && b.count() == 2,
+      "unpersistIds must free only the ids it is given")
     Caches.releaseAll(spark)
-    // fresh deadline: the first poll may have consumed most of the budget
-    // (ADVICE r5 — the reused deadline could expire immediately and flake)
-    val deadline2 = System.currentTimeMillis() + 10000
-    while (live.nonEmpty && System.currentTimeMillis() < deadline2)
-      Thread.sleep(50)
+    await(live.isEmpty)
     assert(live.isEmpty, "releaseAll must leave zero persistent RDDs")
   }
 }

@@ -8,8 +8,13 @@ class RunSpec extends SparkSpec {
 
   test("staged run is checkpoint-resumable with per-partition lineage") {
     val out = Files.createTempDirectory("graftrun").toString
+    def persistent = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val before = persistent
     val (t1, c1) = Run.execute(spark, sfDir, out, resume = false)
     assert(t1 > 0 && c1 > 0 && c1 <= t1)
+    // the stages are parquet: a run leaves no cache or checkpoint behind
+    assert((persistent -- before).isEmpty,
+      s"Run.execute left persistent RDDs ${persistent -- before}")
     val manifest1 = Files.readAllLines(Paths.get(s"$out/manifest.jsonl")).asScala
     assert(manifest1.count(_.contains("\"status\":\"done\"")) == 6)
     // lineage rows exist and sum to the stage row count
