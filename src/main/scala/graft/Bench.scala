@@ -127,7 +127,7 @@ object Bench {
       val shared = Seq(
         "transcripts" -> Pipeline.transcripts(spark, sfDir),
         "linked" -> Pipeline.linked(spark, sfDir),
-        "triples" -> Pipeline.triplesWithConv(spark, sfDir))
+        "triples" -> Pipeline.triples(spark, sfDir))
       val w0 = System.nanoTime()
       shared.foreach { case (_, df) =>
         df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

@@ -26,11 +26,6 @@ object Pipeline {
   def triples(s: SparkSession, d: String): DataFrame =
     Emit.allTriples(s, d, transcripts(s, d), sharedLinked(s, d))
 
-  /** The triple table + precomputed `conv` column (for Quads/convStats —
-    * drops the per-row subject regex those consumers otherwise pay). */
-  def triplesWithConv(s: SparkSession, d: String): DataFrame =
-    Emit.allTriplesConv(s, d, transcripts(s, d), sharedLinked(s, d))
-
   /** `linked` for the factories that fan it out to several emitters,
     * persisted here once. A persist, not a checkpoint: the cache manager
     * matches it by plan, so a caller that already cached `linked` (Bench's

@@ -36,7 +36,7 @@ object SparkEntry {
     // §2.4 A4 unmapped histogram
     "kg_unmapped" -> ((s, d) => Metrics.unmappedHistogram(Pipeline.linked(s, d))),
     // §2.4 A3 run statistics
-    "kg_stats" -> ((s, d) => Metrics.convStats(Pipeline.triplesWithConv(s, d))),
+    "kg_stats" -> ((s, d) => Metrics.convStats(Pipeline.triples(s, d))),
     // §2.5 W2 closest heading
     "kg_heading" -> ((s, d) => Pipeline.headings(s, d)),
     // §2.4 A7 first-mention selection
@@ -90,7 +90,7 @@ object SparkEntry {
     "kg_family_placeholder" -> ((s, d) =>
       operators.Extras.familyPlaceholder(s, d, Pipeline.linked(s, d))),
     // §2.1 K4 quad export: subject-centric named graphs (huvizQuads analog)
-    "kg_quads" -> ((s, d) => io.Quads.export(Pipeline.triplesWithConv(s, d))),
+    "kg_quads" -> ((s, d) => io.Quads.export(Pipeline.triples(s, d))),
     // §2.1 K2 JSON-LD-lines export (one sorted node object per subject)
     "kg_jsonld_lines" -> ((s, d) => io.JsonLd.export(Pipeline.triples(s, d))),
     // §2.1 K2 RDF/XML-lines export (rdf:RDF envelope + one Description/subj)
@@ -125,9 +125,10 @@ object SparkEntry {
     // §2.1 K2 N3 export (Turtle-compatible subset — utilities.py:807-808)
     "kg_n3_lines" -> ((s, d) => io.N3.export(Pipeline.triples(s, d))),
     // §2.1 K2 TriX export: per-quad graph elements, zero-shuffle projection
-    "kg_trix_lines" -> ((s, d) => io.TriX.export(io.Quads.export(Pipeline.triplesWithConv(s, d)))),
+    "kg_trix_lines" -> ((s, d) =>
+      io.TriX.export(io.Quads.export(Pipeline.triples(s, d)))),
     // §2.1 K4 Huviz 3-level BFS neighbor copy (huvizQuads.py:119-140)
-    "kg_quads_bfs" -> ((s, d) => io.Quads.bfs(Pipeline.triplesWithConv(s, d))),
+    "kg_quads_bfs" -> ((s, d) => io.Quads.bfs(Pipeline.triples(s, d))),
     // §3.3 modsBib origin/agent record shape: CIDOC Creation events with
     // reified agent-role nodes, publisher roles, place + date of publication
     "kg_works_agents" -> ((s, d) => operators.Works.agentTriples(

@@ -1,5 +1,6 @@
 package graft.io
 
+import graft.model.Triple
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -53,11 +54,9 @@ object NTriples {
         litVal, "\\\\\\\\", nul),
         "\\\\t", "\t"), "\\\\r", "\r"), "\\\\n", "\n"), "\\\\\"", "\""),
       nul, "\\\\")
-    lines.select(
-      subj.as("subj"), pred.as("pred"),
-      when(objIri =!= "", objIri).otherwise(unescaped).as("obj_value"),
-      (objIri =!= "").as("obj_is_iri"),
-      lang.as("obj_lang"), dtype.as("obj_dtype"))
+    lines.select(Triple.cols(subj, pred,
+        when(objIri =!= "", objIri).otherwise(unescaped),
+        isIri = (objIri =!= ""), lang = lang, dtype = dtype): _*)
       .filter(col("subj") =!= "" && col("pred") =!= "")
   }
 

@@ -1,7 +1,8 @@
 package graft.io
 
+import graft.functions.Fns
 import graft.model.Ns
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** K4 — quad export for visualization (`Huviz/huvizQuads.py:119-140`): the
@@ -18,18 +19,20 @@ import org.apache.spark.sql.functions._
   */
 object Quads {
 
+  /** The named graph of a subject: its conversation's graph when the URI
+    * embeds a conv id (`Fns.convOf`, no regex), else the uber graph. */
+  private def graphOf(subj: Column): Column = {
+    val conv = Fns.convOf(subj)
+    when(conv =!= "", concat(lit(Ns.conv), conv))
+      .otherwise(lit(Ns.kg + "graph/uber"))
+  }
+
   /** Triple table → (graph, subj, pred, obj_value, obj_is_iri, obj_lang,
-    * obj_dtype). A precomputed `conv` column (Pipeline.triplesWithConv) is
-    * used when present; otherwise the conv is recovered by regex. */
-  def export(triples: DataFrame): DataFrame = {
-    val conv = if (triples.columns.contains("conv")) col("conv")
-      else graft.functions.Fns.convOf(col("subj"))
-    triples.select(
-      when(conv =!= "", concat(lit(Ns.conv), conv))
-        .otherwise(lit(Ns.kg + "graph/uber")).as("graph"),
+    * obj_dtype), graph = `graphOf(subj)`. */
+  def export(triples: DataFrame): DataFrame =
+    triples.select(graphOf(col("subj")).as("graph"),
       col("subj"), col("pred"), col("obj_value"),
       col("obj_is_iri"), col("obj_lang"), col("obj_dtype"))
-  }
 
   /** The Huviz 3-level BFS neighbor copy (`Huviz/huvizQuads.py:119-140`):
     * every graph additionally receives the triples of resources reachable
@@ -54,17 +57,14 @@ object Quads {
     // and join the FULL triple table exactly ONCE at the end to copy the
     // statements of every reached node. Replaces 3 wide 7-column
     // frontier⋈triples joins with 2 slim 2-column hops + 1 copy join.
-    // Edges carry the source's graph label (a FUNCTION of subj — free at
-    // emission, same distinct cardinality), so level-0 derives from the
+    // Edges carry the source's graph label (`graphOf(subj)` — same
+    // distinct cardinality as the edges), so level-0 derives from the
     // slim DISTINCT edge set instead of re-scanning + re-shuffling the
     // full IRI-triple projection a second time (the former frontier-0
     // distinct was its own full-width pass over `t`).
-    val srcConv = if (t.columns.contains("conv")) col("conv")
-      else graft.functions.Fns.convOf(col("subj"))
-    val srcGraph = when(srcConv =!= "", concat(lit(Ns.conv), srcConv))
-      .otherwise(lit(Ns.kg + "graph/uber"))
     val edges = t.filter(col("obj_is_iri"))
-      .select(srcGraph.as("g"), col("subj"), col("obj_value").as("dst"))
+      .select(graphOf(col("subj")).as("g"), col("subj"),
+        col("obj_value").as("dst"))
       .distinct()
       .localCheckpoint() // feeds every frontier hop — same self-union rule
     // HOME-GRAPH PRUNING (pure narrow filter, no join): the graph label is
@@ -77,10 +77,8 @@ object Quads {
     // expand or copy; only genuinely cross-graph references (persons,
     // places, works) do. Provably output-identical to the unpruned BFS —
     // the DuckDB oracle runs the unpruned definition and hashes equal.
-    val nodeConv = graft.functions.Fns.convOf(col("subj"))
-    val homeGraph = when(nodeConv =!= "", concat(lit(Ns.conv), nodeConv))
-      .otherwise(lit(Ns.kg + "graph/uber"))
-    def pruneHome(f: DataFrame): DataFrame = f.filter(col("graph") =!= homeGraph)
+    def pruneHome(f: DataFrame): DataFrame =
+      f.filter(col("graph") =!= graphOf(col("subj")))
     // Each level's frontier feeds TWO consumers (the next hop AND the
     // reached union) — Catalyst shares no subtrees across them, so without
     // per-level materialization level 1 was computed 3×, level 2 2× (each
@@ -113,8 +111,8 @@ object Quads {
         col("obj_is_iri"), col("obj_lang"), col("obj_dtype"))
     // NO final set-distinct — it is provably a no-op here, and over the
     // full multi-million-row output it was the single largest shuffle of
-    // this export: (1) `quads` rows all have graph == homeGraph(subj)
-    // while every `copied` row has graph != homeGraph(subj) (reached is
+    // this export: (1) `quads` rows all have graph == graphOf(subj)
+    // while every `copied` row has graph != graphOf(subj) (reached is
     // home-pruned), so the two sides are DISJOINT; (2) within `copied`,
     // `reached` is distinct on (graph, subj) and the triple table is
     // dup-free by the pipeline's routing-around-distinct invariant, so

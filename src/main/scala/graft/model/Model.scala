@@ -1,5 +1,8 @@
 package graft.model
 
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions.{lit, struct}
+
 /** Core data model of the KG-construction engine.
   *
   * Mirrors the reference's value domain (see SURVEY.md §1): the sole output
@@ -20,6 +23,26 @@ final case class Triple(
     obj_lang: String,  // "" when absent ("en" where the reference tags lang)
     obj_dtype: String  // "" when absent (xsd:string/date/gYear/... otherwise)
 )
+
+/** The triple layout as columns — the one place an emitter spells it.
+  * `pred`, `isIri`, `lang` and `dtype` take a Column or a plain value
+  * (String/Boolean), which becomes a literal. */
+object Triple {
+
+  /** The six aliased columns of one triple, in layout order — for
+    * `df.select(Triple.cols(...): _*)`. */
+  def cols(subj: Column, pred: Any, obj: Column, isIri: Any,
+           lang: Any = "", dtype: Any = ""): Seq[Column] = Seq(
+    subj.as("subj"), lit(pred).as("pred"), obj.as("obj_value"),
+    lit(isIri).as("obj_is_iri"), lit(lang).as("obj_lang"),
+    lit(dtype).as("obj_dtype"))
+
+  /** The same six columns as one struct — an element of the per-row array
+    * that single-pass emitters explode and flatten with `t.*`. */
+  def row(subj: Column, pred: Any, obj: Column, isIri: Any,
+          lang: Any = "", dtype: Any = ""): Column =
+    struct(cols(subj, pred, obj, isIri, lang, dtype): _*)
+}
 
 /** One transcript turn — the exact input shape demanded by BASELINE.json's
   * input_hint: (conv_id, turn_idx, role, text, tool, ts).

@@ -1,8 +1,8 @@
 package graft.operators
 
 import graft.functions.Fns
-import graft.model.Ns
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.model.{Ns, Triple}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -89,12 +89,6 @@ object Education {
   val subjects: Seq[String] =
     Seq("Latin", "Mathematics", "Botany", "Rhetoric", "Music", "Greek")
 
-  private def t(df: DataFrame, subj: Column, pred: Column, obj: Column,
-                isIri: Boolean, lang: String = "") =
-    df.select(subj.as("subj"), pred.as("pred"), obj.as("obj_value"),
-      lit(isIri).as("obj_is_iri"), lit(lang).as("obj_lang"),
-      lit("").as("obj_dtype"))
-
   /** kg_education: the full education node-shape emission. Input: the
     * linked mention frame (education rows carry the School URI). */
   def educationTriples(linked: DataFrame): DataFrame = {
@@ -156,47 +150,46 @@ object Education {
     val instructorUri = concat(lit(Ns.person), ((mc * 7) % 200).cast("string"))
     val companionUri = concat(lit(Ns.person), ((mc * 11) % 200).cast("string"))
     val locationUri = concat(lit(Ns.place), ((mc * 3) % 25).cast("string"))
-    def s(subj: Column, pred: Column, obj: Column, isIri: Boolean) =
-      struct(subj.as("subj"), pred.as("pred"), obj.as("obj_value"),
-        lit(isIri).as("obj_is_iri"), lit("").as("obj_lang"),
-        lit("").as("obj_dtype"))
+    val ctx = col("ctx")
     val fixed = array(
-      s(col("ctx"), lit(Ns.rdfType), lit(Ns.tContext), isIri = true),
-      s(col("ctx"), lit(Ns.rdfType),
+      Triple.row(ctx, Ns.rdfType, lit(Ns.tContext), isIri = true),
+      Triple.row(ctx, Ns.rdfType,
         concat(lit(Ns.kg + "type/"), col("ctype")), isIri = true),
-      s(school, lit(Ns.rdfsLabel), col("surface"), isIri = false),
-      s(school, lit(Ns.rdfType),
+      Triple.row(school, Ns.rdfsLabel, col("surface"), isIri = false),
+      Triple.row(school, Ns.rdfType,
         lit(Ns.kg + "type/EducationalOrganization"), isIri = true),
-      s(col("ctx"), attendPred, school, isIri = true),
-      when(col("lvl") < 3, s(school, lit(Ns.rdfType),
+      Triple.row(ctx, attendPred, school, isIri = true),
+      when(col("lvl") < 3, Triple.row(school, Ns.rdfType,
         element_at(array(levelTypes.map(x => lit(Ns.kg + "type/" + x)): _*),
           col("lvl") + 1), isIri = true)),
-      when(col("body") < 2, s(school, lit(Ns.rdfType),
+      when(col("body") < 2, Triple.row(school, Ns.rdfType,
         element_at(array(bodyTypes.map(x => lit(Ns.kg + "type/" + x)): _*),
           col("body") + 1), isIri = true)),
-      when(mc % 2 === 0, s(auri, lit(Ns.rdfsLabel), aname, isIri = false)),
-      when(mc % 2 === 0, s(col("ctx"), lit(Ns.pred + "award"), auri, isIri = true)),
-      when(mc % 3 === 0, s(col("ctx"), lit(Ns.pred + "credential"), degUri, isIri = true)),
-      when(mc % 5 === 0, s(col("ctx"), lit(Ns.pred + "subjectOfStudy"), subjTerm, isIri = true)),
-      when(mc % 5 === 0, s(school, lit(Ns.pred + "teachesEducationalSubject"),
-        subjTerm, isIri = true)),
-      when(mc % 7 === 0, s(col("ctx"), lit(Ns.pred + "contestedBehaviour"),
+      when(mc % 2 === 0, Triple.row(auri, Ns.rdfsLabel, aname, isIri = false)),
+      when(mc % 2 === 0, Triple.row(ctx, Ns.pred + "award", auri, isIri = true)),
+      when(mc % 3 === 0, Triple.row(ctx, Ns.pred + "credential", degUri,
+        isIri = true)),
+      when(mc % 5 === 0, Triple.row(ctx, Ns.pred + "subjectOfStudy", subjTerm,
+        isIri = true)),
+      when(mc % 5 === 0, Triple.row(school,
+        Ns.pred + "teachesEducationalSubject", subjTerm, isIri = true)),
+      when(mc % 7 === 0, Triple.row(ctx, Ns.pred + "contestedBehaviour",
         graft.functions.Fns.limitWords(col("text"), 20), isIri = false)),
-      when(mc % 6 === 0, s(col("ctx"), lit(Ns.pred + "instructor"),
+      when(mc % 6 === 0, Triple.row(ctx, Ns.pred + "instructor",
         instructorUri, isIri = true)),
-      when(mc % 6 === 0, s(school, lit(Ns.pred + "hasEmployee"),
+      when(mc % 6 === 0, Triple.row(school, Ns.pred + "hasEmployee",
         instructorUri, isIri = true)),
-      when(mc % 6 === 0 && mc % 5 === 0, s(instructorUri,
-        lit(Ns.pred + "teachesEducationalSubject"), subjTerm, isIri = true)),
-      when(mc % 9 === 0, s(col("ctx"), lit(Ns.pred + "companion"),
+      when(mc % 6 === 0 && mc % 5 === 0, Triple.row(instructorUri,
+        Ns.pred + "teachesEducationalSubject", subjTerm, isIri = true)),
+      when(mc % 9 === 0, Triple.row(ctx, Ns.pred + "companion",
         companionUri, isIri = true)),
-      when(mc % 10 === 0, s(school, lit(Ns.pred + "hasLocation"),
+      when(mc % 10 === 0, Triple.row(school, Ns.pred + "hasLocation",
         locationUri, isIri = true)),
-      when(mc % 15 === 0, s(col("ctx"), lit(Ns.pred + "credentialSubject"),
+      when(mc % 15 === 0, Triple.row(ctx, Ns.pred + "credentialSubject",
         dsTerm, isIri = true)))
     val awardTypeRows = filter(
       transform(element_at(typedlit(awardTypes), aidx + 1),
-        ty => s(auri, lit(Ns.rdfType), ty, isIri = true)),
+        ty => Triple.row(auri, Ns.rdfType, ty, isIri = true)),
       _ => mc % 2 === 0)
     b.select(explode(concat(array_compact(fixed), awardTypeRows)).as("t"))
       .select(col("t.*")).distinct()

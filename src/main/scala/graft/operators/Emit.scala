@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.functions.Fns
-import graft.model.Ns
+import graft.model.{Ns, Triple}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -29,12 +29,6 @@ object Emit {
 
   private def convUri = concat(lit(Ns.conv), col("conv_id"))
 
-  private val tripleCols = Seq(
-    col("subj"), col("pred"), col("obj_value"),
-    col("obj_is_iri"), col("obj_lang"), col("obj_dtype"))
-
-  private def asTriple(df: DataFrame): DataFrame = df.select(tripleCols: _*)
-
   /** Per-conversation skeleton (`Biography/biography.py:198-226`):
     * type + label triples. */
   def skeleton(transcripts: DataFrame): DataFrame = {
@@ -42,14 +36,9 @@ object Emit {
     // struct array — the former two-branch self-union re-ran the
     // distinct aggregation per branch (no common-subtree sharing)
     val convs = transcripts.select(col("conv_id")).distinct()
-    val typed = struct(
-      convUri.as("subj"), lit(Ns.rdfType).as("pred"),
-      lit(Ns.tPerson).as("obj_value"), lit(true).as("obj_is_iri"),
-      lit("").as("obj_lang"), lit("").as("obj_dtype"))
-    val labeled = struct(
-      convUri.as("subj"), lit(Ns.rdfsLabel).as("pred"),
-      col("conv_id").as("obj_value"), lit(false).as("obj_is_iri"),
-      lit("en").as("obj_lang"), lit("").as("obj_dtype"))
+    val typed = Triple.row(convUri, Ns.rdfType, lit(Ns.tPerson), isIri = true)
+    val labeled = Triple.row(convUri, Ns.rdfsLabel, col("conv_id"),
+      isIri = false, lang = "en")
     convs.select(explode(array(typed, labeled)).as("t")).select(col("t.*"))
   }
 
@@ -63,8 +52,8 @@ object Emit {
     val predCol = predByKind.foldLeft(lit(null).cast("string")) {
       case (acc, (k, p)) => when(col("kind") === k, lit(p)).otherwise(acc)
     }
-    asTriple(kept.select(convUri.as("subj"), predCol.as("pred"),
-      col("obj_value"), col("obj_is_iri"), col("obj_lang"), col("obj_dtype")))
+    kept.select(Triple.cols(convUri, predCol, col("obj_value"),
+      col("obj_is_iri"), col("obj_lang"), col("obj_dtype")): _*)
   }
 
   /** W3 "MOVED" semantics (`Utils/location.py:74-123`): a "leaving X" block
@@ -77,19 +66,11 @@ object Emit {
       .filter(col("kind") === "place" && col("matched"))
       .select(col("conv_id"), col("obj_value")).distinct()
     val left = linked.filter(col("kind") === "place_left" && col("matched"))
-    asTriple(left.join(visited, Seq("conv_id", "obj_value"), "left_anti")
-      .select(convUri.as("subj"), lit(Ns.spatialRel).as("pred"),
-        col("obj_value"), lit(true).as("obj_is_iri"),
-        lit("").as("obj_lang"), lit("").as("obj_dtype")))
+    left.join(visited, Seq("conv_id", "obj_value"), "left_anti")
+      .select(Triple.cols(convUri, Ns.spatialRel, col("obj_value"),
+        isIri = true): _*)
   }
 
-  /** Context/annotation nodes with per-(conv, kind) ordinals — the
-    * reference's mutable counters become a row_number window (SURVEY.md
-    * §2.4 A5 / §2.5 W1, `Biography/culturalForm.py:412-413`, `Utils/
-    * other_contexts.py:16-56`). Each emitting mention gets a context node
-    * carrying type, target selector (F14: deterministic from keys, no DOM),
-    * and a snippet literal (F5/F7).
-    */
   /** Emitting mentions with (conv, kind) ordinals + minted context URIs —
     * shared base of context AND activity emission (same counters, same
     * document order). */
@@ -105,32 +86,28 @@ object Emit {
           lit("Context_"), col("ordinal").cast("string")))
   }
 
-  def contextTriples(linked: DataFrame): DataFrame =
-    contextTriplesConv(linked).select(tripleCols: _*)
-
-  /** Context triples + a precomputed `conv` column (the subject's conv is
-    * KNOWN at emission — recovering it downstream with a per-row regex
-    * over the biggest tables was the expensive way around). */
-  private[graft] def contextTriplesConv(linked: DataFrame): DataFrame = {
+  /** Context/annotation nodes with per-(conv, kind) ordinals — the
+    * reference's mutable counters become a row_number window (SURVEY.md
+    * §2.4 A5 / §2.5 W1, `Biography/culturalForm.py:412-413`, `Utils/
+    * other_contexts.py:16-56`). Each emitting mention gets a context node
+    * carrying type, target selector (F14: deterministic from keys, no DOM),
+    * and a snippet literal (F5/F7).
+    */
+  def contextTriples(linked: DataFrame): DataFrame = {
     // ONE window pass: all three per-context triples ride one exploded
     // struct array. The former three-branch self-union re-ran the ordinal
     // sort+window+projection PER BRANCH (the shuffle itself was reused by
     // ReuseExchange, the sort/window above it was not) — 3× the window on
     // the widest emission path. Same multiset of rows.
     val ctx = ctxFrame(linked)
-    def t(pred: String, obj: org.apache.spark.sql.Column, isIri: Boolean,
-          lang: String) =
-      struct(col("ctx_uri").as("subj"), lit(pred).as("pred"),
-        obj.as("obj_value"), lit(isIri).as("obj_is_iri"),
-        lit(lang).as("obj_lang"), lit("").as("obj_dtype"))
-    val typed = t(Ns.rdfType, lit(Ns.tContext), isIri = true, "")
-    val target = t(Ns.hasTarget,
+    val c = col("ctx_uri")
+    val typed = Triple.row(c, Ns.rdfType, lit(Ns.tContext), isIri = true)
+    val target = Triple.row(c, Ns.hasTarget,
       concat(lit("/conv["), col("conv_id"), lit("]/turn["),
-        col("turn_idx").cast("string"), lit("]")), isIri = false, "")
-    val snip = t(Ns.hasSnippet, Fns.snippet(col("text")), isIri = false, "en")
-    ctx.select(explode(array(typed, target, snip)).as("t"),
-        col("conv_id").as("conv"))
-      .select(col("t.*"), col("conv"))
+        col("turn_idx").cast("string"), lit("]")), isIri = false)
+    val snip = Triple.row(c, Ns.hasSnippet, Fns.snippet(col("text")),
+      isIri = false, lang = "en")
+    ctx.select(explode(array(typed, target, snip)).as("t")).select(col("t.*"))
   }
 
   /** Kinds that carry an event character → Activity nodes (the reference's
@@ -151,10 +128,7 @@ object Emit {
     * All URIs are functions of (conv, kind, ordinal) — same counters as the
     * contexts; all 8 triples are unique by construction (routed around the
     * fact distinct, like contexts). */
-  def activityTriples(linked: DataFrame): DataFrame =
-    activityTriplesConv(linked).select(tripleCols: _*)
-
-  private[graft] def activityTriplesConv(linked: DataFrame): DataFrame = {
+  def activityTriples(linked: DataFrame): DataFrame = {
     val base = ctxFrame(linked).filter(col("kind").isin(activityKinds: _*))
     val lex = Dates.lexicalOf(col("ts"), col("turn_idx"))
     val certCode = element_at(
@@ -172,29 +146,22 @@ object Emit {
     // one exploded struct array — the former eight-branch self-union
     // re-ran the ordinal sort+window+date projections PER BRANCH (only the
     // exchange below them was reused). Same multiset of rows.
-    def t(subj: org.apache.spark.sql.Column, pred: String,
-          obj: org.apache.spark.sql.Column, isIri: Boolean,
-          lang: String, dtype: org.apache.spark.sql.Column) =
-      struct(subj.as("subj"), lit(pred).as("pred"), obj.as("obj_value"),
-        lit(isIri).as("obj_is_iri"), lit(lang).as("obj_lang"),
-        dtype.as("obj_dtype"))
     val label = concat(col("conv_id"), lit(" "), col("kind"),
       lit(" activity "), col("ordinal").cast("string"))
+    val (act, tspan) = (col("act_uri"), col("tspan_uri"))
     val rows = array(
-      t(col("act_uri"), Ns.rdfType, lit(Ns.tActivity), isIri = true, "", lit("")),
-      t(col("act_uri"), Ns.rdfsLabel, label, isIri = false, "en", lit("")),
-      t(col("act_uri"), Ns.hasTimeSpan, col("tspan_uri"), isIri = true, "", lit("")),
-      t(col("tspan_uri"), Ns.rdfType, lit(Ns.tTimeSpan), isIri = true, "", lit("")),
-      t(col("tspan_uri"), Ns.atSomeTimeWithin, col("fd.lexical"),
-        isIri = false, "", col("fd.dtype")),
-      t(col("tspan_uri"), Ns.beginOfBegin, Dates.intervalStart(col("lexical")),
-        isIri = false, "", lit(Ns.xsdDateTime)),
-      t(col("tspan_uri"), Ns.endOfEnd, Dates.intervalEnd(col("lexical")),
-        isIri = false, "", lit(Ns.xsdDateTime)),
-      t(col("tspan_uri"), Ns.hasCertainty, col("cert"),
-        isIri = false, "", lit("")))
-    a.select(explode(rows).as("t"), col("conv_id").as("conv"))
-      .select(col("t.*"), col("conv"))
+      Triple.row(act, Ns.rdfType, lit(Ns.tActivity), isIri = true),
+      Triple.row(act, Ns.rdfsLabel, label, isIri = false, lang = "en"),
+      Triple.row(act, Ns.hasTimeSpan, tspan, isIri = true),
+      Triple.row(tspan, Ns.rdfType, lit(Ns.tTimeSpan), isIri = true),
+      Triple.row(tspan, Ns.atSomeTimeWithin, col("fd.lexical"),
+        isIri = false, dtype = col("fd.dtype")),
+      Triple.row(tspan, Ns.beginOfBegin, Dates.intervalStart(col("lexical")),
+        isIri = false, dtype = Ns.xsdDateTime),
+      Triple.row(tspan, Ns.endOfEnd, Dates.intervalEnd(col("lexical")),
+        isIri = false, dtype = Ns.xsdDateTime),
+      Triple.row(tspan, Ns.hasCertainty, col("cert"), isIri = false))
+    a.select(explode(rows).as("t")).select(col("t.*"))
   }
 
   /** owl:sameAs edges for every mentioned, authority-linked person:
@@ -212,16 +179,12 @@ object Emit {
     // when k%5≠0, as one exploded (null-compacted) struct array — the
     // former two-branch self-union re-ran the mentioned-distinct + join
     // per branch
-    val viaf = struct(col("uri").as("subj"),
-      lit(Ns.owlSameAs).as("pred"), col("viaf_uri").as("obj_value"),
-      lit(true).as("obj_is_iri"), lit("").as("obj_lang"),
-      lit("").as("obj_dtype"))
+    val viaf = Triple.row(col("uri"), Ns.owlSameAs, col("viaf_uri"),
+      isIri = true)
     val chain = when(col("custkey") % 5 =!= 0,
-      struct(col("uri").as("subj"), lit(Ns.owlSameAs).as("pred"),
-        concat(lit(Ns.person), (col("custkey") - 1).cast("string"))
-          .as("obj_value"),
-        lit(true).as("obj_is_iri"), lit("").as("obj_lang"),
-        lit("").as("obj_dtype")))
+      Triple.row(col("uri"), Ns.owlSameAs,
+        concat(lit(Ns.person), (col("custkey") - 1).cast("string")),
+        isIri = true))
     withMeta.select(explode(array_compact(array(viaf, chain))).as("t"))
       .select(col("t.*"))
   }
@@ -244,16 +207,12 @@ object Emit {
       .withColumn("fd", fd)
     // one window pass, three exploded structs — same rule as the
     // context/activity emission (the self-union replayed the window)
-    val typed = struct(col("ev_uri").as("subj"),
-      lit(Ns.rdfType).as("pred"), lit(Ns.tEvent).as("obj_value"),
-      lit(true).as("obj_is_iri"), lit("").as("obj_lang"), lit("").as("obj_dtype"))
-    val label = struct(col("ev_uri").as("subj"),
-      lit(Ns.rdfsLabel).as("pred"), Fns.snippet(col("text")).as("obj_value"),
-      lit(false).as("obj_is_iri"), lit("en").as("obj_lang"), lit("").as("obj_dtype"))
-    val date = struct(col("ev_uri").as("subj"),
-      lit(Ns.atSomeTimeWithin).as("pred"), col("fd.lexical").as("obj_value"),
-      lit(false).as("obj_is_iri"), lit("").as("obj_lang"),
-      col("fd.dtype").as("obj_dtype"))
+    val e = col("ev_uri")
+    val typed = Triple.row(e, Ns.rdfType, lit(Ns.tEvent), isIri = true)
+    val label = Triple.row(e, Ns.rdfsLabel, Fns.snippet(col("text")),
+      isIri = false, lang = "en")
+    val date = Triple.row(e, Ns.atSomeTimeWithin, col("fd.lexical"),
+      isIri = false, dtype = col("fd.dtype"))
     ev.select(explode(array(typed, label, date)).as("t")).select(col("t.*"))
   }
 
@@ -277,26 +236,13 @@ object Emit {
     * `uber_graph += graph`, `bio_extraction.py:78`). The distinct is the
     * single biggest shuffle of the pipeline — partial aggregation
     * (map-side combine) applies because it's a hash-aggregate over all
-    * columns; AQE coalesces the post-shuffle partitions.
+    * columns; AQE coalesces the post-shuffle partitions. `linked` feeds
+    * five emitters and is read as given: the caller decides whether it is
+    * materialized.
     */
   def allTriples(spark: SparkSession, dir: String,
                  transcripts: DataFrame, linked: DataFrame): DataFrame =
-    // one definition, two shapes: the plain table is the conv-annotated one
-    // minus `conv` (Catalyst prunes the conv/regex work per union branch)
-    allTriplesConv(spark, dir, transcripts, linked).select(tripleCols: _*)
-
-  /** The full graph + a precomputed `conv` column for conv-grouping
-    * consumers (Quads.export, Metrics.convStats). Context/activity rows —
-    * the bulk of the table — carry their conv from emission for free; only
-    * the (post-distinct, much smaller) fact rows pay one regex. Plain
-    * consumers that drop `conv` get the regex pruned away entirely by
-    * Catalyst, so allTriples keeps its exact cost. `linked` feeds five
-    * emitters and is read as given: the caller decides whether it is
-    * materialized. */
-  def allTriplesConv(spark: SparkSession, dir: String,
-                     transcripts: DataFrame, linked: DataFrame): DataFrame =
     factTriples(spark, dir, transcripts, linked)
-      .withColumn("conv", Fns.convOf(col("subj")))
-      .unionAll(contextTriplesConv(linked))
-      .unionAll(activityTriplesConv(linked))
+      .unionAll(contextTriples(linked))
+      .unionAll(activityTriples(linked))
 }

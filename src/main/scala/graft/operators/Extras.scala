@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.functions.Fns
-import graft.model.Ns
+import graft.model.{Ns, Triple}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -162,11 +162,9 @@ object Extras {
     linked.filter(col("kind") === "person")
       .groupBy("conv_id")
       .agg(countDistinct(col("obj_value")).as("n"))
-      .select(concat(lit(Ns.conv), col("conv_id")).as("subj"),
-        lit(Ns.pred + "childrenCount").as("pred"),
-        col("n").cast("string").as("obj_value"),
-        lit(false).as("obj_is_iri"), lit("").as("obj_lang"),
-        lit(Ns.xsdInt).as("obj_dtype"))
+      .select(Triple.cols(concat(lit(Ns.conv), col("conv_id")),
+        Ns.pred + "childrenCount", col("n").cast("string"),
+        isIri = false, dtype = Ns.xsdInt): _*)
 
   /** F15 — real percent-encoding for minted agent URIs
     * (`Mods/modsBib.py:960-961`, AGENTS minting `modsBib.py:998-1009`):

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.model.Ns
+import graft.model.{Ns, Triple}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -40,14 +40,10 @@ object Families {
       when(col("gender") === "female", "Woman").otherwise("Man"))
     // one pass, three exploded structs — the three-branch self-union
     // re-ran the mention filter + dictionary join per branch
-    def s(su: Column, pred: String, obj: Column) =
-      struct(su.as("subj"), lit(pred).as("pred"), obj.as("obj_value"),
-        lit(true).as("obj_is_iri"), lit("").as("obj_lang"),
-        lit("").as("obj_dtype"))
     subj.select(explode(array(
-        s(ctx, Ns.rdfType, lit(Ns.tContext)),
-        s(ctx, Ns.rdfType, lit(Ns.tGenderContext)),
-        s(convUri, Ns.gender, term))).as("t"))
+        Triple.row(ctx, Ns.rdfType, lit(Ns.tContext), isIri = true),
+        Triple.row(ctx, Ns.rdfType, lit(Ns.tGenderContext), isIri = true),
+        Triple.row(convUri, Ns.gender, term, isIri = true))).as("t"))
       .select(col("t.*"))
       .distinct()
   }
@@ -102,14 +98,11 @@ object Families {
       .join(people, Seq("obj_value"), "left") // gender null = not in WRITER_MAP
       .withColumn("prd", element_at(predArr, relIdx + 1))
       .withColumn("esex", element_at(sexArr, relIdx + 1))
-    b.select(convUri.as("subj"),
-      concat(lit(Ns.pred), col("prd")).as("pred"),
+    b.select(Triple.cols(convUri, concat(lit(Ns.pred), col("prd")),
       when(col("gender").isNotNull && upper(col("gender")) =!= col("esex") &&
           col("prd") =!= "interpersonalRelationshipWith",
         concat(convUri, lit("_PLACEHOLDER_"), col("prd")))
-        .otherwise(col("obj_value")).as("obj_value"),
-      lit(true).as("obj_is_iri"), lit("").as("obj_lang"),
-      lit("").as("obj_dtype"))
+        .otherwise(col("obj_value")), isIri = true): _*)
       .distinct()
   }
 
@@ -140,10 +133,8 @@ object Families {
       .withColumn("pos", pos)
       .withColumn("uri", uri)
       .filter(col("uri").isNotNull) // MIDDLE: quirk — plain MIDDLE drops out
-      .select(concat(lit(Ns.conv), col("conv_id")).as("subj"),
-        lit(Ns.pred + "birthPosition").as("pred"),
-        col("uri").as("obj_value"), lit(true).as("obj_is_iri"),
-        lit("").as("obj_lang"), lit("").as("obj_dtype"))
+      .select(Triple.cols(concat(lit(Ns.conv), col("conv_id")),
+        Ns.pred + "birthPosition", col("uri"), isIri = true): _*)
       .distinct()
   }
 
@@ -168,10 +159,8 @@ object Families {
     // self-union re-ran the member filter (and, cold, extraction) per tag
     val tagStructs = maritalTags.map { case (status, m) =>
       when(eid % m === 0,
-        struct(convUri.as("subj"),
-          lit(Ns.pred + "maritalStatusChange").as("pred"),
-          lit(Ns.bio + status).as("obj_value"), lit(true).as("obj_is_iri"),
-          lit("").as("obj_lang"), lit("").as("obj_dtype")))
+        Triple.row(convUri, Ns.pred + "maritalStatusChange",
+          lit(Ns.bio + status), isIri = true))
     }
     members.select(explode(array_compact(array(tagStructs: _*))).as("t"))
       .select(col("t.*")).distinct()
@@ -223,12 +212,10 @@ object Families {
     val convUri = concat(lit(Ns.conv), col("conv_id"))
     codFrame(tr)
       .withColumn("term", term)
-      .select(convUri.as("subj"), lit(Ns.causeOfDeath).as("pred"),
-        col("term").as("obj_value"),
-        col("term").startsWith("http").as("obj_is_iri"),
-        lit("").as("obj_lang"),
-        when(col("term").startsWith("http"), lit(""))
-          .otherwise(lit(Ns.xsdString)).as("obj_dtype"))
+      .select(Triple.cols(convUri, Ns.causeOfDeath, col("term"),
+        isIri = col("term").startsWith("http"),
+        dtype = when(col("term").startsWith("http"), lit(""))
+          .otherwise(lit(Ns.xsdString))): _*)
       .distinct()
   }
 

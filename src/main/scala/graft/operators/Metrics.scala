@@ -18,16 +18,15 @@ object Metrics {
       .agg(count(lit(1)).as("n"))
 
   /** A3: triples-per-conversation statistics (total/max/min/avg), one row.
-    * The conv of a triple is recovered from its subject URI; identity
-    * triples (person/viaf subjects) are out of scope like the reference's
-    * per-file stats. avg is computed as an explicit double division so the
-    * oracle reproduces it bit-for-bit.
+    * The conv of a triple is read off its subject URI (`Fns.convOf`: one
+    * instr + substr per row, no regex); identity triples (person/viaf
+    * subjects) are out of scope like the reference's per-file stats. avg is
+    * computed as an explicit double division so the oracle reproduces it
+    * bit-for-bit.
     */
   def convStats(triples: DataFrame): DataFrame = {
-    val convCol = if (triples.columns.contains("conv")) col("conv")
-      else graft.functions.Fns.convOf(col("subj"))
     val withConv = triples
-      .withColumn("conv", convCol)
+      .withColumn("conv", graft.functions.Fns.convOf(col("subj")))
       .filter(col("conv") =!= "")
     val per = withConv.groupBy("conv").agg(count(lit(1)).as("n"))
     per.agg(
@@ -71,7 +70,7 @@ object Metrics {
     * over the distinct URI set — the data side aggregates to its distinct
     * vocabulary URIs before any join. */
   def labelLookup(triples: DataFrame): DataFrame = {
-    import graft.model.Ns
+    import graft.model.{Ns, Triple}
     val namespaces = Seq(Ns.kg + "type/", Ns.occ)
     def inNs(c: org.apache.spark.sql.Column) =
       namespaces.map(ns => c.startsWith(ns)).reduce(_ || _)
@@ -93,10 +92,8 @@ object Metrics {
     import spark.implicits._
     val vocab = broadcast(Vocabulary.labels.toDF("uri", "label"))
     uris.join(vocab, Seq("uri"))
-      .select(col("uri").as("subj"),
-        lit(Ns.rdfsLabel).as("pred"), col("label").as("obj_value"),
-        lit(false).as("obj_is_iri"), lit("en").as("obj_lang"),
-        lit("").as("obj_dtype"))
+      .select(Triple.cols(col("uri"), Ns.rdfsLabel, col("label"),
+        isIri = false, lang = "en"): _*)
   }
 }
 

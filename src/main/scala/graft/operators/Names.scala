@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.functions.Fns
-import graft.model.Ns
+import graft.model.{Ns, Triple}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -85,12 +85,6 @@ object Names {
     // per branch). The per-conv PersonNameContext type triple is emitted
     // per row — the trailing set-distinct collapses it to one per conv,
     // exactly the old ranked.select(conv).distinct() branch's set.
-    def s(subj: org.apache.spark.sql.Column, pred: String,
-          obj: org.apache.spark.sql.Column, isIri: Boolean,
-          dtype: String = "") =
-      struct(subj.as("subj"), lit(pred).as("pred"), obj.as("obj_value"),
-        lit(isIri).as("obj_is_iri"), lit("").as("obj_lang"),
-        lit(dtype).as("obj_dtype"))
     val nu = col("name_uri")
     val pnctx = concat(lit(Ns.ctx), col("conv_id"), lit("_PersonNameContext_0"))
     val connType = concat(lit(Ns.kg + "type/"), element_at(
@@ -100,28 +94,32 @@ object Names {
     val gUri = concat(lit(Ns.name), Fns.removePunctuation(col("given")))
     val fUri = concat(lit(Ns.name), Fns.removePunctuation(col("family")))
     val rows = Seq(
-      s(nu, Ns.rdfType,
+      Triple.row(nu, Ns.rdfType,
         when(isNick, lit(Ns.tNickName)).otherwise(lit(Ns.tBirthName)),
         isIri = true),
-      s(nu, Ns.rdfsLabel, col("surface"), isIri = false),
-      when(isNick, s(nu, Ns.rdfType, connType, isIri = true)),
+      Triple.row(nu, Ns.rdfsLabel, col("surface"), isIri = false),
+      when(isNick, Triple.row(nu, Ns.rdfType, connType, isIri = true)),
       // WROTEORPUBLISHEDAS analog: assistant-role turns publish under the name
       when(col("role") === "assistant",
-        s(nu, Ns.rdfType, lit(Ns.tAuthorialName), isIri = true)),
-      when(col("rn") === 1, s(nu, Ns.rdfType, lit(Ns.tIndexedName), isIri = true)),
-      when(col("rn") === 1, s(nu, Ns.indexedBy, lit("Orlando"), isIri = false)),
+        Triple.row(nu, Ns.rdfType, lit(Ns.tAuthorialName), isIri = true)),
+      when(col("rn") === 1,
+        Triple.row(nu, Ns.rdfType, lit(Ns.tIndexedName), isIri = true)),
+      when(col("rn") === 1,
+        Triple.row(nu, Ns.indexedBy, lit("Orlando"), isIri = false)),
       // context links all variants EXCEPT the standard entry (name_list[1:])
-      when(col("rn") > 1, s(pnctx, Ns.hasName, nu, isIri = true)),
-      s(pnctx, Ns.rdfType, lit(Ns.tContext), isIri = true),
+      when(col("rn") > 1, Triple.row(pnctx, Ns.hasName, nu, isIri = true)),
+      Triple.row(pnctx, Ns.rdfType, lit(Ns.tContext), isIri = true),
       // birth-name part graph (makeBirthGraph, personname.py:80-107)
-      when(isBirth, s(gUri, Ns.rdfType, lit(Ns.tForename), isIri = true)),
-      when(isBirth, s(gUri, Ns.hasSortOrder, lit("1"), isIri = false, Ns.xsdInt)),
-      when(isBirth, s(gUri, Ns.rdfsLabel, col("given"), isIri = false)),
-      when(isBirth, s(nu, Ns.hasNamePart, gUri, isIri = true)),
-      when(isBirth, s(fUri, Ns.rdfType, lit(Ns.tSurname), isIri = true)),
-      when(isBirth, s(fUri, Ns.hasSortOrder, lit("2"), isIri = false, Ns.xsdInt)),
-      when(isBirth, s(fUri, Ns.rdfsLabel, col("family"), isIri = false)),
-      when(isBirth, s(nu, Ns.hasNamePart, fUri, isIri = true)))
+      when(isBirth, Triple.row(gUri, Ns.rdfType, lit(Ns.tForename), isIri = true)),
+      when(isBirth, Triple.row(gUri, Ns.hasSortOrder, lit("1"),
+        isIri = false, dtype = Ns.xsdInt)),
+      when(isBirth, Triple.row(gUri, Ns.rdfsLabel, col("given"), isIri = false)),
+      when(isBirth, Triple.row(nu, Ns.hasNamePart, gUri, isIri = true)),
+      when(isBirth, Triple.row(fUri, Ns.rdfType, lit(Ns.tSurname), isIri = true)),
+      when(isBirth, Triple.row(fUri, Ns.hasSortOrder, lit("2"),
+        isIri = false, dtype = Ns.xsdInt)),
+      when(isBirth, Triple.row(fUri, Ns.rdfsLabel, col("family"), isIri = false)),
+      when(isBirth, Triple.row(nu, Ns.hasNamePart, fUri, isIri = true)))
     ranked.select(explode(array_compact(array(rows: _*))).as("t"))
       .select(col("t.*"))
       .distinct()

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.functions.Fns
-import graft.model.Ns
+import graft.model.{Ns, Triple}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -53,23 +53,18 @@ object Profiles {
     // harvest ride one exploded array (fixed structs ++ transform of the
     // genre matches) — the former eight-branch self-union replayed the
     // summary filter+window PER BRANCH. Same multiset.
-    def s(subj: org.apache.spark.sql.Column, pred: String,
-          obj: org.apache.spark.sql.Column, isIri: Boolean) =
-      struct(subj.as("subj"), lit(pred).as("pred"), obj.as("obj_value"),
-        lit(isIri).as("obj_is_iri"), lit("").as("obj_lang"),
-        lit("").as("obj_dtype"))
     val fixed = array(
-      s(ctx1, Ns.profile, Fns.limitWords(col("text"), 35), isIri = false),
-      s(ctx1, Ns.rdfType, lit(Ns.tContext), isIri = true),
-      s(ctx2, Ns.rdfType, lit(Ns.tContext), isIri = true),
-      s(oeuvre, Ns.rdfType, lit(Ns.tOeuvre), isIri = true),
-      s(convUri, Ns.bfAuthor, oeuvre, isIri = true),
-      s(oeuvre, Ns.rdfsLabel, concat(col("conv_id"), lit("'s Oeuvre")),
+      Triple.row(ctx1, Ns.profile, Fns.limitWords(col("text"), 35), isIri = false),
+      Triple.row(ctx1, Ns.rdfType, lit(Ns.tContext), isIri = true),
+      Triple.row(ctx2, Ns.rdfType, lit(Ns.tContext), isIri = true),
+      Triple.row(oeuvre, Ns.rdfType, lit(Ns.tOeuvre), isIri = true),
+      Triple.row(convUri, Ns.bfAuthor, oeuvre, isIri = true),
+      Triple.row(oeuvre, Ns.rdfsLabel, concat(col("conv_id"), lit("'s Oeuvre")),
         isIri = false),
-      s(oeuvre, Ns.extent, Fns.limitWords(col("text"), 35), isIri = false))
+      Triple.row(oeuvre, Ns.extent, Fns.limitWords(col("text"), 35), isIri = false))
     val genreRows = transform(
       regexp_extract_all(col("text"), lit("working as ([A-Za-z-]+)"), lit(1)),
-      g => s(ctx2, Ns.genericRangeIncludes, g, isIri = false))
+      g => Triple.row(ctx2, Ns.genericRangeIncludes, g, isIri = false))
     summary.select(explode(concat(fixed, genreRows)).as("t"))
       .select(col("t.*")).distinct()
   }
@@ -111,20 +106,16 @@ object Profiles {
     // the unspecified fallback ride one null-compacted exploded struct
     // array — the former 8-branch self-union re-ran the tagged filter
     // (and, cold, the transcript synthesis) per branch. Same multiset.
-    def s(subj: org.apache.spark.sql.Column, pred: String,
-          obj: org.apache.spark.sql.Column) =
-      struct(subj.as("subj"), lit(pred).as("pred"), obj.as("obj_value"),
-        lit(true).as("obj_is_iri"), lit("").as("obj_lang"),
-        lit("").as("obj_dtype"))
     val catStructs = childlessnessWords.map { case (cat, kws) =>
       when(containsAny(col("ptext"), kws),
-        s(convUri, Ns.reproductiveHistory, lit(Ns.bio + cat)))
+        Triple.row(convUri, Ns.reproductiveHistory, lit(Ns.bio + cat),
+          isIri = true))
     }
     val anyKw = containsAny(col("ptext"),
       childlessnessWords.flatMap(_._2))
     val unspec = when(!anyKw,
-      s(convUri, Ns.unspecifiedReproHist,
-        lit(Ns.bio + "unspecifiedReproductiveHistory")))
+      Triple.row(convUri, Ns.unspecifiedReproHist,
+        lit(Ns.bio + "unspecifiedReproductiveHistory"), isIri = true))
     val catTriples = tagged.select(explode(
       array_compact(array(catStructs :+ unspec: _*))).as("t"))
       .select(col("t.*"))
@@ -135,15 +126,10 @@ object Profiles {
       .withColumn("ord", row_number().over(w))
       .withColumn("ev_uri", concat(lit(Ns.event), col("conv_id"),
         lit("_BurialEvent_"), col("ord").cast("string")))
-    def sb(subj: org.apache.spark.sql.Column, pred: String,
-           obj: org.apache.spark.sql.Column, isIri: Boolean) =
-      struct(subj.as("subj"), lit(pred).as("pred"), obj.as("obj_value"),
-        lit(isIri).as("obj_is_iri"), lit("").as("obj_lang"),
-        lit("").as("obj_dtype"))
     val burialTriples = burial.select(explode(array(
-      sb(col("ev_uri"), Ns.rdfType, lit(Ns.tActivity), isIri = true),
-      sb(col("ev_uri"), Ns.rdfsLabel, lit("Burial Event"), isIri = false),
-      sb(convUri, Ns.burialEvent, col("ev_uri"), isIri = true))).as("t"))
+      Triple.row(col("ev_uri"), Ns.rdfType, lit(Ns.tActivity), isIri = true),
+      Triple.row(col("ev_uri"), Ns.rdfsLabel, lit("Burial Event"), isIri = false),
+      Triple.row(convUri, Ns.burialEvent, col("ev_uri"), isIri = true))).as("t"))
       .select(col("t.*"))
     catTriples.unionAll(burialTriples).distinct()
   }
@@ -177,20 +163,15 @@ object Profiles {
     // one pass, six exploded structs — the six-branch self-union re-ran
     // the filter+projection (and, cold, the transcript synthesis) per
     // branch. Same multiset.
-    def t(subj: org.apache.spark.sql.Column, pred: String,
-          obj: org.apache.spark.sql.Column, isIri: Boolean, lang: String = "") =
-      struct(subj.as("subj"), lit(pred).as("pred"), obj.as("obj_value"),
-        lit(isIri).as("obj_is_iri"), lit(lang).as("obj_lang"),
-        lit("").as("obj_dtype"))
     val c = col("cite_uri")
     b.select(explode(array(
-        t(col("conv_uri"), Ns.refersTo, c, isIri = true),
-        t(c, Ns.rdfType, lit(Ns.tLinguisticObj), isIri = true),
-        t(c, Ns.rdfType, lit(Ns.tCitation), isIri = true),
-        t(c, Ns.rdfsLabel,
+        Triple.row(col("conv_uri"), Ns.refersTo, c, isIri = true),
+        Triple.row(c, Ns.rdfType, lit(Ns.tLinguisticObj), isIri = true),
+        Triple.row(c, Ns.rdfType, lit(Ns.tCitation), isIri = true),
+        Triple.row(c, Ns.rdfsLabel,
           concat(lit("Citation for "), col("conv_id")), isIri = false, lang = "en"),
-        t(c, Ns.referredToBy, col("citing_uri"), isIri = true),
-        t(c, Ns.symbolicContent,
+        Triple.row(c, Ns.referredToBy, col("citing_uri"), isIri = true),
+        Triple.row(c, Ns.symbolicContent,
           col("turn_idx").cast("string"), isIri = false))).as("t"))
       .select(col("t.*"))
       .distinct()
@@ -235,20 +216,16 @@ object Profiles {
         regexp_replace(col("ctx_uri"), "Context", "Event"), lit("_"), col("n")))
     // one window pass, six exploded structs — the six-branch self-union
     // replayed the ordinal window per branch. Same multiset.
-    def t(subj: org.apache.spark.sql.Column, pred: String,
-          obj: org.apache.spark.sql.Column, isIri: Boolean, lang: String = "") =
-      struct(subj.as("subj"), lit(pred).as("pred"), obj.as("obj_value"),
-        lit(isIri).as("obj_is_iri"), lit(lang).as("obj_lang"),
-        lit("").as("obj_dtype"))
+    val (ctx, act) = (col("ctx_uri"), col("act_uri"))
     b.select(explode(array(
-        t(col("ctx_uri"), Ns.rdfType, lit(Ns.tContext), isIri = true),
-        t(col("ctx_uri"), Ns.rdfType,
+        Triple.row(ctx, Ns.rdfType, lit(Ns.tContext), isIri = true),
+        Triple.row(ctx, Ns.rdfType,
           concat(lit(Ns.kg + "type/"), col("fam"), lit("Context")), isIri = true),
-        t(col("ctx_uri"), Ns.pred + "linksActivity", col("act_uri"), isIri = true),
-        t(col("act_uri"), Ns.rdfType, lit(Ns.tActivity), isIri = true),
-        t(col("act_uri"), Ns.rdfType,
+        Triple.row(ctx, Ns.pred + "linksActivity", act, isIri = true),
+        Triple.row(act, Ns.rdfType, lit(Ns.tActivity), isIri = true),
+        Triple.row(act, Ns.rdfType,
           concat(lit(Ns.kg + "event/"), col("fam"), lit("Event")), isIri = true),
-        t(col("act_uri"), Ns.rdfsLabel, col("lab"), isIri = false, lang = "en")))
+        Triple.row(act, Ns.rdfsLabel, col("lab"), isIri = false, lang = "en")))
         .as("t"))
       .select(col("t.*"))
   }

@@ -1,8 +1,8 @@
 package graft.operators
 
 import graft.functions.Fns
-import graft.model.Ns
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.model.{Ns, Triple}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -29,12 +29,6 @@ object Relations {
     * " ".join(findall('^[a-z]+|[A-Z][^A-Z]*', s)). */
   def splitByCasing(s: String): String =
     "^[a-z]+|[A-Z][^A-Z]*".r.findAllIn(s).mkString(" ")
-
-  private def t(df: DataFrame, subj: Column, pred: Column, obj: Column,
-                isIri: Boolean, lang: String = "") =
-    df.select(subj.as("subj"), pred.as("pred"), obj.as("obj_value"),
-      lit(isIri).as("obj_is_iri"), lit(lang).as("obj_lang"),
-      lit("").as("obj_dtype"))
 
   /** The per-conv subject URI (the reference's `person.uri`): the linked
     * turn-0 first person mention — the same subject definition the gender
@@ -139,16 +133,12 @@ object Relations {
     // both context-type triples ride one exploded pass over the tag frame
     // (the two-branch self-union re-scanned it per branch)
     val ctxTriples = tags.select(explode(array(
-        struct(col("ctx").as("subj"), lit(Ns.rdfType).as("pred"),
-          lit(Ns.tContext).as("obj_value"), lit(true).as("obj_is_iri"),
-          lit("").as("obj_lang"), lit("").as("obj_dtype")),
-        struct(col("ctx").as("subj"), lit(Ns.rdfType).as("pred"),
-          lit(Ns.kg + "type/" + ctxType).as("obj_value"),
-          lit(true).as("obj_is_iri"), lit("").as("obj_lang"),
-          lit("").as("obj_dtype")))).as("t"))
+        Triple.row(col("ctx"), Ns.rdfType, lit(Ns.tContext), isIri = true),
+        Triple.row(col("ctx"), Ns.rdfType, lit(Ns.kg + "type/" + ctxType),
+          isIri = true))).as("t"))
       .select(col("t.*"))
-    val relTriples = t(rels, convUri,
-      concat(lit(Ns.pred), col("prd")), col("obj_value"), isIri = true)
+    val relTriples = rels.select(Triple.cols(convUri,
+      concat(lit(Ns.pred), col("prd")), col("obj_value"), isIri = true): _*)
     // one Activity per (tag, distinct predicate); event_count starts at 1
     // in attribute-insertion (= first-midx) order
     val acts = rels.groupBy("conv_id", "turn_idx", "prd")
@@ -168,17 +158,13 @@ object Relations {
     // all four activity triples ride one exploded pass over the
     // materialized activity frame — the former 4-branch self-union
     // re-scanned the checkpoint per branch
-    def s(subj: Column, pred: String, obj: Column, isIri: Boolean,
-          lang: String = "") =
-      struct(subj.as("subj"), lit(pred).as("pred"), obj.as("obj_value"),
-        lit(isIri).as("obj_is_iri"), lit(lang).as("obj_lang"),
-        lit("").as("obj_dtype"))
     val actsCk = acts.localCheckpoint()
     val actTriples = actsCk.select(explode(array(
-        s(col("ctx"), Ns.pred + "linksActivity", col("act"), isIri = true),
-        s(col("act"), Ns.rdfType, lit(Ns.tActivity), isIri = true),
-        s(col("act"), Ns.rdfType, lit(eventType), isIri = true),
-        s(col("act"), Ns.rdfsLabel, col("lab"), isIri = false, lang = "en")))
+        Triple.row(col("ctx"), Ns.pred + "linksActivity", col("act"), isIri = true),
+        Triple.row(col("act"), Ns.rdfType, lit(Ns.tActivity), isIri = true),
+        Triple.row(col("act"), Ns.rdfType, lit(eventType), isIri = true),
+        Triple.row(col("act"), Ns.rdfsLabel, col("lab"), isIri = false,
+          lang = "en")))
         .as("t"))
       .select(col("t.*"))
     ctxTriples.unionAll(relTriples).unionAll(actTriples).distinct()
@@ -239,19 +225,16 @@ object Relations {
     // same routing-around-distinct invariant as the other context
     // families. ONE window pass, seven exploded structs — the former
     // seven-branch self-union replayed the ordinal window per branch.
-    def s(subj: Column, pred: Column, obj: Column, isIri: Boolean,
-          lang: String = "") =
-      struct(subj.as("subj"), pred.as("pred"), obj.as("obj_value"),
-        lit(isIri).as("obj_is_iri"), lit(lang).as("obj_lang"),
-        lit("").as("obj_dtype"))
+    val (ctx, act) = (col("ctx"), col("act"))
     b.select(explode(array(
-        s(col("ctx"), lit(Ns.rdfType), lit(Ns.tContext), isIri = true),
-        s(col("ctx"), lit(Ns.rdfType), ctypeUri, isIri = true),
-        s(convUri, concat(lit(Ns.pred), col("fpred")), col("term"), isIri = true),
-        s(col("ctx"), lit(Ns.pred + "linksActivity"), col("act"), isIri = true),
-        s(col("act"), lit(Ns.rdfType), lit(Ns.tActivity), isIri = true),
-        s(col("act"), lit(Ns.rdfType), ctypeUri, isIri = true),
-        s(col("act"), lit(Ns.rdfsLabel), col("lab"), isIri = false, lang = "en")))
+        Triple.row(ctx, Ns.rdfType, lit(Ns.tContext), isIri = true),
+        Triple.row(ctx, Ns.rdfType, ctypeUri, isIri = true),
+        Triple.row(convUri, concat(lit(Ns.pred), col("fpred")), col("term"),
+          isIri = true),
+        Triple.row(ctx, Ns.pred + "linksActivity", act, isIri = true),
+        Triple.row(act, Ns.rdfType, lit(Ns.tActivity), isIri = true),
+        Triple.row(act, Ns.rdfType, ctypeUri, isIri = true),
+        Triple.row(act, Ns.rdfsLabel, col("lab"), isIri = false, lang = "en")))
         .as("t"))
       .select(col("t.*"))
   }

@@ -29,31 +29,30 @@ object SameAs {
     * the identical (node, min-of-component) map. */
   val DriverClosureCap = 100000L
 
+  /** Pass cap of the iterative closure — far above the 3-5 passes the
+    * pointer-jumping propagation needs on sameAs graphs. */
+  val MaxClosurePasses = 20
+
   /** edges(a, b) → (node, canon): every node of the edge set mapped to the
     * lexicographic min of its connected component.
     *
     * Dispatch costs ONE Spark job: a single limit(cap+1) collect both
     * answers "is it small?" and, when yes, IS the edge set the union-find
     * consumes (the former count-then-collect probe computed the edge
-    * extraction twice). Callers that already know the edge count (a
-    * materialized stage) pass `countHint` to skip even that collect on the
-    * large-scale path. */
-  def closure(edges: DataFrame, maxIter: Int = 20,
-              countHint: Option[Long] = None): DataFrame = {
-    if (countHint.exists(_ > DriverClosureCap))
-      return closureIterative(edges, maxIter)
+    * extraction twice). */
+  def closure(edges: DataFrame): DataFrame = {
     val probe = edges.select(col("a"), col("b"))
       .limit((DriverClosureCap + 1).toInt).collect()
     if (probe.length <= DriverClosureCap)
       closureOnDriver(edges.sparkSession,
         probe.map(r => (r.getString(0), r.getString(1))))
-    else closureIterative(edges, maxIter)
+    else closureIterative(edges)
   }
 
   /** The distributed min-label-propagation closure — the big-edge-set
     * path; kept equivalence-tested against the driver fast path
     * (Round4OpsSpec). */
-  private[graft] def closureIterative(edges: DataFrame, maxIter: Int = 20): DataFrame = {
+  private[graft] def closureIterative(edges: DataFrame): DataFrame = {
     val spark = edges.sparkSession
     val (und, undIds) = graft.Caches.trackedCheckpoint(
       edges.select(col("a"), col("b"))
@@ -64,7 +63,7 @@ object SameAs {
         .withColumn("label", col("node")))
     var i = 0
     var changed = 1L
-    while (changed > 0 && i < maxIter) {
+    while (changed > 0 && i < MaxClosurePasses) {
       // hop: take the min label across every edge
       val msgs = und.join(labels, und("a") === labels("node"))
         .select(und("b").as("node"), col("label"))
@@ -79,7 +78,7 @@ object SameAs {
       // convergence probe every 2nd iteration — with pointer jumping most
       // closures finish in 2-3 passes, so probing each pass would spend as
       // many driver jobs on probes as on work
-      if (i % 2 == 1 || i >= maxIter - 1) {
+      if (i % 2 == 1 || i >= MaxClosurePasses - 1) {
         changed = next.as("n")
           .join(labels.as("o"), col("n.node") === col("o.node"))
           .filter(col("n.label") =!= col("o.label"))
@@ -161,8 +160,7 @@ object SameAs {
     */
   val canonDomain: Seq[String] = Seq(Ns.person, Ns.viaf)
 
-  def canonicalize(triples: DataFrame, canon: DataFrame,
-                   canonCount: Option[Long] = None): DataFrame = {
+  def canonicalize(triples: DataFrame, canon: DataFrame): DataFrame = {
     def inDomain(c: org.apache.spark.sql.Column) =
       canonDomain.map(c.startsWith(_)).reduce(_ || _)
     val isCand = inDomain(col("subj")) ||
@@ -173,16 +171,16 @@ object SameAs {
     // from AQE — without an explicit hint these joins plan as full shuffles
     // of the fact table. Broadcast while the identity map is broadcastable;
     // beyond the threshold fall back to shuffle joins + AQE skew splitting.
-    // The size check costs ZERO Spark jobs on the common paths: callers
-    // that know the cluster count pass it, and the driver-closure fast
-    // path's map is a LocalRelation whose size is readable from the plan
-    // (the former unconditional limit(3M).count() probe ran one extra job
-    // over the map per canon query — VERDICT r5 #6).
-    val known = canonCount.orElse(canon.queryExecution.analyzed match {
+    // The size check costs ZERO Spark jobs on the common path: the
+    // driver-closure fast path's map is a LocalRelation whose size is
+    // readable from the plan (the former unconditional limit(3M).count()
+    // probe ran one extra job over the map per canon query — VERDICT r5
+    // #6). Only the iterative closure's map pays the bounded count.
+    val known = canon.queryExecution.analyzed match {
       case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
         Some(l.data.length.toLong)
       case _ => None
-    })
+    }
     val small = known.getOrElse(canon.limit(3000001).count()) <= 3000000
     def maybeBroadcast(df: DataFrame): DataFrame =
       if (small) broadcast(df) else df

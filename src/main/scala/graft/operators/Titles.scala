@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.functions.Fns
-import graft.model.Ns
+import graft.model.{Ns, Triple}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -87,25 +87,21 @@ object Titles {
       case (acc, (from, to)) =>
         when(lower(col("ty")) === from, lit(Ns.kg + "type/" + to)).otherwise(acc)
     }
-    def t(df: DataFrame, subj: org.apache.spark.sql.Column, pred: String,
-          obj: org.apache.spark.sql.Column, isIri: Boolean) =
-      df.select(subj.as("subj"), lit(pred).as("pred"), obj.as("obj_value"),
-        lit(isIri).as("obj_is_iri"), lit("").as("obj_lang"),
-        lit("").as("obj_dtype"))
-    val typed = t(d, col("title_uri"), Ns.rdfType, lit(Ns.tTitle), isIri = true)
-    val labels = t(d.select(col("title_uri"), explode(col("labels")).as("lbl")),
-      col("title_uri"), Ns.rdfsLabel, col("lbl"), isIri = false)
-    val classes = t(
-      d.select(col("title_uri"), explode(col("types")).as("ty"))
-        .withColumn("mapped", mappedType).filter(col("mapped").isNotNull),
-      col("title_uri"), Ns.rdfType, col("mapped"), isIri = true)
+    val tu = col("title_uri")
+    val typed = d.select(Triple.cols(tu, Ns.rdfType, lit(Ns.tTitle),
+      isIri = true): _*)
+    val labels = d.select(tu, explode(col("labels")).as("lbl"))
+      .select(Triple.cols(tu, Ns.rdfsLabel, col("lbl"), isIri = false): _*)
+    val classes = d.select(tu, explode(col("types")).as("ty"))
+      .withColumn("mapped", mappedType).filter(col("mapped").isNotNull)
+      .select(Triple.cols(tu, Ns.rdfType, col("mapped"), isIri = true): _*)
     val mentions = tr.select(col("conv_id"),
       explode(regexp_extract_all(col("text"),
         lit("reading (Title_[0-9]+)"), lit(1))).as("key"))
-    val links = t(
-      mentions.join(broadcast(d.select(col("key"), col("title_uri"))), Seq("key")),
-      concat(lit(Ns.conv), col("conv_id")), Ns.mentionsTitle,
-      col("title_uri"), isIri = true)
+    val links = mentions
+      .join(broadcast(d.select(col("key"), tu)), Seq("key"))
+      .select(Triple.cols(concat(lit(Ns.conv), col("conv_id")),
+        Ns.mentionsTitle, tu, isIri = true): _*)
     typed.unionAll(labels).unionAll(classes).unionAll(links).distinct()
   }
 }

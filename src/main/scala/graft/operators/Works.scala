@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.model.Ns
+import graft.model.{Ns, Triple}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -45,21 +45,16 @@ object Works {
     // type + author ride one exploded pass — the two-branch self-union
     // scanned orders twice
     val typedAuthor = orders.select(explode(array(
-      struct(workUri.as("subj"),
-        lit(Ns.rdfType).as("pred"), lit(Ns.tWork).as("obj_value"),
-        lit(true).as("obj_is_iri"), lit("").as("obj_lang"), lit("").as("obj_dtype")),
-      struct(workUri.as("subj"),
-        lit(Ns.authoredBy).as("pred"),
-        concat(lit(Ns.person), col("o_custkey").cast("string")).as("obj_value"),
-        lit(true).as("obj_is_iri"), lit("").as("obj_lang"), lit("").as("obj_dtype"))))
+      Triple.row(workUri, Ns.rdfType, lit(Ns.tWork), isIri = true),
+      Triple.row(workUri, Ns.authoredBy,
+        concat(lit(Ns.person), col("o_custkey").cast("string")), isIri = true)))
       .as("t")).select(col("t.*"))
     val genres = orders.select(col("o_orderkey"), workUri.as("work_uri"))
       .join(genreMap(lineitem).hint("merge"), Seq("o_orderkey"))
       .select(col("work_uri").as("subj"), lit(Ns.hasGenre).as("pred"),
         explode(col("genres")).as("g"))
-      .select(col("subj"), col("pred"),
-        concat(lit(Ns.genre), col("g")).as("obj_value"),
-        lit(true).as("obj_is_iri"), lit("").as("obj_lang"), lit("").as("obj_dtype"))
+      .select(Triple.cols(col("subj"), col("pred"),
+        concat(lit(Ns.genre), col("g")), isIri = true): _*)
     // relatedItems (one level of `modsBib.py:1110-1134`'s recursive related
     // records): each work relates to the author's previous work — a window
     // over the second fact table, deterministic (custkey, orderkey) order
@@ -69,9 +64,8 @@ object Works {
       .select(col("o_custkey"), col("o_orderkey"), workUri.as("work_uri"))
       .withColumn("prev", lag(col("o_orderkey"), 1).over(w))
       .filter(col("prev").isNotNull)
-      .select(col("work_uri").as("subj"), lit(Ns.relatedWork).as("pred"),
-        concat(lit(Ns.work), col("prev").cast("string")).as("obj_value"),
-        lit(true).as("obj_is_iri"), lit("").as("obj_lang"), lit("").as("obj_dtype"))
+      .select(Triple.cols(col("work_uri"), Ns.relatedWork,
+        concat(lit(Ns.work), col("prev").cast("string")), isIri = true): _*)
     typedAuthor.unionAll(genres).unionAll(related)
   }
 
@@ -157,48 +151,44 @@ object Works {
     // unconditional, 8 publisher-gated, 2 place-gated) ride one exploded
     // null-compacted struct array — the former 23-branch self-union
     // re-scanned the checkpoint per branch. Same multiset.
-    def t(subj: org.apache.spark.sql.Column, pred: String,
-          obj: org.apache.spark.sql.Column, isIri: Boolean,
-          lang: String = "", dtype: String = "") =
-      struct(subj.as("subj"), lit(pred).as("pred"), obj.as("obj_value"),
-        lit(isIri).as("obj_is_iri"), lit(lang).as("obj_lang"),
-        lit(dtype).as("obj_dtype"))
     val o = col("origin_uri")
     val personType = when(ck % 10 === 0, lit(Ns.tActor)) // corporate analog
       .otherwise(lit(Ns.tPersonE21))
     val always = Seq(
-      t(o, Ns.rdfType, lit(Ns.tCreation), isIri = true),
-      t(o, Ns.hasType, lit(Ns.tProduction), isIri = true),
-      t(o, Ns.hasType, lit(Ns.tPublishing), isIri = true),
-      t(o, Ns.rdfsLabel, concat(lit("creation of Work "), ok.cast("string")),
+      Triple.row(o, Ns.rdfType, lit(Ns.tCreation), isIri = true),
+      Triple.row(o, Ns.hasType, lit(Ns.tProduction), isIri = true),
+      Triple.row(o, Ns.hasType, lit(Ns.tPublishing), isIri = true),
+      Triple.row(o, Ns.rdfsLabel,
+        concat(lit("creation of Work "), ok.cast("string")),
         isIri = false, lang = "en"),
-      t(o, Ns.hasCreated, col("work_uri"), isIri = true),
-      t(o, Ns.atSomeTimeWithin, col("o_orderdate").cast("string"),
+      Triple.row(o, Ns.hasCreated, col("work_uri"), isIri = true),
+      Triple.row(o, Ns.atSomeTimeWithin, col("o_orderdate").cast("string"),
         isIri = false, dtype = Ns.xsdDate),
-      t(col("person_uri"), Ns.rdfsLabel, col("cname"), isIri = false),
-      t(col("person_uri"), Ns.rdfType, personType, isIri = true),
-      t(col("agent_uri"), Ns.rdfsLabel,
+      Triple.row(col("person_uri"), Ns.rdfsLabel, col("cname"), isIri = false),
+      Triple.row(col("person_uri"), Ns.rdfType, personType, isIri = true),
+      Triple.row(col("agent_uri"), Ns.rdfsLabel,
         concat(col("cname"), lit(" in role of "), col("role_name")),
         isIri = false, lang = "en"),
-      t(col("agent_uri"), Ns.rdfType, lit(Ns.tPC14), isIri = true),
-      t(col("agent_uri"), Ns.hasRange, col("person_uri"), isIri = true),
-      t(col("agent_uri"), Ns.inRoleOf, col("role_uri"), isIri = true),
-      t(o, Ns.isDomainOf, col("agent_uri"), isIri = true))
+      Triple.row(col("agent_uri"), Ns.rdfType, lit(Ns.tPC14), isIri = true),
+      Triple.row(col("agent_uri"), Ns.hasRange, col("person_uri"), isIri = true),
+      Triple.row(col("agent_uri"), Ns.inRoleOf, col("role_uri"), isIri = true),
+      Triple.row(o, Ns.isDomainOf, col("agent_uri"), isIri = true))
     val pubRows = Seq(
-      t(col("pub_uri"), Ns.rdfType, lit(Ns.tActor), isIri = true),
-      t(col("pub_uri"), Ns.altLabel, col("pub_name"), isIri = false),
-      t(col("pub_uri"), Ns.hasType, lit(Ns.role + "pbl"), isIri = true),
-      t(col("pubrole_uri"), Ns.rdfsLabel,
+      Triple.row(col("pub_uri"), Ns.rdfType, lit(Ns.tActor), isIri = true),
+      Triple.row(col("pub_uri"), Ns.altLabel, col("pub_name"), isIri = false),
+      Triple.row(col("pub_uri"), Ns.hasType, lit(Ns.role + "pbl"), isIri = true),
+      Triple.row(col("pubrole_uri"), Ns.rdfsLabel,
         concat(col("pub_name"), lit(" in the role of publisher")),
         isIri = false, lang = "en"),
-      t(col("pubrole_uri"), Ns.rdfType, lit(Ns.tPC14), isIri = true),
-      t(col("pubrole_uri"), Ns.hasRange, col("pub_uri"), isIri = true),
-      t(col("pubrole_uri"), Ns.inRoleOf, lit(Ns.role + "pbl"), isIri = true),
-      t(o, Ns.isDomainOf, col("pubrole_uri"), isIri = true)
+      Triple.row(col("pubrole_uri"), Ns.rdfType, lit(Ns.tPC14), isIri = true),
+      Triple.row(col("pubrole_uri"), Ns.hasRange, col("pub_uri"), isIri = true),
+      Triple.row(col("pubrole_uri"), Ns.inRoleOf, lit(Ns.role + "pbl"),
+        isIri = true),
+      Triple.row(o, Ns.isDomainOf, col("pubrole_uri"), isIri = true)
     ).map(s => when(ok % 4 =!= 0, s))
     val placeRows = Seq(
-      t(o, Ns.tookPlaceAt, col("place_uri"), isIri = true),
-      t(col("place_uri"), Ns.rdfType, lit(Ns.tPlace), isIri = true)
+      Triple.row(o, Ns.tookPlaceAt, col("place_uri"), isIri = true),
+      Triple.row(col("place_uri"), Ns.rdfType, lit(Ns.tPlace), isIri = true)
     ).map(s => when(ok % 5 =!= 0, s))
     b.select(explode(array_compact(
         array(always ++ pubRows ++ placeRows: _*))).as("t"))
