@@ -5,8 +5,9 @@ package graft
   * Headline = the end-to-end staged KG pipeline (graft.Run.execute: scan →
   * extract → link → emit → closure → canonicalize, all stages materialized)
   * reported as triples/sec and turns/sec — the BASELINE.json metric. The
-  * per-query map times each SparkEntry query cold (scan included), matching
-  * how the driver's correctness gate runs them.
+  * per-query map times each SparkEntry query warm: every query runs over
+  * one stage graph whose shared frames are materialized once up front, so a
+  * query's time is its own operator cost.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -27,8 +28,7 @@ object Bench {
       // ~30 MB parquet file, which the 128 MB default reads as ONE task —
       // serializing the whole extraction+linking front of the pipeline.
       // 8 MB splits keep the scan parallel; at 100 TB the default is right.
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_SPLIT_BYTES", "8m"))
+      .config("spark.sql.files.maxPartitionBytes", "8m")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
@@ -109,63 +109,49 @@ object Bench {
       .map(_.split(",").toSet).getOrElse(Set.empty[String])
     val allQueries =
       if (e2eOnly) Seq.empty
-      else SparkEntry.queries.toSeq.sortBy(_._1)
+      else SparkEntry.stages.toSeq.sortBy(_._1)
         .filter { case (n, _) => only.isEmpty || only.contains(n) }
-    // Default mode is WARM: the shared pipeline stages are persisted ONCE
-    // and every query runs against them, so a query's time is its own
-    // operator cost — not the cost of rebuilding the whole pipeline cold
-    // (which made every export/uber query read as "slow" and hid real
-    // per-operator regressions inside rebuild noise). The e2e headline
-    // above stays fully cold. SPARK_GRAFT_COLD_QUERIES=1 restores the old
-    // cold-per-query behavior (cache cleared between queries).
-    val coldQueries = sys.env.get("SPARK_GRAFT_COLD_QUERIES").contains("1")
+    // WARM: every query runs over one stage graph, whose shared frames are
+    // materialized once here, so a query's time is its own operator cost —
+    // not the cost of rebuilding the whole pipeline cold (which made every
+    // export/uber query read as "slow" and hid real per-operator
+    // regressions inside rebuild noise). The e2e headline above stays
+    // fully cold.
     val sc = spark.sparkContext
+    val graph = new Pipeline(spark, sfDir)
     var warmupSec = 0.0
-    var warm = Set.empty[Int] // the warm stages' blocks: kept for the pass
-    if (allQueries.nonEmpty && !coldQueries) {
+    var warm = Set.empty[Int] // the graph's blocks: kept for the pass
+    if (allQueries.nonEmpty) {
       val before = sc.getPersistentRDDs.keySet.toSet
-      val shared = Seq(
-        "transcripts" -> Pipeline.transcripts(spark, sfDir),
-        "linked" -> Pipeline.linked(spark, sfDir),
-        "triples" -> Pipeline.triples(spark, sfDir))
       val w0 = System.nanoTime()
-      shared.foreach { case (_, df) =>
-        df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        df.count() // eager: downstream branches must never race the cache
-      }
+      graph.triples.count() // fills transcripts, mentions, linked, triples
       warm = sc.getPersistentRDDs.keySet.toSet -- before
       warmupSec = (System.nanoTime() - w0) / 1e9
       System.err.println(f"[bench] pipeline warm-up $warmupSec%8.2fs")
     }
-    // median-of-N per query (default 3): a single loud sandbox window can
-    // no longer ship a 10×-outlier per-query number as the round's record
-    val qReps = sys.env.getOrElse("SPARK_GRAFT_QUERY_REPS", "3").toInt
+    // median of 3 per query: a single loud sandbox window can no longer
+    // ship a 10×-outlier per-query number as the round's record
+    val qReps = 3
     val results = allQueries.map { case (name, fn) =>
       val times = (1 to qReps).map { _ =>
         val q0 = System.nanoTime()
         // a crashed query records its elapsed time AND lands in `failed` —
         // never a bogus fast timing that would read as a speedup
-        val ok = try { fn(spark, sfDir).count(); true }
+        val ok = try { fn(graph).count(); true }
         catch { case e: Throwable =>
           System.err.println(s"[bench] $name FAILED: ${e.getMessage}"); false }
-        val sec = (System.nanoTime() - q0) / 1e9
-        if (coldQueries) { // cold mode isolates reps AND queries fully
-          spark.catalog.clearCache(); Caches.releaseAll(spark)
-        }
-        (sec, ok)
+        ((System.nanoTime() - q0) / 1e9, ok)
       }
       val secs = times.map(_._1).sorted
       val sec = secs(secs.size / 2) // upper median; exact middle for odd N
       val ok = times.forall(_._2)
       System.err.println(f"[bench] $name%-22s $sec%8.2fs  " +
         f"(reps ${secs.map(s => f"$s%.2f").mkString("/")}%s)")
-      // warm mode: free everything the query materialized; the warm
-      // stages survive, and plain cache entries stay for the pass
-      if (!coldQueries)
-        Caches.unpersistIds(spark, sc.getPersistentRDDs.keySet.toSet -- warm)
+      // free everything the query materialized; the graph's frames survive
+      Caches.unpersistIds(spark, sc.getPersistentRDDs.keySet.toSet -- warm)
       (name, sec, ok)
     }
-    if (!coldQueries) spark.catalog.clearCache()
+    spark.catalog.clearCache()
     Caches.releaseAll(spark) // end of pass: zero residual checkpoint blocks
     val qs = results.map { case (k, v, _) => "\"" + k + "\":" + f"$v%.3f" }
       .mkString("{", ",", "}")
@@ -175,9 +161,8 @@ object Bench {
     val tps = (triples / e2eSec).toLong
     val rps = (turns / e2eSec).toLong
     val qTotal = results.map(_._2).sum
-    val qMode = if (coldQueries) "cold" else "warm"
     val json =
-      f"""{"metric":"kg_pipeline_e2e","value":$e2eSec%.3f,"unit":"sec","queries":$qs%s,"failed":$failed%s,"sf":"$sfDir%s","cpus":$cpus%s,"e2e_reps":${e2eSecs.map(s => f"$s%.3f").mkString("[", ",", "]")}%s,"turns":$turns%d,"triples":$triples%d,"canon_triples":$canonTriples%d,"triples_per_sec":$tps%d,"turns_per_sec":$rps%d,"query_total_sec":$qTotal%.3f,"query_mode":"$qMode%s","warmup_sec":$warmupSec%.3f}"""
+      f"""{"metric":"kg_pipeline_e2e","value":$e2eSec%.3f,"unit":"sec","queries":$qs%s,"failed":$failed%s,"sf":"$sfDir%s","cpus":$cpus%s,"e2e_reps":${e2eSecs.map(s => f"$s%.3f").mkString("[", ",", "]")}%s,"turns":$turns%d,"triples":$triples%d,"canon_triples":$canonTriples%d,"triples_per_sec":$tps%d,"turns_per_sec":$rps%d,"query_total_sec":$qTotal%.3f,"query_mode":"warm","warmup_sec":$warmupSec%.3f}"""
     println(json)
     // belt-and-braces: also drop the line where a stdout-parsing failure
     // can't lose it

@@ -7,35 +7,32 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** End-to-end stage wiring (SURVEY.md §3.1 Spark trace):
+/** The stage graph of one input (SURVEY.md §3.1 Spark trace):
   * transcripts → mentions → broadcast-linked → triple emit → sameAs closure
-  * → canonical triple table. Each stage is exposed as a DataFrame factory so
-  * SparkEntry.queries can surface any intermediate for the correctness gate.
+  * → canonical triple table.
+  *
+  * The four shared frames (`transcripts`, `mentions`, `linked`, `triples`)
+  * are built once per graph and persisted on first use, so every stage and
+  * query of the graph reads the same frames. The persist is lazy (no eager
+  * count): the first action that reads a frame fills it. The harness frees
+  * them (`spark.catalog.clearCache()` + `Caches.releaseAll`). The other
+  * stages are plans over those frames, built on each call.
   */
-object Pipeline {
+final class Pipeline(val spark: SparkSession, val dir: String) {
 
-  def transcripts(s: SparkSession, d: String): DataFrame =
-    SynthTranscripts(s, d)
+  private def shared(df: DataFrame): DataFrame =
+    df.persist(StorageLevel.MEMORY_AND_DISK)
 
-  def mentions(s: SparkSession, d: String): DataFrame =
-    Mentions.extract(transcripts(s, d))
+  lazy val transcripts: DataFrame = shared(Pipeline.transcripts(spark, dir))
 
-  def linked(s: SparkSession, d: String): DataFrame =
-    Link.linkAll(s, d, mentions(s, d))
+  lazy val mentions: DataFrame = shared(Mentions.extract(transcripts))
 
-  def triples(s: SparkSession, d: String): DataFrame =
-    Emit.allTriples(s, d, transcripts(s, d), sharedLinked(s, d))
+  lazy val linked: DataFrame = shared(Link.linkAll(spark, dir, mentions))
 
-  /** `linked` for the factories that fan it out to several emitters,
-    * persisted here once. A persist, not a checkpoint: the cache manager
-    * matches it by plan, so a caller that already cached `linked` (Bench's
-    * warm stages) has its cache substituted. The harness frees it
-    * (`Caches.releaseAll`). */
-  private def sharedLinked(s: SparkSession, d: String): DataFrame =
-    linked(s, d).persist(StorageLevel.MEMORY_AND_DISK)
+  lazy val triples: DataFrame =
+    shared(Emit.allTriples(spark, dir, transcripts, linked))
 
-  def sameAsClusters(s: SparkSession, d: String): DataFrame =
-    SameAs.closure(SameAs.edgesOf(triples(s, d)))
+  def sameAsClusters: DataFrame = SameAs.closure(SameAs.edgesOf(triples))
 
   /** The canonical triple table. Only the fact triples are materialized
     * (localCheckpoint): they feed the edge extraction and both rewrite
@@ -46,21 +43,20 @@ object Pipeline {
     * entirely. Measured (local[2] × scale-19 compute-only, interleaved
     * A/B): 55.7-57.7 s vs 248-355 s for a full-table checkpoint — the
     * 58.7M-row copy materializes every string column and spills. */
-  def canonTriples(s: SparkSession, d: String): DataFrame = {
-    val l = sharedLinked(s, d)
-    val facts = Emit.factTriples(s, d, transcripts(s, d), l)
+  def canonTriples: DataFrame = {
+    val facts = Emit.factTriples(spark, dir, transcripts, linked)
       .localCheckpoint()
     val canon = SameAs.closure(SameAs.edgesOf(facts))
     SameAs.canonicalize(facts, canon)
-      .unionAll(Emit.contextTriples(l))
-      .unionAll(Emit.activityTriples(l)) // date/cert objects — canon-inert
+      .unionAll(Emit.contextTriples(linked))
+      .unionAll(Emit.activityTriples(linked)) // date/cert objects — canon-inert
   }
 
   /** Context ordinals (W1/A5) surfaced directly for verification — the
     * SAME frame emission uses (Emit.ctxFrame), so the verified ordinals and
     * the minted context URIs can never drift apart. */
-  def ordinals(s: SparkSession, d: String): DataFrame =
-    Emit.ctxFrame(linked(s, d))
+  def ordinals: DataFrame =
+    Emit.ctxFrame(linked)
       .select("conv_id", "turn_idx", "kind", "midx", "ordinal", "ctx_uri")
 
   /** W2 "closest heading": each turn gets the text of the nearest
@@ -68,14 +64,13 @@ object Pipeline {
     * (`Utils/context.py:61-92`). Pure window functions, co-partitioned with
     * the conv bucketing — one shuffle on conv_id.
     */
-  def headings(s: SparkSession, d: String): DataFrame = {
-    val tr = transcripts(s, d)
+  def headings: DataFrame = {
     val h = when(col("role") === "system", col("text"))
     val before = Window.partitionBy("conv_id").orderBy("turn_idx")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val after = Window.partitionBy("conv_id").orderBy("turn_idx")
       .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    tr.select(col("conv_id"), col("turn_idx"),
+    transcripts.select(col("conv_id"), col("turn_idx"),
       coalesce(
         last(h, ignoreNulls = true).over(before),
         first(h, ignoreNulls = true).over(after),
@@ -87,10 +82,21 @@ object Pipeline {
     * Order key is document order (turn_idx, midx) packed into one BIGINT
     * with a 10^6 radix — collision-free for any realistic mention count
     * per turn and overflow-free for any turn index. */
-  def firstPerson(s: SparkSession, d: String): DataFrame =
-    linked(s, d).filter(col("kind") === "person")
+  def firstPerson: DataFrame =
+    linked.filter(col("kind") === "person")
       .groupBy("conv_id")
       .agg(min_by(col("obj_value"),
         col("turn_idx").cast("long") * 1000000L + col("midx"))
         .as("first_person"))
+}
+
+object Pipeline {
+
+  /** The source plan, unpersisted: `Run` lays it out itself. */
+  def transcripts(s: SparkSession, d: String): DataFrame =
+    SynthTranscripts(s, d)
+
+  /** The canonical triple table of a fresh graph over `d`. */
+  def canonTriples(s: SparkSession, d: String): DataFrame =
+    new Pipeline(s, d).canonTriples
 }

@@ -720,7 +720,7 @@ WHERE b.dbref IS NULL OR b.dbref >= 3"""))
     * is wrapped by NAME so fragment column order can never scramble the
     * union. kg_labels is excluded — reviewTerms is a checker over the
     * graph, not an emitter into it. */
-  private[oracle] val uberParts: Seq[String] = Seq(
+  private[graft] val uberParts: Seq[String] = Seq(
     "kg_triples", "kg_freestanding", "kg_children", "kg_works",
     "kg_works_agents", "kg_names", "kg_titles", "kg_writing",
     "kg_lifeinfo", "kg_citations", "kg_other_contexts",

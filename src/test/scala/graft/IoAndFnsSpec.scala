@@ -10,8 +10,9 @@ class NTriplesSpec extends SparkSpec {
   import spark.implicits._
 
   test("export → parse round-trips the emitted triple subset exactly") {
-    val tr = Pipeline.triples(spark, sfDir).as[Triple].collect().toSet
-    val lines = NTriples.export(Pipeline.triples(spark, sfDir))
+    val triples = new Pipeline(spark, sfDir).triples
+    val tr = triples.as[Triple].collect().toSet
+    val lines = NTriples.export(triples)
     val back = NTriples.parse(lines).as[Triple].collect().toSet
     assert(back == tr)
   }
@@ -29,9 +30,9 @@ class NTriplesSpec extends SparkSpec {
   }
 
   test("Turtle export → TurtleParse round-trips the pipeline graph (S5 widened)") {
-    val tr = Pipeline.triples(spark, sfDir).as[Triple].collect().toSet
-    val back = graft.io.TurtleParse.parse(
-      graft.io.Turtle.export(Pipeline.triples(spark, sfDir)))
+    val triples = new Pipeline(spark, sfDir).triples
+    val tr = triples.as[Triple].collect().toSet
+    val back = graft.io.TurtleParse.parse(graft.io.Turtle.export(triples))
       .as[Triple].collect().toSet
     assert(back == tr)
   }

@@ -69,8 +69,9 @@ class TextInvariantSpec extends SparkSpec {
   }
 
   test("ordinals are stable under repartitioning (never partition-order dependent)") {
-    val l = Pipeline.linked(spark, sfDir)
-    val base = Pipeline.ordinals(spark, sfDir)
+    val p = new Pipeline(spark, sfDir)
+    val l = p.linked
+    val base = p.ordinals
       .select("conv_id", "kind", "turn_idx", "midx", "ordinal")
       .as[(String, String, Int, Int, Int)].collect().toSet
     val emitting = l.repartition(17)
@@ -85,7 +86,7 @@ class TextInvariantSpec extends SparkSpec {
   }
 
   test("triple emission is idempotent (set semantics, bio_extraction.py:78)") {
-    val t = Pipeline.triples(spark, sfDir)
+    val t = new Pipeline(spark, sfDir).triples
     assert(t.count() == t.distinct().count())
     assert(t.unionAll(t).distinct().count() == t.count())
   }
@@ -93,7 +94,7 @@ class TextInvariantSpec extends SparkSpec {
   test("triple set is invariant under input permutation (full pipeline)") {
     import graft.operators.{Emit, Link, Mentions}
     val tr = Pipeline.transcripts(spark, sfDir)
-    val want = Pipeline.triples(spark, sfDir).as[graft.model.Triple]
+    val want = new Pipeline(spark, sfDir).triples.as[graft.model.Triple]
       .collect().toSet
     // same rows, adversarial partitioning/order
     val shuffled = tr.repartition(7).sortWithinPartitions(col("text"))

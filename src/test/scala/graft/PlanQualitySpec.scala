@@ -7,11 +7,17 @@ package graft
   */
 class PlanQualitySpec extends SparkSpec {
 
+  // plain (unpersisted) plans: a graph's persisted frame would show as a
+  // cached scan and hide the shape under test
+  private def mentions =
+    operators.Mentions.extract(Pipeline.transcripts(spark, sfDir))
+  private def linked = operators.Link.linkAll(spark, sfDir, mentions)
+
   test("linking is ONE broadcast hash join over ONE scan of the input") {
     // other suites may have persisted the same linked plan — a cached
     // InMemoryTableScan would hide the join/scan shape under test
     spark.catalog.clearCache()
-    val plan = Pipeline.linked(spark, sfDir).queryExecution.executedPlan.toString
+    val plan = linked.queryExecution.executedPlan.toString
     val broadcasts = "BroadcastHashJoin".r.findAllIn(plan).size
     assert(broadcasts == 1,
       s"single-pass linking = exactly 1 broadcast join, got $broadcasts")
@@ -23,7 +29,7 @@ class PlanQualitySpec extends SparkSpec {
   }
 
   test("extraction scan is column-pruned (unused event columns not read)") {
-    val plan = Pipeline.mentions(spark, sfDir).queryExecution.executedPlan.toString
+    val plan = mentions.queryExecution.executedPlan.toString
     // mention extraction needs event_id/event_type (+ts via transcripts
     // projection pruning); the wide columns must not reach the scan
     assert(!plan.contains("props"), "props must be pruned from the scan")
@@ -47,9 +53,9 @@ class PlanQualitySpec extends SparkSpec {
     // each — the mention/linked fact side must not sort-merge
     for ((name, plan) <- Seq(
       "kg_gender" -> operators.Families.genderTriples(
-        spark, sfDir, Pipeline.mentions(spark, sfDir)),
+        spark, sfDir, mentions),
       "kg_family" -> operators.Families.familyTriples(
-        spark, sfDir, Pipeline.linked(spark, sfDir)))) {
+        spark, sfDir, linked))) {
       val p = plan.queryExecution.executedPlan.toString
       assert(!p.contains("SortMergeJoin"),
         s"$name must broadcast the dictionary, not shuffle the fact side")
@@ -67,8 +73,8 @@ class PlanQualitySpec extends SparkSpec {
     // the tag/activity assembly joins, also conv-keyed) — never a
     // nested-loop or cartesian pair space
     for ((name, df) <- Seq(
-      "kg_friends" -> operators.Relations.friendTriples(Pipeline.linked(spark, sfDir)),
-      "kg_intimate" -> operators.Relations.intimateTriples(Pipeline.linked(spark, sfDir)))) {
+      "kg_friends" -> operators.Relations.friendTriples(linked),
+      "kg_intimate" -> operators.Relations.intimateTriples(linked))) {
       val p = df.queryExecution.executedPlan.toString
       assert(!p.contains("BroadcastNestedLoopJoin") &&
         !p.contains("CartesianProduct"), name)
@@ -79,7 +85,7 @@ class PlanQualitySpec extends SparkSpec {
     // join class anywhere in its plan is linking's own dictionary
     // broadcast (inlined once per union branch); it must add no shuffle
     // join of its own
-    val edu = operators.Education.educationTriples(Pipeline.linked(spark, sfDir))
+    val edu = operators.Education.educationTriples(linked)
       .queryExecution.executedPlan.toString
     assert(!edu.contains("SortMergeJoin") && !edu.contains("CartesianProduct")
       && !edu.contains("BroadcastNestedLoopJoin"),
@@ -99,8 +105,8 @@ class PlanQualitySpec extends SparkSpec {
     // materialization.
     val cases = Seq(
       "kg_names" -> operators.Names.nameTriples(Pipeline.transcripts(spark, sfDir)),
-      "kg_friends" -> operators.Relations.friendTriples(Pipeline.linked(spark, sfDir)),
-      "kg_education" -> operators.Education.educationTriples(Pipeline.linked(spark, sfDir)))
+      "kg_friends" -> operators.Relations.friendTriples(linked),
+      "kg_education" -> operators.Education.educationTriples(linked))
     for ((name, df) <- cases) {
       val p = df.queryExecution.executedPlan.toString
       assert(p.contains("Scan ExistingRDD"),
@@ -128,7 +134,7 @@ class PlanQualitySpec extends SparkSpec {
     // the source spread's Exchange wraps the plan in AdaptiveSparkPlan,
     // which only shows its codegen spans once finalized — run the query,
     // then inspect the same QueryExecution's final plan
-    val df = Pipeline.mentions(spark, sfDir)
+    val df = mentions
     df.collect() // count() would build its own QueryExecution — collect
     // executes THIS dataset's, finalizing the adaptive plan
     val plan = df.queryExecution.executedPlan.toString
@@ -145,8 +151,9 @@ class PlanQualitySpec extends SparkSpec {
     val prev = spark.conf.getOption("spark.sql.codegen.fallback")
     spark.conf.set("spark.sql.codegen.fallback", "false")
     try {
-      Pipeline.linked(spark, sfDir).count()          // extract+link+mint
-      Pipeline.triples(spark, sfDir).count()         // full emission
+      val p = new Pipeline(spark, sfDir)
+      p.linked.count()          // extract+link+mint
+      p.triples.count()         // full emission
     } finally {
       prev match {
         case Some(v) => spark.conf.set("spark.sql.codegen.fallback", v)

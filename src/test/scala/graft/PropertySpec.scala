@@ -93,7 +93,7 @@ class PropertySpec extends SparkSpec {
   }
 
   test("union-distinct is commutative and idempotent on random triple sets") {
-    val t = Pipeline.triples(spark, sfDir).limit(500)
+    val t = new Pipeline(spark, sfDir).triples.limit(500)
     val a = t.sample(withReplacement = true, 0.5, seed = 1)
     val b = t.sample(withReplacement = true, 0.5, seed = 2)
     val ab = a.unionAll(b).distinct()

@@ -44,7 +44,7 @@ class Round2OpsSpec extends SparkSpec {
   }
 
   test("family placeholder: conflict rewrites to _PLACEHOLDER_<relation>") {
-    val got = Extras.familyPlaceholder(spark, sfDir, Pipeline.linked(spark, sfDir))
+    val got = Extras.familyPlaceholder(spark, sfDir, new Pipeline(spark, sfDir).linked)
       .as[(String, Int, Int, String, String)].collect()
     assert(got.nonEmpty)
     got.foreach { case (conv, turn, _, rel, uri) =>

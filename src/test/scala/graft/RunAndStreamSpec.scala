@@ -48,7 +48,7 @@ class StreamParitySpec extends SparkSpec {
     val got = streaming.StreamOps.runToBatch(spark,
       streaming.StreamOps.mentionStream(spark, sfDir), "sp_mentions", "append")
       .collect().toSet
-    val want = Pipeline.mentions(spark, sfDir)
+    val want = new Pipeline(spark, sfDir).mentions
       .select("conv_id", "turn_idx", "kind", "midx", "surface").collect().toSet
     assert(got == want)
     assert(got.nonEmpty)
@@ -57,7 +57,7 @@ class StreamParitySpec extends SparkSpec {
   test("streaming runner lands linked parquet; restart is exactly-once") {
     val out = java.nio.file.Files.createTempDirectory("graft-stream-run").toString
     val n1 = streaming.StreamOps.executeStreaming(spark, sfDir, out)
-    val want = Pipeline.linked(spark, sfDir).drop("ts")
+    val want = new Pipeline(spark, sfDir).linked.drop("ts")
     assert(n1 == want.count())
     // landed rows equal the batch linked stage, column for column
     val got = spark.read.parquet(s"$out/linked")
@@ -74,7 +74,7 @@ class StreamParitySpec extends SparkSpec {
     val got = streaming.StreamOps.runToBatch(spark,
       streaming.StreamOps.linkedStream(spark, sfDir), "sp_linked", "append")
       .collect().toSet
-    val want = Pipeline.linked(spark, sfDir).drop("text", "ts")
+    val want = new Pipeline(spark, sfDir).linked.drop("text", "ts")
       .collect().toSet
     assert(got == want)
     assert(got.nonEmpty)

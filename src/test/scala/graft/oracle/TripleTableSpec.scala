@@ -32,7 +32,7 @@ class TripleTableSpec extends SparkSpec {
 
   test("Quads.export graph equals the oracle's label, row for row") {
     try {
-      val quads = Quads.export(Pipeline.triples(spark, sfDir))
+      val quads = Quads.export(new Pipeline(spark, sfDir).triples)
       val conv = oracleConv
       val label = when(conv =!= "", concat(lit(Ns.conv), conv))
         .otherwise(lit(Ns.kg + "graph/uber"))
@@ -49,7 +49,7 @@ class TripleTableSpec extends SparkSpec {
 
   test("Metrics.convStats equals a groupBy on the oracle's conv") {
     try {
-      val triples = Pipeline.triples(spark, sfDir)
+      val triples = new Pipeline(spark, sfDir).triples
       val per = triples.select(oracleConv.as("conv"))
         .filter(col("conv") =!= "")
         .groupBy("conv").agg(count(lit(1)).as("n"))

@@ -45,6 +45,10 @@ def main():
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
+    unknown = sorted(only - oracle.keys())
+    if unknown:
+        # a misspelled name would otherwise drop its query from the gate
+        sys.exit(f"unknown query name(s): {', '.join(unknown)}")
     ok, bad = [], []
     for name, sql in sorted(oracle.items()):
         if only and name not in only:
