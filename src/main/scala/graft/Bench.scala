@@ -122,10 +122,8 @@ object Bench {
     var warmupSec = 0.0
     var warm = Set.empty[Int] // the graph's blocks: kept for the pass
     if (allQueries.nonEmpty) {
-      val before = sc.getPersistentRDDs.keySet.toSet
       val w0 = System.nanoTime()
-      graph.triples.count() // fills transcripts, mentions, linked, triples
-      warm = sc.getPersistentRDDs.keySet.toSet -- before
+      warm = graph.warm()
       warmupSec = (System.nanoTime() - w0) / 1e9
       System.err.println(f"[bench] pipeline warm-up $warmupSec%8.2fs")
     }

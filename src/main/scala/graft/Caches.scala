@@ -1,8 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 
-/** Freeing localCheckpoint blocks.
+/** Freeing persistent RDD blocks.
   *
   * `localCheckpoint()` persists its backing RDD in the block store, and —
   * unlike DataFrame caches — `spark.catalog.clearCache()` never frees it:
@@ -10,32 +10,20 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * ~60-query pass, a bench loop, a production driver) accumulates blocks +
   * disk spill indefinitely. Release is therefore explicit:
   *
-  *  - `trackedCheckpoint` checkpoints a frame and returns the ids of its
-  *    blocks;
-  *  - `unpersistIds` frees those ids when their owner is done with them
-  *    (SameAs.closureIterative frees each superseded pass at once);
+  *  - `unpersistIds` frees the given RDD ids — a harness keeps a stage
+  *    graph's blocks and frees the rest after each query;
   *  - `releaseAll` frees every persistent RDD of the session — the harness
-  *    calls it between queries and reps.
+  *    calls it between reps and at the end of a pass.
   *
-  * Ids come from diffing the session's persistent RDDs around the (eager)
-  * checkpoint call — there is no public API from a checkpointed Dataset to
-  * its backing RDD.
+  * Ids come from `SparkContext.getPersistentRDDs`: a caller diffs its key
+  * set around the work whose blocks it owns — there is no public API from a
+  * checkpointed Dataset to its backing RDD. (Code that holds the RDD itself,
+  * like SameAs' iterative closure, unpersists it directly.)
   */
 object Caches {
 
-  /** localCheckpoint `df` and return (checkpointed frame, the ids of the
-    * RDD blocks the checkpoint registered) — the ids feed a later
-    * `unpersistIds`. Checkpointing is eager, so the id diff is exact. */
-  def trackedCheckpoint(df: DataFrame): (DataFrame, Set[Int]) =
-    synchronized {
-      val sc = df.sparkSession.sparkContext
-      val before = sc.getPersistentRDDs.keySet.toSet
-      val out = df.localCheckpoint()
-      (out, sc.getPersistentRDDs.keySet.toSet -- before)
-    }
-
-  /** Free specific persistent RDDs (owner-driven, e.g. a superseded
-    * closure pass). */
+  /** Free specific persistent RDDs (owner-driven, e.g. everything but a
+    * warmed stage graph). */
   def unpersistIds(spark: SparkSession, ids: Set[Int]): Unit = {
     val live = spark.sparkContext.getPersistentRDDs
     ids.foreach(id => live.get(id).foreach(_.unpersist(blocking = false)))

@@ -14,9 +14,10 @@ import org.apache.spark.sql.functions._
   * The four shared frames (`transcripts`, `mentions`, `linked`, `triples`)
   * are built once per graph and persisted on first use, so every stage and
   * query of the graph reads the same frames. The persist is lazy (no eager
-  * count): the first action that reads a frame fills it. The harness frees
-  * them (`spark.catalog.clearCache()` + `Caches.releaseAll`). The other
-  * stages are plans over those frames, built on each call.
+  * count): the first action that reads a frame fills it, or `warm()` fills
+  * all four up front. The harness frees them (`spark.catalog.clearCache()`
+  * + `Caches.releaseAll`). The other stages are plans over those frames,
+  * built on each call.
   */
 final class Pipeline(val spark: SparkSession, val dir: String) {
 
@@ -31,6 +32,16 @@ final class Pipeline(val spark: SparkSession, val dir: String) {
 
   lazy val triples: DataFrame =
     shared(Emit.allTriples(spark, dir, transcripts, linked))
+
+  /** Fills the four shared frames (one job: `triples` reads the other
+    * three) and returns the ids of their blocks, which a harness keeps
+    * while it frees every other block after each query. */
+  def warm(): Set[Int] = {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet.toSet
+    triples.count()
+    sc.getPersistentRDDs.keySet.toSet -- before
+  }
 
   def sameAsClusters: DataFrame = SameAs.closure(SameAs.edgesOf(triples))
 

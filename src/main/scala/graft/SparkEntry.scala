@@ -30,7 +30,7 @@ object SparkEntry {
     // Activity/Time-Span nodes with typed partial-date literals (F9-F12,
     // activity.py:370-526 / event.py:90-110 wired into emission)
     "kg_activities" -> (p => operators.Emit.activityTriples(p.linked)),
-    // §2.3 J7 sameAs closure (min-label propagation)
+    // §2.3 J7 sameAs closure (connected components, least name)
     "kg_sameas_clusters" -> (p => p.sameAsClusters),
     // closure applied: canonical triple table
     "kg_triples_canon" -> (p => p.canonTriples),

@@ -1,37 +1,44 @@
 package graft.operators
 
 import graft.model.Ns
+import org.apache.spark.{HashPartitioner, Partitioner}
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** sameAs canonicalization (SURVEY.md §2.3 J7): the reference only rewrites
   * identities through PERSON_MAP (`Utils/utilities.py:289-304`) and leaves
   * transitive closure to consumers; the north_rule mandates a real closure.
   *
-  * Algorithm: iterative min-label propagation (connected components)
-  * expressed in DataFrame joins — each pass sends every node's current label
-  * across every undirected edge and takes the min. Converges in
-  * O(log(diameter)) passes; our sameAs graphs are dictionary-derived chains
-  * and stars with tiny diameter (≤ ~8), so 3-5 passes suffice. Per-iteration
-  * `localCheckpoint` truncates lineage so the plan doesn't grow exponentially
-  * (SURVEY.md §4 item 5). Edge sets are minuscule next to the fact table
-  * (distinct linked entities only), so these shuffles are cheap at any scale;
-  * mega-cluster skew is bounded because labels are aggregated with a
-  * partial-agg-friendly min().
+  * Algorithm: connected components, each node labelled with the least name
+  * of its component. Edge sets up to `DriverClosureCap` are closed with a
+  * union-find on the driver; larger ones with alternating large-star /
+  * small-star rounds over pair RDDs (Kiveris et al., "Connected Components
+  * in MapReduce and Beyond", SoCC 2014), which rewire every component into
+  * a star around its least node. The rounds grow with the log of the
+  * component's diameter whatever the order of the names: scrambled-name
+  * chains of 100 / 400 / 5,000 / 100,000 nodes close in 6–7 / 8 / 11–12 /
+  * 14–15 rounds over three name orders. Each round is one Spark job;
+  * per-node minima are combinable `reduceByKey`s and edges stream against
+  * a per-partition hash map of them, so a hub's neighbour list is never
+  * held in memory at once.
   */
 object SameAs {
 
   /** Driver fast-path bound: identity-edge sets up to this size are
     * closed with an in-memory union-find (one collect, zero iterative
-    * Spark jobs — the per-pass job overhead dominates the iterative
-    * closure at small scale). Beyond it the iterative min-label
-    * propagation below runs — the 10⁹-entity scale path. Both produce
-    * the identical (node, min-of-component) map. */
+    * Spark jobs — the per-round job overhead dominates the iterative
+    * closure at small scale). Beyond it the large-star/small-star rounds
+    * below run — the 10⁹-entity scale path. Both produce the identical
+    * (node, min-of-component) map. */
   val DriverClosureCap = 100000L
 
-  /** Pass cap of the iterative closure — far above the 3-5 passes the
-    * pointer-jumping propagation needs on sameAs graphs. */
-  val MaxClosurePasses = 20
+  /** Round cap of the iterative closure: a guard against a defect, not a
+    * limit real inputs reach. Rounds grow by about 3 per 10× of chain
+    * length (11–12 at 5,000 nodes), so 40 rounds cover a 10¹²-node
+    * chain. */
+  val MaxClosureRounds = 40
 
   /** edges(a, b) → (node, canon): every node of the edge set mapped to the
     * lexicographic min of its connected component.
@@ -49,57 +56,105 @@ object SameAs {
     else closureIterative(edges)
   }
 
-  /** The distributed min-label-propagation closure — the big-edge-set
-    * path; kept equivalence-tested against the driver fast path
-    * (Round4OpsSpec). */
-  private[graft] def closureIterative(edges: DataFrame): DataFrame = {
+  /** The distributed closure — the big-edge-set path; kept
+    * equivalence-tested against the driver fast path (Round4OpsSpec).
+    * `edges` is read three times (twice by the first round, once for the
+    * final node list), so pass a frame that re-scans cheaply. */
+  private[graft] def closureIterative(edges: DataFrame): DataFrame =
+    starClosure(edges)._1
+
+  /** The large-star/small-star closure and the rounds it took. The state
+    * is the undirected edge set as (hi, lo) pairs, hi > lo; each round is a
+    * large star then a small star, and its output edges carry a "changed"
+    * flag. The count of changed edges materializes the round (one job:
+    * the round's three shuffles are its stages) and decides convergence:
+    * a round that changes no edge leaves a star forest whose centres are
+    * the components' least nodes. Only the latest round stays persisted;
+    * the result is locally checkpointed, so it does not hold the rounds'
+    * lineage. Throws once `maxRounds` rounds still change edges — the cap
+    * is never silent. */
+  private[graft] def starClosure(edges: DataFrame,
+      maxRounds: Int = MaxClosureRounds): (DataFrame, Int) = {
     val spark = edges.sparkSession
-    val (und, undIds) = graft.Caches.trackedCheckpoint(
-      edges.select(col("a"), col("b"))
-        .unionAll(edges.select(col("b").as("a"), col("a").as("b")))
-        .distinct())
-    var (labels, labelIds) = graft.Caches.trackedCheckpoint(
-      und.select(col("a").as("node")).distinct()
-        .withColumn("label", col("node")))
-    var i = 0
+    val part = new HashPartitioner(
+      spark.conf.get("spark.sql.shuffle.partitions").toInt)
+    val input = edges.select(col("a"), col("b")).rdd
+      .map(r => (r.getString(0), r.getString(1)))
+    // self-loops join no two nodes: only the final node list keeps them
+    var es: RDD[(String, String)] = input.flatMap { case (a, b) =>
+      if (a > b) Some((a, b)) else if (b > a) Some((b, a)) else None }
+    var held: RDD[_] = null
+    def free(): Unit = if (held != null) held.unpersist(blocking = false)
+    var rounds = 0
     var changed = 1L
-    while (changed > 0 && i < MaxClosurePasses) {
-      // hop: take the min label across every edge
-      val msgs = und.join(labels, und("a") === labels("node"))
-        .select(und("b").as("node"), col("label"))
-      val hop = labels.unionAll(msgs)
-        .groupBy("node").agg(min("label").as("label"))
-      // pointer-jump: label := label(label) — shortcuts chains, turning the
-      // O(diameter) propagation into O(log diameter) iterations
-      val (next, nextIds) = graft.Caches.trackedCheckpoint(hop.as("x")
-        .join(hop.as("y"), col("x.label") === col("y.node"), "left")
-        .select(col("x.node").as("node"),
-          coalesce(col("y.label"), col("x.label")).as("label")))
-      // convergence probe every 2nd iteration — with pointer jumping most
-      // closures finish in 2-3 passes, so probing each pass would spend as
-      // many driver jobs on probes as on work
-      if (i % 2 == 1 || i >= MaxClosurePasses - 1) {
-        changed = next.as("n")
-          .join(labels.as("o"), col("n.node") === col("o.node"))
-          .filter(col("n.label") =!= col("o.label"))
-          .count()
-      }
-      // the superseded pass's checkpoint blocks are dead the moment `next`
-      // is materialized and the probe has read them — free them NOW, not at
-      // GC time: a 10⁹-entity closure holds 2 label frames, never i of them
-      graft.Caches.unpersistIds(spark, labelIds)
-      labels = next
-      labelIds = nextIds
-      i += 1
+    while (changed > 0 && rounds < maxRounds) {
+      val next = smallStar(largeStar(es, part), part)
+        .persist(StorageLevel.MEMORY_AND_DISK) // filled by the count below
+      changed = next.filter(_._2._2).count()
+      // the superseded round is dead once `next` is materialized: free it
+      // now, not at GC time — a 10⁹-entity closure holds one round, not all
+      free()
+      held = next
+      es = next.mapValues(_._1)
+      rounds += 1
     }
-    // und only feeds the loop; the final labels frame is all the caller needs
-    graft.Caches.unpersistIds(spark, undIds)
-    labels.select(col("node"), col("label").as("canon"))
+    if (changed > 0) {
+      free()
+      throw new IllegalStateException(s"sameAs closure did not converge: " +
+        s"$changed edges still changed after $rounds rounds")
+    }
+    // every node of the input, self-loops included, maps to the least of
+    // itself and its star centre
+    val canon = es
+      .union(input.flatMap { case (a, b) => Iterator((a, a), (b, b)) })
+      .reduceByKey(part, least)
+    canon.localCheckpoint() // cuts the rounds' lineage off the result
+    canon.count()
+    free()
+    import spark.implicits._
+    (canon.toDF("node", "canon"), rounds)
+  }
+
+  private val least = (x: String, y: String) => if (x < y) x else y
+
+  /** Large star: every node's larger neighbours re-attach to the least of
+    * the node and its neighbours. An edge (v, u), v > u, becomes
+    * (v, m(u)), m(u) = min(u, u's lower neighbours); it changed iff
+    * m(u) ≠ u. */
+  private def largeStar(es: RDD[(String, String)],
+                        part: Partitioner): RDD[(String, (String, Boolean))] = {
+    val lows = es.reduceByKey(part, least) // hi → its least lower neighbour
+    es.map(_.swap).partitionBy(part).zipPartitions(lows) { (edges, mins) =>
+      val m = mins.toMap
+      edges.map { case (u, v) =>
+        val mu = m.getOrElse(u, u)
+        (v, (mu, mu != u))
+      }
+    }
+  }
+
+  /** Small star: every node and its lower neighbours re-attach to the least
+    * of them, m(u). An edge (u, w) with w ≠ m(u) becomes (w, m(u)),
+    * changed; each node keeps (u, m(u)), unchanged iff some copy of that
+    * edge came through the large star unchanged. */
+  private def smallStar(ls: RDD[(String, (String, Boolean))],
+                        part: Partitioner): RDD[(String, (String, Boolean))] = {
+    val byHi = ls.partitionBy(part)
+    // no shuffle: byHi already has `part`
+    val lows = byHi.reduceByKey(part, (x, y) =>
+      if (x._1 < y._1) x else if (y._1 < x._1) y else (x._1, x._2 && y._2))
+    byHi.zipPartitions(lows) { (edges, mins) =>
+      val m = mins.toMap
+      edges.flatMap { case (u, (w, _)) =>
+        val mu = m(u)._1
+        if (w != mu) Some((w, (mu, true))) else None
+      } ++ m.iterator
+    }
   }
 
   /** Union-find (path-halving) closure over an already-collected edge set;
-    * canon = lexicographic min of each component — bit-identical to the
-    * iterative propagation's fixpoint. */
+    * canon = lexicographic min of each component — the same map as the
+    * large-star/small-star fixpoint. */
   private def closureOnDriver(spark: org.apache.spark.sql.SparkSession,
                               es: Array[(String, String)]): DataFrame = {
     import spark.implicits._
@@ -167,10 +222,11 @@ object SameAs {
       (col("obj_is_iri") && inDomain(col("obj_value")))
     val bypass = triples.filter(!isCand)
     val facts = triples.filter(isCand)
-    // The canon map comes out of a localCheckpoint, which hides size stats
-    // from AQE — without an explicit hint these joins plan as full shuffles
-    // of the fact table. Broadcast while the identity map is broadcastable;
-    // beyond the threshold fall back to shuffle joins + AQE skew splitting.
+    // The iterative closure's canon map is a frame over an RDD, which has
+    // no size stats — without an explicit hint these joins plan as full
+    // shuffles of the fact table. Broadcast while the identity map is
+    // broadcastable; beyond the threshold fall back to shuffle joins + AQE
+    // skew splitting.
     // The size check costs ZERO Spark jobs on the common path: the
     // driver-closure fast path's map is a LocalRelation whose size is
     // readable from the plan (the former unconditional limit(3M).count()

@@ -105,6 +105,51 @@ class Round4OpsSpec extends SparkSpec {
     assert(fast.contains(("n5", "n1")) && fast.contains(("hub", "a0")))
   }
 
+  test("closure: large-star/small-star ≡ driver union-find on long chains, a big star, a zigzag, self-loops, duplicates") {
+    val rnd = new scala.util.Random(7)
+    // names in no order along the chain: min-label propagation needs passes
+    // linear in the chain there, large-star/small-star rounds logarithmic
+    def chain(n: Int, tag: String) = {
+      val names = rnd.shuffle((0 until n).toVector).map(i => f"$tag$i%05d")
+      names.sliding(2).map(p => (p(0), p(1))).toSeq
+    }
+    // "star_h" sorts after every leaf: the hub is not the least node
+    val star = (1 to 3000).map(i => ("star_h", f"star_$i%04d"))
+    // every lower endpoint starts as a local minimum, so the first large
+    // star changes nothing and only the small star's flags keep it going
+    val zigzag = (0 until 50).flatMap(i =>
+      Seq((f"z$i%02d", f"r$i%02d"), (f"z$i%02d", f"r${i + 1}%02d")))
+    val odd = Seq(("self", "self"), // a node with only a self-loop
+      ("d1", "d2"), ("d1", "d2"), ("d2", "d1"), ("d3", "d2"), ("d2", "d3"))
+    val chains = Seq(100, 400, 5000)
+      .map(n => (s"chain$n", chain(n, s"c${n}_"), Some(n)))
+    val cases = chains ++
+      Seq(("star", star, None), ("zigzag", zigzag, None), ("odd", odd, None))
+    val key = "spark.sql.shuffle.partitions"
+    val saved = spark.conf.get(key)
+    try for (parts <- Seq("1", "3")) {
+      spark.conf.set(key, parts)
+      for ((name, es, chainLen) <- cases) {
+        val edges = es.toDF("a", "b")
+        val fast = operators.SameAs.closure(edges)
+          .as[(String, String)].collect().toSet
+        val (iterDf, rounds) = operators.SameAs.starClosure(edges)
+        val iter = iterDf.as[(String, String)].collect().toSet
+        val wrong = (iter -- fast).size + (fast -- iter).size
+        assert(wrong == 0, s"$name at $parts partitions: $wrong " +
+          s"(node, canon) pairs in one map only (${fast.size} nodes), e.g. " +
+          (iter -- fast).take(3).mkString(", "))
+        // rounds grow with the log of a chain: ≈3 more per 10× length
+        chainLen.foreach(n =>
+          assert(rounds <= 3 * math.log10(n) + 3, s"$name: $rounds rounds"))
+      }
+    } finally spark.conf.set(key, saved)
+    // a closure that is still changing at the cap throws, never truncates
+    val e = intercept[IllegalStateException](operators.SameAs.starClosure(
+      chains.head._2.toDF("a", "b"), maxRounds = 2))
+    assert(e.getMessage.contains("after 2 rounds"), e.getMessage)
+  }
+
   test("birth position: MIDDLE never maps (the reference's MIDDLE: typo)") {
     // eids 17, 34, 51, 68 → positions (eid DIV 17) % 4 = 1,2,3,0 →
     // ELDEST, YOUNGEST, MIDDLE, ONLY; MIDDLE must silently drop

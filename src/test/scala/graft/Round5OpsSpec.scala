@@ -192,12 +192,19 @@ class Round5OpsSpec extends SparkSpec {
     assert(got.size == 7)
   }
 
-  // "retained" = a tracked checkpoint whose ids are not handed to the release
+  // "retained" = a checkpoint whose ids are not handed to the release
   // (unpersistIds): it must survive until releaseAll
   test("checkpoint registry: tracked blocks are freed, retained survive release") {
     val sc = spark.sparkContext
-    val (a, aIds) = Caches.trackedCheckpoint(Seq(1, 2, 3).toDF("x"))
-    val (b, bIds) = Caches.trackedCheckpoint(Seq(4, 5).toDF("x"))
+    // a localCheckpoint is eager, so diffing the persistent ids around it
+    // gives exactly its blocks
+    def tracked(df: org.apache.spark.sql.DataFrame) = {
+      val before = sc.getPersistentRDDs.keySet.toSet
+      val out = df.localCheckpoint()
+      (out, sc.getPersistentRDDs.keySet.toSet -- before)
+    }
+    val (a, aIds) = tracked(Seq(1, 2, 3).toDF("x"))
+    val (b, bIds) = tracked(Seq(4, 5).toDF("x"))
     assert(aIds.nonEmpty && a.count() == 3 && b.count() == 2)
     Caches.unpersistIds(spark, aIds)
     // unpersist is async (blocking=false) — poll briefly, with a fresh
