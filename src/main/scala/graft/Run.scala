@@ -10,16 +10,21 @@ import org.apache.spark.sql.functions._
   *
   *   spark-submit --class graft.Run <jar> <sfDir> <outDir> [--resume]
   *
-  * Stages (each materialized + manifest-logged + per-partition lineage):
+  * Stages (each materialized + manifest-logged with its per-file row
+  * counts, read from the committed parquet footers):
   *   transcripts → linked → triples → canon → metrics
-  * A killed run restarted with --resume re-executes only missing stages.
+  * A killed run restarted with --resume re-executes every stage whose
+  * files no longer match its manifest line, and reuses the rest.
+  * `SPARK_GRAFT_CPUS` (default: the JVM's available processors) sets the
+  * local core count and the shuffle partitions.
   */
 object Run {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val outDir = args(1)
     val resume = args.contains("--resume")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val spark = SparkSessions.builder("graft-kg-run",
       sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"), cpus)
       .getOrCreate()
@@ -28,7 +33,8 @@ object Run {
     spark.stop()
   }
 
-  /** Runs all stages; returns (triples rows, canon rows) for callers/tests. */
+  /** Runs all stages; returns (triples rows, canon rows) as the run manifest
+    * counted them, with no Spark job beyond the stage writes. */
   def execute(spark: SparkSession, sfDir: String, outDir: String,
               resume: Boolean): (Long, Long) = {
     val m = new RunManifest(spark, outDir, resume)
@@ -62,7 +68,7 @@ object Run {
         .withColumn("bucket", pmod(xxhash64(col("subj")), lit(buckets)))
         .repartition(spark.sparkContext.defaultParallelism, col("bucket"))
     }
-    val canon = m.stage("canon") {
+    m.stage("canon") {
       // The written triples stage re-reads cheaply, so it meets
       // canonicalize's read-twice input contract as is. One rewrite over
       // the whole table: routing ctx/act rows around it measured
@@ -73,6 +79,6 @@ object Run {
     }
     m.stage("metrics_unmapped") { Metrics.unmappedHistogram(linked) }
     m.stage("metrics_stats") { Metrics.convStats(triples.drop("bucket")) }
-    (triples.count(), canon.count())
+    (m.rows("triples"), m.rows("canon"))
   }
 }

@@ -1,43 +1,82 @@
 package graft.io
 
 import java.nio.file.{Files, Paths, StandardOpenOption}
+import scala.jdk.CollectionConverters._
+import scala.util.Try
+import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.node.ObjectNode
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** Checkpoint/resume + lineage for staged materialization (SURVEY.md §4
   * item 4; north_rule: "resumable from checkpoint with per-partition
   * lineage + metrics").
   *
   * Each stage writes:
-  *  - `<out>/<stage>/` — the stage's rows (partitioned parquet; in a real
-  *    deployment an Iceberg table — same layout, snapshot id ↔ manifest row)
-  *  - `<out>/_lineage/<stage>/` — per-partition row counts (partition_id,
-  *    rows) captured from the ACTUAL write-side partitions
-  *  - one JSON line in `<out>/manifest.jsonl` — (stage, rows, partitions,
-  *    wall_ms, status) — the resume log.
+  *  - `<out>/<stage>/` — the stage's rows (parquet, optionally
+  *    directory-partitioned; in a real deployment an Iceberg table — same
+  *    layout, snapshot id ↔ manifest row)
+  *  - one JSON line in `<out>/manifest.jsonl` — (stage, status, rows,
+  *    partitions, wall_ms, files) — the resume log. `files` maps every
+  *    committed `part-*` file, relative to the stage directory (so
+  *    `bucket=N/part-…` in a partitioned stage), to its row count.
   *
-  * `resume = true` skips any stage whose manifest line says "done" and whose
-  * directory exists, reading the materialized parquet instead — a restart
-  * re-executes only the missing suffix of the DAG.
+  * Lineage launches no Spark job: the driver lists the committed files and
+  * reads each one's row count from its parquet footer. The stage is read
+  * back with the written frame's schema, so no schema-inference job either
+  * (a partition column keeps its written type).
+  *
+  * `resume = true` reuses a stage only when its last "done" line lists
+  * exactly the files and row counts its footers give now (a driver-side
+  * check, no job), reading the materialized parquet instead; a missing,
+  * truncated or altered stage is re-executed.
   */
 class RunManifest(spark: SparkSession, out: String, resume: Boolean) {
 
   private val manifestPath = Paths.get(s"$out/manifest.jsonl")
+  private val json = new ObjectMapper()
+  private val rowsOf = scala.collection.mutable.Map.empty[String, Long]
   Files.createDirectories(Paths.get(out))
 
-  private def doneStages: Set[String] =
-    if (!Files.exists(manifestPath)) Set.empty
-    else {
-      import scala.jdk.CollectionConverters._
-      Files.readAllLines(manifestPath).asScala
-        .filter(_.contains("\"status\":\"done\""))
-        .flatMap { l =>
-          "\"stage\":\"([^\"]+)\"".r.findFirstMatchIn(l).map(_.group(1))
-        }.toSet
-    }
+  /** Row count of stage `name` in this run: from the footers of the files
+    * its write committed, or from its manifest line when it was reused. */
+  def rows(name: String): Long = rowsOf(name)
 
-  private def appendLine(s: String): Unit =
-    Files.writeString(manifestPath, s + "\n",
+  /** Per-file row counts of each stage's last "done" line (a line cut
+    * short by a killed run does not parse and counts for no stage). */
+  private def doneFiles: Map[String, Map[String, Long]] =
+    if (!Files.exists(manifestPath)) Map.empty
+    else Files.readAllLines(manifestPath).asScala.toSeq
+      .flatMap(l => Try(json.readTree(l)).toOption)
+      .filter(l => l.path("status").asText == "done" && l.has("files"))
+      .map(l => l.get("stage").asText ->
+        l.get("files").properties.asScala.map(e => e.getKey -> e.getValue.asLong).toMap)
+      .toMap
+
+  /** Every `part-*` file under `dir`, recursively and relative to it, →
+    * the row count in its parquet footer. Runs on the driver. */
+  private def committed(dir: String): Map[String, Long] = {
+    val conf = spark.sessionState.newHadoopConf()
+    val root = new Path(dir)
+    val fs = root.getFileSystem(conf)
+    val base = fs.makeQualified(root).toUri
+    val it = fs.listFiles(root, true)
+    val files = Map.newBuilder[String, Long]
+    while (it.hasNext) {
+      val st = it.next()
+      if (st.getPath.getName.startsWith("part-")) {
+        val r = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
+        try files += base.relativize(st.getPath.toUri).getPath -> r.getRecordCount
+        finally r.close()
+      }
+    }
+    files.result()
+  }
+
+  private def appendLine(line: ObjectNode): Unit =
+    Files.writeString(manifestPath, json.writeValueAsString(line) + "\n",
       StandardOpenOption.CREATE, StandardOpenOption.APPEND)
 
   /** Materialize `df` as stage `name` (or reuse it when resuming).
@@ -46,8 +85,10 @@ class RunManifest(spark: SparkSession, out: String, resume: Boolean) {
   def stage(name: String, partitionCols: Seq[String] = Nil)
            (df: => DataFrame): DataFrame = {
     val dir = s"$out/$name"
-    if (resume && doneStages.contains(name) && Files.exists(Paths.get(dir))) {
-      appendLine(s"""{"stage":"$name","status":"skipped_resume"}""")
+    val logged = if (resume) doneFiles.get(name) else None
+    if (logged.exists(f => Try(committed(dir)).toOption.contains(f))) {
+      rowsOf(name) = logged.get.values.sum
+      appendLine(json.createObjectNode().put("stage", name).put("status", "skipped_resume"))
       return spark.read.parquet(dir)
     }
     val t0 = System.nanoTime()
@@ -55,26 +96,14 @@ class RunManifest(spark: SparkSession, out: String, resume: Boolean) {
     val w = d.write.mode("overwrite")
     (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
       .parquet(dir)
-    val written = spark.read.parquet(dir)
-    // per-partition lineage: ONE scan of the materialized stage, attributed
-    // to the FILES the write tasks committed (input_file_name) — true
-    // write-side lineage, independent of how the re-read happens to split.
-    // The key keeps the partition DIRECTORY (bucket=N/...) so a
-    // directory-partitioned stage never aggregates unrelated part-00000
-    // files from different buckets under one id.
-    val lineage = written
-      .groupBy(regexp_extract(input_file_name(),
-        "([^/]+=[^/]+/)?part-[0-9]+[^/]*$", 0).as("partition_id"))
-      .agg(count(lit(1)).as("rows"))
-      .collect()
-    import spark.implicits._
-    lineage.map(r => (r.getString(0), r.getLong(1))).toSeq
-      .toDF("partition_id", "rows")
-      .coalesce(1).write.mode("overwrite").parquet(s"$out/_lineage/$name")
-    val rows = lineage.map(_.getLong(1)).sum
-    val nParts = lineage.length
-    val wallMs = (System.nanoTime() - t0) / 1000000
-    appendLine(s"""{"stage":"$name","status":"done","rows":$rows,"partitions":$nParts,"wall_ms":$wallMs}""")
-    written
+    val files = committed(dir)
+    rowsOf(name) = files.values.sum
+    val line = json.createObjectNode().put("stage", name).put("status", "done")
+      .put("rows", rowsOf(name)).put("partitions", files.size)
+      .put("wall_ms", (System.nanoTime() - t0) / 1000000)
+    val perFile = line.putObject("files")
+    files.toSeq.sorted.foreach { case (f, n) => perFile.put(f, n) }
+    appendLine(line)
+    spark.read.schema(d.schema).parquet(dir)
   }
 }

@@ -43,10 +43,13 @@ object SameAs {
   /** edges(a, b) → (node, canon): every node of the edge set mapped to the
     * lexicographic min of its connected component.
     *
-    * Dispatch costs ONE Spark job: a single limit(cap+1) collect both
-    * answers "is it small?" and, when yes, IS the edge set the union-find
-    * consumes (the former count-then-collect probe computed the edge
-    * extraction twice). */
+    * Dispatch is a single limit(cap+1) collect: it both answers "is it
+    * small?" and, when yes, IS the edge set the union-find consumes (the
+    * former count-then-collect probe computed the edge extraction twice).
+    * The collect is a CollectLimit, which scans one partition and then
+    * scales up (`spark.sql.limit.scaleUpFactor`) until it holds cap+1 rows
+    * or has read every partition, so it costs one Spark job or more: 3 on
+    * a ≈104 k-edge input, as many as the rounds that close it. */
   def closure(edges: DataFrame): DataFrame = {
     val probe = edges.select(col("a"), col("b"))
       .limit((DriverClosureCap + 1).toInt).collect()
