@@ -1,8 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.broadcast
 
-/** Freeing persistent RDD blocks.
+/** Freeing persistent RDD blocks, and the one broadcast rule.
   *
   * `localCheckpoint()` persists its backing RDD in the block store, and —
   * unlike DataFrame caches — `spark.catalog.clearCache()` never frees it:
@@ -35,4 +36,17 @@ object Caches {
     * exactly the intent. */
   def releaseAll(spark: SparkSession): Unit =
     unpersistIds(spark, spark.sparkContext.getPersistentRDDs.keySet.toSet)
+
+  /** Row bound of every broadcast the program chooses itself: a row count,
+    * not Spark's 10 MiB byte estimate, which at 48 B/row would move sf0.1's
+    * BFS copy join (≈564 k rows) onto the shuffle side. */
+  private val BroadcastRows = 3_000_000L
+
+  /** `df` hinted for broadcast when its exact row count `rows`, which the
+    * caller holds (no job runs), is within `BroadcastRows` and Spark's
+    * broadcast switch is on (`spark.sql.autoBroadcastJoinThreshold` ≥ 0). */
+  private[graft] def broadcastIfSmall(df: DataFrame, rows: Long): DataFrame =
+    if (rows > BroadcastRows ||
+        df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold < 0) df
+    else broadcast(df)
 }

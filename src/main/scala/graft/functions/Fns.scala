@@ -15,24 +15,23 @@ object Fns {
   /** The synthetic event id of a turn, recovered from its keys: the conv
     * number (conv_id's digits — NO length cap, so the derivation agrees
     * with the oracle's `substr(conv_id, 6)` for conv numbers of ANY digit
-    * count, not just the lpad-6 fixture domain) × 20 + turn_idx. Every
-    * arithmetic family attribute (relation index, marital tags, birth
-    * position, CF families, …) derives from this ONE shared column. */
+    * count) × 20 + turn_idx. Every arithmetic family attribute (relation
+    * index, marital tags, birth position, CF families, …) derives from
+    * this ONE shared column. */
   def eidCol: Column =
     expr("substring(conv_id, 6)").cast("long") * 20 + col("turn_idx")
 
-  /** The conv id embedded in a minted URI ("conv_" + exactly six digits —
-    * SynthTranscripts lpads to 6 and Bench's scale guard keeps conv
-    * numbers < 10⁶), or "" when the URI carries none (person/viaf/work
-    * subjects). Value-identical to
-    * `regexp_extract(c, "(conv_[0-9]+)", 1)` on every URI the engine
-    * mints — the oracle keeps that regex spelling — at instr+substr cost
-    * instead of a regex engine per row (hot on the 3M-row conv-recovery
-    * paths: Run's metrics_stats stage wall dropped 7.0 s → 2.4 s in a
-    * paired cold run on this change alone). */
+  /** The conv id embedded in a minted URI, or "" when the URI carries none
+    * (person/viaf/work subjects). A minted URI ends its conv id with "_"
+    * or the URI's end, so the id is all before the second "_" from "conv_"
+    * on. Value-identical to `regexp_extract(c, "(conv_[0-9]+)", 1)` on
+    * every URI the engine mints (the oracle keeps that regex spelling), at
+    * instr+substr cost instead of a regex per row: Run's metrics_stats
+    * stage wall dropped 7.0 s → 2.4 s when the regex went. */
   def convOf(c: Column): Column = {
     val i = instr(c, "conv_")
-    when(i > 0, c.substr(i, lit(11))).otherwise(lit(""))
+    when(i > 0, substring_index(c.substr(i, length(c)), "_", 2))
+      .otherwise(lit(""))
   }
 
   /** `clean_term` — the cultural-form variant of the reference's term

@@ -2,7 +2,7 @@ package graft.io
 
 import graft.functions.Fns
 import graft.model.Ns
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
 /** K4 — quad export for visualization (`Huviz/huvizQuads.py:119-140`): the
@@ -96,17 +96,15 @@ object Quads {
       reached = reached.unionAll(frontier)
     }
     // The copy join's left side (distinct reached (graph, node) pairs) is
-    // orders of magnitude smaller than the triple table — broadcast it
-    // while it is provably bounded so the FULL triple table is never
-    // shuffled+sorted for this join (the before-plan's SortMergeJoin moved
-    // all 3.1M rows); beyond the bound fall back to the shuffle join —
-    // the 10^12-turn-scale path, where `reached` grows with the graph.
-    // The count is read from the just-materialized checkpoint — no extra
-    // pass over anything upstream.
-    val reachedCk = reached.distinct().localCheckpoint()
-    val reachedSmall =
-      if (reachedCk.count() <= 3000000L) broadcast(reachedCk) else reachedCk
-    val copied = reachedSmall.join(t, "subj")
+    // orders of magnitude smaller than the triple table: broadcast while
+    // small (`Caches.broadcastIfSmall`), so the FULL triple table is not
+    // shuffled+sorted for this join (a SortMergeJoin moved all 3.1M rows).
+    // The job that materializes the checkpoint observes its row count.
+    val rows = Observation()
+    val reachedCk = reached.distinct()
+      .observe(rows, count(lit(1)).as("rows")).localCheckpoint()
+    val copied = graft.Caches.broadcastIfSmall(reachedCk,
+      rows.get("rows").asInstanceOf[Long]).join(t, "subj")
       .select(col("graph"), col("subj"), col("pred"), col("obj_value"),
         col("obj_is_iri"), col("obj_lang"), col("obj_dtype"))
     // NO final set-distinct — it is provably a no-op here, and over the

@@ -9,6 +9,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Checkpoint/resume + lineage for staged materialization (SURVEY.md §4
   * item 4; north_rule: "resumable from checkpoint with per-partition
@@ -19,19 +20,19 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    directory-partitioned; in a real deployment an Iceberg table — same
   *    layout, snapshot id ↔ manifest row)
   *  - one JSON line in `<out>/manifest.jsonl` — (stage, status, rows,
-  *    partitions, wall_ms, files) — the resume log. `files` maps every
-  *    committed `part-*` file, relative to the stage directory (so
+  *    partitions, wall_ms, files, schema) — the resume log. `files` maps
+  *    every committed `part-*` file, relative to the stage directory (so
   *    `bucket=N/part-…` in a partitioned stage), to its row count.
   *
   * Lineage launches no Spark job: the driver lists the committed files and
-  * reads each one's row count from its parquet footer. The stage is read
-  * back with the written frame's schema, so no schema-inference job either
-  * (a partition column keeps its written type).
+  * reads each one's row count from its parquet footer. A stage is read
+  * back with its written schema (`schema`), so no schema-inference job
+  * either, and a partition column keeps its written type.
   *
   * `resume = true` reuses a stage only when its last "done" line lists
   * exactly the files and row counts its footers give now (a driver-side
-  * check, no job), reading the materialized parquet instead; a missing,
-  * truncated or altered stage is re-executed.
+  * check, no job); a missing, truncated or altered stage, or a line
+  * without `schema`, is re-executed.
   */
 class RunManifest(spark: SparkSession, out: String, resume: Boolean) {
 
@@ -44,15 +45,17 @@ class RunManifest(spark: SparkSession, out: String, resume: Boolean) {
     * its write committed, or from its manifest line when it was reused. */
   def rows(name: String): Long = rowsOf(name)
 
-  /** Per-file row counts of each stage's last "done" line (a line cut
-    * short by a killed run does not parse and counts for no stage). */
-  private def doneFiles: Map[String, Map[String, Long]] =
+  /** Per-file row counts and written schema of each stage's last "done"
+    * line (a line cut short by a killed run, or without `files` or
+    * `schema`, counts for no stage). */
+  private def doneStages: Map[String, (Map[String, Long], StructType)] =
     if (!Files.exists(manifestPath)) Map.empty
     else Files.readAllLines(manifestPath).asScala.toSeq
       .flatMap(l => Try(json.readTree(l)).toOption)
-      .filter(l => l.path("status").asText == "done" && l.has("files"))
-      .map(l => l.get("stage").asText ->
-        l.get("files").properties.asScala.map(e => e.getKey -> e.getValue.asLong).toMap)
+      .filter(l => l.path("status").asText == "done")
+      .flatMap(l => Try(l.get("stage").asText -> (
+        l.get("files").properties.asScala.map(e => e.getKey -> e.getValue.asLong).toMap,
+        DataType.fromJson(l.get("schema").asText).asInstanceOf[StructType])).toOption)
       .toMap
 
   /** Every `part-*` file under `dir`, recursively and relative to it, →
@@ -85,11 +88,12 @@ class RunManifest(spark: SparkSession, out: String, resume: Boolean) {
   def stage(name: String, partitionCols: Seq[String] = Nil)
            (df: => DataFrame): DataFrame = {
     val dir = s"$out/$name"
-    val logged = if (resume) doneFiles.get(name) else None
-    if (logged.exists(f => Try(committed(dir)).toOption.contains(f))) {
-      rowsOf(name) = logged.get.values.sum
+    val logged = if (resume) doneStages.get(name) else None
+    if (logged.exists(l => Try(committed(dir)).toOption.contains(l._1))) {
+      val (files, schema) = logged.get
+      rowsOf(name) = files.values.sum
       appendLine(json.createObjectNode().put("stage", name).put("status", "skipped_resume"))
-      return spark.read.parquet(dir)
+      return spark.read.schema(schema).parquet(dir)
     }
     val t0 = System.nanoTime()
     val d = df
@@ -103,6 +107,7 @@ class RunManifest(spark: SparkSession, out: String, resume: Boolean) {
       .put("wall_ms", (System.nanoTime() - t0) / 1000000)
     val perFile = line.putObject("files")
     files.toSeq.sorted.foreach { case (f, n) => perFile.put(f, n) }
+    line.put("schema", d.schema.json)
     appendLine(line)
     spark.read.schema(d.schema).parquet(dir)
   }

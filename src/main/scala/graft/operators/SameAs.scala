@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Caches
 import graft.model.Ns
 import org.apache.spark.{HashPartitioner, Partitioner}
 import org.apache.spark.rdd.RDD
@@ -44,27 +45,21 @@ object SameAs {
     * lexicographic min of its connected component.
     *
     * Dispatch is a single limit(cap+1) collect: it both answers "is it
-    * small?" and, when yes, IS the edge set the union-find consumes (the
-    * former count-then-collect probe computed the edge extraction twice).
-    * The collect is a CollectLimit, which scans one partition and then
-    * scales up (`spark.sql.limit.scaleUpFactor`) until it holds cap+1 rows
-    * or has read every partition, so it costs one Spark job or more: 3 on
-    * a ≈104 k-edge input, as many as the rounds that close it. */
+    * small?" and, when yes, IS the edge set the union-find consumes. The
+    * collect is a CollectLimit, which scans one partition and then scales
+    * up (`spark.sql.limit.scaleUpFactor`) until it holds cap+1 rows or has
+    * read every partition, so it costs one Spark job or more: 3 on a
+    * ≈104 k-edge input, as many as the rounds that close it. Either path
+    * hints the map by its exact node count (`Caches.broadcastIfSmall`);
+    * `canonicalize` joins it as given. */
   def closure(edges: DataFrame): DataFrame = {
     val probe = edges.select(col("a"), col("b"))
       .limit((DriverClosureCap + 1).toInt).collect()
     if (probe.length <= DriverClosureCap)
       closureOnDriver(edges.sparkSession,
         probe.map(r => (r.getString(0), r.getString(1))))
-    else closureIterative(edges)
+    else starClosure(edges)._1
   }
-
-  /** The distributed closure — the big-edge-set path; kept
-    * equivalence-tested against the driver fast path (Round4OpsSpec).
-    * `edges` is read three times (twice by the first round, once for the
-    * final node list), so pass a frame that re-scans cheaply. */
-  private[graft] def closureIterative(edges: DataFrame): DataFrame =
-    starClosure(edges)._1
 
   /** The large-star/small-star closure and the rounds it took. The state
     * is the undirected edge set as (hi, lo) pairs, hi > lo; each round is a
@@ -75,7 +70,12 @@ object SameAs {
     * the components' least nodes. Only the latest round stays persisted;
     * the result is locally checkpointed, so it does not hold the rounds'
     * lineage. Throws once `maxRounds` rounds still change edges — the cap
-    * is never silent. */
+    * is never silent.
+    *
+    * This is the big-edge-set path of `closure`, kept equivalence-tested
+    * against the driver union-find (Round4OpsSpec). `edges` is read three
+    * times (twice by the first round, once for the final node list), so
+    * pass a frame that re-scans cheaply. */
   private[graft] def starClosure(edges: DataFrame,
       maxRounds: Int = MaxClosureRounds): (DataFrame, Int) = {
     val spark = edges.sparkSession
@@ -112,10 +112,10 @@ object SameAs {
       .union(input.flatMap { case (a, b) => Iterator((a, a), (b, b)) })
       .reduceByKey(part, least)
     canon.localCheckpoint() // cuts the rounds' lineage off the result
-    canon.count()
+    val nodes = canon.count()
     free()
     import spark.implicits._
-    (canon.toDF("node", "canon"), rounds)
+    (Caches.broadcastIfSmall(canon.toDF("node", "canon"), nodes), rounds)
   }
 
   private val least = (x: String, y: String) => if (x < y) x else y
@@ -185,7 +185,8 @@ object SameAs {
         case _ => minOf(r) = math.Ordering.String.min(minOf.getOrElse(r, n), n)
       }
     }
-    nodes.toSeq.sorted.map(n => (n, minOf(find(n)))).toDF("node", "canon")
+    val canon = nodes.toSeq.sorted.map(n => (n, minOf(find(n)))).toDF("node", "canon")
+    Caches.broadcastIfSmall(canon, nodes.size)
   }
 
   /** Extract sameAs edges from a triple table. */
@@ -207,6 +208,7 @@ object SameAs {
     * distincting everything: the input is dup-free, candidates keep a
     * domain URI in the slot that made them candidates after rewriting, so
     * the two sides can never collide.
+    * The map is joined as given: `closure` has hinted it or not.
     *
     * INPUT CONTRACT: `triples` is read TWICE (candidate + bypass branches
     * of one union). Pass a frame that re-scans cheaply — a parquet stage
@@ -225,28 +227,10 @@ object SameAs {
       (col("obj_is_iri") && inDomain(col("obj_value")))
     val bypass = triples.filter(!isCand)
     val facts = triples.filter(isCand)
-    // The iterative closure's canon map is a frame over an RDD, which has
-    // no size stats — without an explicit hint these joins plan as full
-    // shuffles of the fact table. Broadcast while the identity map is
-    // broadcastable; beyond the threshold fall back to shuffle joins + AQE
-    // skew splitting.
-    // The size check costs ZERO Spark jobs on the common path: the
-    // driver-closure fast path's map is a LocalRelation whose size is
-    // readable from the plan (the former unconditional limit(3M).count()
-    // probe ran one extra job over the map per canon query — VERDICT r5
-    // #6). Only the iterative closure's map pays the bounded count.
-    val known = canon.queryExecution.analyzed match {
-      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
-        Some(l.data.length.toLong)
-      case _ => None
-    }
-    val small = known.getOrElse(canon.limit(3000001).count()) <= 3000000
-    def maybeBroadcast(df: DataFrame): DataFrame =
-      if (small) broadcast(df) else df
-    val cs = maybeBroadcast(canon.withColumnRenamed("node", "s_node")
-      .withColumnRenamed("canon", "s_canon"))
-    val co = maybeBroadcast(canon.withColumnRenamed("node", "o_node")
-      .withColumnRenamed("canon", "o_canon"))
+    val cs = canon.withColumnRenamed("node", "s_node")
+      .withColumnRenamed("canon", "s_canon")
+    val co = canon.withColumnRenamed("node", "o_node")
+      .withColumnRenamed("canon", "o_canon")
     val rewritten = facts
       .join(cs, facts("subj") === cs("s_node"), "left")
       .join(co,

@@ -62,7 +62,7 @@ object OracleSql {
 WITH occ(i, w) AS (VALUES $occValues),
 lifep(i, w) AS (VALUES $lifeValues),
 tr AS (
-  SELECT 'conv_' || lpad(CAST(e.event_id // 20 AS VARCHAR), 6, '0') AS conv_id,
+  SELECT printf('conv_%06d', e.event_id // 20) AS conv_id,
          CAST(e.event_id % 20 AS INT) AS turn_idx,
          CASE e.event_type WHEN 'purchase' THEN 'user' WHEN 'click' THEN 'assistant'
               WHEN 'view' THEN 'assistant' WHEN 'signup' THEN 'system' ELSE 'tool' END AS role,

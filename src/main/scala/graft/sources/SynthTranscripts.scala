@@ -136,8 +136,8 @@ object SynthTranscripts {
       .when(col("event_type") === "signup", "system")
       .otherwise("tool") // event_type = error
     e.select(
-      concat(lit("conv_"), lpad(expr("CAST(event_id DIV 20 AS STRING)"), 6, "0"))
-        .as("conv_id"),
+      // at least six digits, never truncated (lpad would cut 10⁶ and up)
+      format_string("conv_%06d", expr("event_id DIV 20")).as("conv_id"),
       (eid % 20).cast("int").as("turn_idx"),
       role.as("role"),
       text.as("text"),

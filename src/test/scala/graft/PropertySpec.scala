@@ -35,6 +35,30 @@ class PropertySpec extends SparkSpec {
     s
   }
 
+  test("conv ids of 10⁶ and up round-trip through convOf and the twin's regexp_extract") {
+    // the fixture's 50 conversations, shifted below 10⁶, across it and to
+    // nine digits
+    val base = spark.read.parquet(s"$sfDir/events.parquet")
+    val events = Seq(0L, 1000000L - 25, 123456789L)
+      .map(c => base.withColumn("event_id", col("event_id") + c * 20))
+      .reduce(_ unionByName _)
+    val tr = sources.SynthTranscripts.project(events).localCheckpoint()
+    // at least six digits, never truncated: below 10⁶ the lpad-6 spelling
+    val want = events.select(expr("event_id DIV 20")).distinct().as[Long]
+      .collect().map(n => f"conv_$n%06d").toSet
+    assert(want.exists(_.length == 12) && want.exists(_.length == 14))
+    assert(tr.select("conv_id").distinct().as[String].collect().toSet == want)
+    // every subject the emitters mint from them
+    val linked = operators.Link.linkAll(spark, sfDir, operators.Mentions.extract(tr))
+    val got = operators.Emit.allTriples(spark, sfDir, tr, linked)
+      .select(col("subj")).distinct()
+      .select(Fns.convOf(col("subj")), regexp_extract(col("subj"), "(conv_[0-9]+)", 1))
+      .as[(String, String)].collect()
+    val differ = got.filter { case (a, b) => a != b }
+    assert(differ.isEmpty, differ.take(3).mkString(", "))
+    assert(got.map(_._1).filter(_.nonEmpty).toSet == want)
+  }
+
   test("limitWords ≡ python port on 200 random whitespaced sentences") {
     val cases = Seq.fill(200)((sentence(), 1 + rnd.nextInt(10)))
     val df = cases.toDF("s", "n")

@@ -99,7 +99,7 @@ class Round4OpsSpec extends SparkSpec {
       ("x2", "x1"), ("z9", "z8")).toDF("a", "b")
     val fast = operators.SameAs.closure(edges)
       .as[(String, String)].collect().toSet
-    val iter = operators.SameAs.closureIterative(edges)
+    val iter = operators.SameAs.starClosure(edges)._1
       .as[(String, String)].collect().toSet
     assert(fast == iter, s"driver=$fast iterative=$iter")
     assert(fast.contains(("n5", "n1")) && fast.contains(("hub", "a0")))

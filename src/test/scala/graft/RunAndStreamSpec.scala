@@ -1,12 +1,9 @@
 package graft
 
 import java.nio.file.{Files, Path, Paths, StandardOpenOption}
-import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import graft.io.RunManifest
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 /** Resume + streaming-parity specs (SURVEY.md §5 items 4-5). */
@@ -103,27 +100,6 @@ class RunSpec extends SparkSpec {
 
 class RunManifestSpec extends SparkSpec {
 
-  /** Spark jobs `body` starts from this thread. */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"jobs-of-${System.nanoTime}"
-    val jobs = new AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet()
-    }
-    sc.addSparkListener(l)
-    sc.setJobGroup(group, group)
-    try body
-    finally {
-      sc.clearJobGroup()
-      ListenerBusDrain.drain(sc)
-      sc.removeSparkListener(l)
-    }
-    jobs.get
-  }
-
   test("RunManifest.stage launches only its write's jobs (plain and partitioned)") {
     val out = Files.createTempDirectory("graftmanifest").toString
     val df = spark.range(0, 20000, 1, 4)
@@ -161,6 +137,23 @@ class RunManifestSpec extends SparkSpec {
       assert(got.exceptAll(same).isEmpty && same.exceptAll(got).isEmpty, name)
       assert(got.count() == m.rows(name) && m.rows(name) == df.count(), name)
     }
+  }
+
+  test("a resumed stage launches no job and keeps its written types") {
+    val out = Files.createTempDirectory("graftmanifest").toString
+    val df = spark.range(0, 20000, 1, 4)
+      .select(col("id"), (col("id") % 7).cast("string").as("s"), (col("id") % 5).as("bucket"))
+    new RunManifest(spark, out, resume = false).stage("bucketed", Seq("bucket"))(df)
+    val m = new RunManifest(spark, out, resume = true)
+    var got: org.apache.spark.sql.DataFrame = null
+    val jobs = jobsOf {
+      got = m.stage("bucketed", Seq("bucket"))(sys.error("a resumed stage must not re-execute"))
+    }
+    assert(jobs == 0, "reading a reused stage back must not infer its schema")
+    // bigint `bucket` as written; inference would make it int
+    assert(got.schema.map(f => f.name -> f.dataType) == df.schema.map(f => f.name -> f.dataType))
+    assert(m.rows("bucketed") == 20000)
+    assert(got.exceptAll(df).isEmpty && df.exceptAll(got).isEmpty)
   }
 }
 
