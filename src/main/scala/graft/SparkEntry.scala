@@ -49,11 +49,11 @@ object SparkEntry {
     // drained to completion — checked against the SAME oracles as batch
     "stream_mentions" -> (p => streaming.StreamOps.runToBatch(p.spark,
       streaming.StreamOps.mentionStream(p.spark, p.dir),
-      "stream_mentions_tbl", "append")),
+      "stream_mentions_tbl")),
     // streaming extraction + broadcast linking (stream-static join)
     "stream_linked" -> (p => streaming.StreamOps.runToBatch(p.spark,
       streaming.StreamOps.linkedStream(p.spark, p.dir),
-      "stream_linked_tbl", "append")),
+      "stream_linked_tbl")),
     // §2.3 J3 retry-chain linking (primary → secondary dict → literal)
     "kg_retry_chain" -> (p =>
       operators.Extras.retryChainLink(p.spark, p.mentions)),

@@ -20,7 +20,9 @@ object RdfXml {
       .mkString("<rdf:RDF ", " ", ">")
   val closeTag: String = "</rdf:RDF>"
 
-  private def escXml(c: org.apache.spark.sql.Column) =
+  /** The XML attribute/text escaper of the RDF/XML and TriX exports
+    * (& first, then < > "). */
+  private[io] def escXml(c: org.apache.spark.sql.Column) =
     replace(replace(replace(replace(
       c, lit("&"), lit("&amp;")), lit("<"), lit("&lt;")), lit(">"), lit("&gt;")),
       lit("\""), lit("&quot;"))

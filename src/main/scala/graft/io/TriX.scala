@@ -2,6 +2,7 @@ package graft.io
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import RdfXml.escXml
 
 /** TriX text export (K2 — "trix" in the reference's serialization list,
   * `Utils/utilities.py:807-808`), as a LINE format over the quad table
@@ -16,11 +17,6 @@ object TriX {
 
   val openTag: String = """<TriX xmlns="http://www.w3.org/2004/03/trix/trix-1/">"""
   val closeTag: String = "</TriX>"
-
-  private def escXml(c: org.apache.spark.sql.Column) =
-    replace(replace(replace(replace(
-      c, lit("&"), lit("&amp;")), lit("<"), lit("&lt;")), lit(">"), lit("&gt;")),
-      lit("\""), lit("&quot;"))
 
   /** quads(graph, subj, pred, obj_value, obj_is_iri, obj_lang, obj_dtype)
     * → one-column ("line") TriX text. */

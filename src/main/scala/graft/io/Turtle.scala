@@ -77,14 +77,7 @@ object Turtle {
       .otherwise(concat(lit("<"), c, lit(">")))
   }
 
-  private def escapeLit(c: Column) =
-    // literal-pattern escapes via replace() (no regex engine; a no-match
-    // pass returns the input untouched) — same replace order as before
-    replace(replace(replace(replace(replace(
-      c, lit("\\"), lit("\\\\")), lit("\""), lit("\\\"")), lit("\n"), lit("\\n")),
-      lit("\r"), lit("\\r")), lit("\t"), lit("\\t"))
-
-  /** DuckDB mirror of escapeLit (same replace order: \\ first, then ",
+  /** DuckDB mirror of NTriples.escapeLit (same replace order: \\ first, then ",
     * \n, \r, \t) — keeps the oracle's serialization well-formed for ANY
     * literal value domain, not just the control-char-free one. */
   def escLitSql(e: String): String =
@@ -114,15 +107,9 @@ object Turtle {
   def export(triples: DataFrame): DataFrame = {
     val spark = triples.sparkSession
     import spark.implicits._
-    val obj = when(col("obj_is_iri"), term(col("obj_value")))
-      .when(col("obj_lang") =!= "",
-        concat(lit("\""), escapeLit(col("obj_value")), lit("\"@"), col("obj_lang")))
-      .when(col("obj_dtype") =!= "",
-        concat(lit("\""), escapeLit(col("obj_value")), lit("\"^^"), term(col("obj_dtype"))))
-      .otherwise(concat(lit("\""), escapeLit(col("obj_value")), lit("\"")))
     val statements = triples
       .select(term(col("subj")).as("s"),
-        concat(term(col("pred")), lit(" "), obj).as("po"))
+        concat(term(col("pred")), lit(" "), NTriples.obj(term)).as("po"))
       .groupBy("s")
       .agg(array_join(array_sort(collect_list(col("po"))), " ; ").as("pos"))
       .select(concat(col("s"), lit(" "), col("pos"), lit(" .")).as("line"))

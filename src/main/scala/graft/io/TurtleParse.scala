@@ -4,15 +4,16 @@ import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** Turtle text import (S5 — the reference parses `additional_triples.ttl`
-  * fixture files back into the graph, `Utils/utilities.py:546-556`,
-  * `Biography/combineTriples.py:90-137`; round 2 shipped only the
-  * N-Triples subset).
+/** Turtle and N-Triples text import (S5 — the reference parses
+  * `additional_triples.ttl` fixture files back into the graph,
+  * `Utils/utilities.py:546-556`, `Biography/combineTriples.py:90-137`).
   *
   * Covers the grouped-statement Turtle subset our own `Turtle.export`
   * emits — `@prefix` headers, `s p1 o1 ; p2 o2 .` statements, prefixed
   * names or `<iri>` terms, and literals with the full escape set plus
-  * optional `@lang` / `^^datatype` suffixes.
+  * optional `@lang` / `^^datatype` suffixes. N-Triples is the subset of
+  * that with no prefixes and one triple per line, so `NTriples.parse` is
+  * this lexer too.
   *
   * Design: `@prefix` directives are GLOBAL state, so they are collected
   * driver-side first (a handful of rows — the header block) and broadcast
@@ -165,8 +166,4 @@ object TurtleParse {
         else Some((v, false, "", ""))
       }
     } else iriOf(tok, pfx).map(iri => (iri, true, "", ""))
-
-  /** S5 widened: merge a Turtle fixture into a graph (union + set dedup). */
-  def mergeInto(graph: DataFrame, ttlLines: DataFrame): DataFrame =
-    graph.unionAll(parse(ttlLines)).distinct()
 }

@@ -155,9 +155,10 @@ object SameAs {
     }
   }
 
-  /** Union-find (path-halving) closure over an already-collected edge set;
-    * canon = lexicographic min of each component — the same map as the
-    * large-star/small-star fixpoint. */
+  /** Union-find (path-halving) closure over an already-collected edge set.
+    * A union links the larger root under the smaller, so every root is its
+    * component's lexicographic min and canon = find(n) — the same map as
+    * the large-star/small-star fixpoint. */
   private def closureOnDriver(spark: org.apache.spark.sql.SparkSession,
                               es: Array[(String, String)]): DataFrame = {
     import spark.implicits._
@@ -173,19 +174,10 @@ object SameAs {
     }
     es.foreach { case (a, b) =>
       val (ra, rb) = (find(a), find(b))
-      if (ra != rb) parent(rb) = ra
-      parent.getOrElseUpdate(a, find(a)); parent.getOrElseUpdate(b, find(b))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
     }
     val nodes = es.iterator.flatMap { case (a, b) => Iterator(a, b) }.toSet
-    val minOf = scala.collection.mutable.HashMap.empty[String, String]
-    nodes.foreach { n =>
-      val r = find(n)
-      minOf.get(r) match {
-        case Some(m) if m <= n => ()
-        case _ => minOf(r) = math.Ordering.String.min(minOf.getOrElse(r, n), n)
-      }
-    }
-    val canon = nodes.toSeq.sorted.map(n => (n, minOf(find(n)))).toDF("node", "canon")
+    val canon = nodes.toSeq.sorted.map(n => (n, find(n))).toDF("node", "canon")
     Caches.broadcastIfSmall(canon, nodes.size)
   }
 

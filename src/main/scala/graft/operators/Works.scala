@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.model.{Ns, Triple}
+import graft.sources.Tables
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -114,18 +115,13 @@ object Works {
       (ok % 11).cast("int") + 1)
     val slim = broadcast(customer.select(col("c_custkey").as("o_custkey"),
       col("c_nationkey")))
-    // spread an under-split orders table across the cores (file-index
-    // probe — the SynthTranscripts.apply contract): the single-file
-    // fixture reads as ~4 scan tasks, and since the single-pass emission
-    // below no longer fans out into 23 union branches, those 4 tasks
-    // would otherwise carry the whole partial aggregation of the final
-    // distinct (measured: 5.3 s vs 1.4 s for the same distinct at full
-    // width). A production table with ≥ cores files keeps its layout.
-    val parts = orders.sparkSession.sparkContext.defaultParallelism
-    val ordersSpread =
-      if (orders.inputFiles.length < parts) orders.repartition(parts)
-      else orders
-    val b = ordersSpread.join(slim, Seq("o_custkey"))
+    // spread an under-split orders table across the cores: the
+    // single-file fixture reads as ~4 scan tasks, and since the
+    // single-pass emission below no longer fans out into 23 union
+    // branches, those 4 tasks would otherwise carry the whole partial
+    // aggregation of the final distinct (measured: 5.3 s vs 1.4 s for the
+    // same distinct at full width)
+    val b = Tables.spread(orders).join(slim, Seq("o_custkey"))
       .withColumn("work_uri", concat(lit(Ns.work), ok.cast("string")))
       .withColumn("origin_uri",
         concat(lit(Ns.work), ok.cast("string"), lit("_activity_statement_0")))

@@ -2,7 +2,7 @@ package graft.sources
 
 import graft.functions.Fns
 import graft.model.Ns
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Authority dictionaries — the analog of the reference's CSV lookup tables
@@ -53,40 +53,31 @@ object Dicts {
   val educationRows: Seq[(Int, String, Seq[String])] =
     (0 until 40 by 2).map(k => (k / 2, s"${Ns.kg}edu/auth/$k", Seq(s"Academy_$k")))
 
-  /** Education dictionary: (key, uri), lowercase keys, first-row-wins. */
-  def educations(spark: SparkSession): DataFrame = {
+  /** An inline authority: explode each row's alt labels, normalize them
+    * with `norm`, keep the first row's term per key. Output: (key, term). */
+  private def inlineDict(spark: SparkSession, rows: Seq[(Int, String, Seq[String])],
+                         norm: Column => Column): DataFrame = {
     import spark.implicits._
-    val raw = educationRows
-      .flatMap { case (rid, term, alts) => alts.map(a => (rid, term, a)) }
+    rows.flatMap { case (rid, term, alts) => alts.map(a => (rid, term, a)) }
       .toDF("row_id", "term", "alt")
-    raw.select(lower(col("alt")).as("key"), col("term"), col("row_id"))
+      .select(norm(col("alt")).as("key"), col("term"), col("row_id"))
       .groupBy("key")
-      .agg(min_by(col("term"), col("row_id")).as("uri"))
+      .agg(min_by(col("term"), col("row_id")).as("term"))
   }
+
+  /** Education dictionary: (key, uri), lowercase keys, first-row-wins. */
+  def educations(spark: SparkSession): DataFrame =
+    inlineDict(spark, educationRows, lower).withColumnRenamed("term", "uri")
 
   /** The retry-chain fallback dictionary, normalized like occupations. */
-  def politicalAffiliations(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    val raw = paRows
-      .flatMap { case (rid, term, alts) => alts.map(a => (rid, term, a)) }
-      .toDF("row_id", "term", "alt")
-    raw.select(Fns.cleanTerm(col("alt")).as("key"), col("term"), col("row_id"))
-      .groupBy("key")
-      .agg(min_by(col("term"), col("row_id")).as("term"))
-  }
+  def politicalAffiliations(spark: SparkSession): DataFrame =
+    inlineDict(spark, paRows, Fns.cleanTerm)
 
-  /** Occupations: explode alt labels, normalize with the cf clean_term
-    * stemmer, keep first row per key. Output: (key, term, is_iri). */
-  def occupations(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    val raw = occupationRows
-      .flatMap { case (rid, term, alts) => alts.map(a => (rid, term, a)) }
-      .toDF("row_id", "term", "alt")
-    raw.select(Fns.cleanTerm(col("alt")).as("key"), col("term"), col("row_id"))
-      .groupBy("key")
-      .agg(min_by(col("term"), col("row_id")).as("term"))
+  /** Occupations: normalized with the cf clean_term stemmer, first row per
+    * key. Output: (key, term, is_iri). */
+  def occupations(spark: SparkSession): DataFrame =
+    inlineDict(spark, occupationRows, Fns.cleanTerm)
       .withColumn("is_iri", col("term").startsWith("http"))
-  }
 
   /** Places: nation ∪ region names → minted place URIs. Normalized with the
     * simple (non-stemming) cleaner, like `Utils/place.py:88-97`. */

@@ -38,18 +38,9 @@ object SynthTranscripts {
     "blacksmith", "zorbulator", "weaver", "Painter", "floozle", "Ontarian")
 
   def apply(spark: SparkSession, dir: String): DataFrame = {
-    val raw = Tables.events(spark, dir)
-    val parts = spark.sparkContext.defaultParallelism
-    // under-split probe via the file index:
-    // a single-row-group events file otherwise reads as ONE task and runs
-    // the whole regex-extraction + link front of every COLD query path
-    // single-threaded (measured 19 s vs ~2 s spread at sf0.1). The shuffled
-    // rows are the narrow raw events; a production table with ≥ cores
-    // files keeps its layout and pays no Exchange (Run additionally
-    // re-buckets by conv_id for the staged layout).
-    val spread = if (raw.inputFiles.length < parts) raw.repartition(parts)
-      else raw
-    project(spread)
+    // the shuffled rows are the narrow raw events (Run additionally
+    // re-buckets by conv_id for the staged layout)
+    project(Tables.spread(Tables.events(spark, dir)))
   }
 
   /** CHILDLESSNESS/SHORTPROSE-style keyword payloads (lifeInfo.py:80-106 +

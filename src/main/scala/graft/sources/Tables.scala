@@ -9,6 +9,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * the scan via Catalyst pushdown (verified in plan tests).
   */
 object Tables {
+  /** The under-split scan rule: a table read from fewer files than the
+    * session has cores is repartitioned across the cores, so a
+    * single-row-group file does not run the whole front of a cold query in
+    * one task (measured 19 s vs ~2 s spread at sf0.1). A table with ≥ cores
+    * files keeps its layout and pays no Exchange. */
+  def spread(df: DataFrame): DataFrame = {
+    val parts = df.sparkSession.sparkContext.defaultParallelism
+    if (df.inputFiles.length < parts) df.repartition(parts) else df
+  }
+
   def t(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
 

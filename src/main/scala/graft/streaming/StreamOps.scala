@@ -89,12 +89,12 @@ object StreamOps {
     spark.read.parquet(s"$outDir/linked").count()
   }
 
-  /** Drain a stream fully into a memory sink and return the batch result.
-    * Used by parity tests and the stream_* verification queries. */
-  def runToBatch(spark: SparkSession, stream: DataFrame, name: String,
-                 mode: String): DataFrame = {
+  /** Drain a stream fully into an append-mode memory sink and return the
+    * batch result. Used by parity tests and the stream_* verification
+    * queries. */
+  def runToBatch(spark: SparkSession, stream: DataFrame, name: String): DataFrame = {
     val q = stream.writeStream
-      .format("memory").queryName(name).outputMode(mode)
+      .format("memory").queryName(name).outputMode("append")
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()

@@ -10,7 +10,17 @@ class NTriplesSpec extends SparkSpec {
   import spark.implicits._
 
   test("export → parse round-trips the emitted triple subset exactly") {
-    val triples = new Pipeline(spark, sfDir).triples
+    // the pipeline graph plus literals that exercise every escape, the
+    // statement separators and '<>' inside quotes, empty and typed values
+    val xsd = "http://www.w3.org/2001/XMLSchema#"
+    val edge = Seq("say \"hi\"", "back\\slash", "a\\nb not a newline",
+      "line\nbreak", "tab\there", "cr\rhere", "a . b", "a ; b", "<not an iri>",
+      "ends with \\", "")
+      .zipWithIndex.flatMap { case (v, i) => Seq(
+        Triple(s"http://ex.org/s$i", "http://ex.org/p", v, false, "", ""),
+        Triple(s"http://ex.org/s$i", "http://ex.org/p", v, false, "en-GB", ""),
+        Triple(s"http://ex.org/s$i", "http://ex.org/p", v, false, "", xsd + "string")) }
+    val triples = new Pipeline(spark, sfDir).triples.unionAll(edge.toDS().toDF())
     val tr = triples.as[Triple].collect().toSet
     val lines = NTriples.export(triples)
     val back = NTriples.parse(lines).as[Triple].collect().toSet

@@ -161,7 +161,7 @@ class StreamParitySpec extends SparkSpec {
 
   test("streaming mention extraction ≡ batch (same operators on readStream)") {
     val got = streaming.StreamOps.runToBatch(spark,
-      streaming.StreamOps.mentionStream(spark, sfDir), "sp_mentions", "append")
+      streaming.StreamOps.mentionStream(spark, sfDir), "sp_mentions")
       .collect().toSet
     val want = new Pipeline(spark, sfDir).mentions
       .select("conv_id", "turn_idx", "kind", "midx", "surface").collect().toSet
@@ -187,7 +187,7 @@ class StreamParitySpec extends SparkSpec {
 
   test("streaming broadcast-link ≡ batch linked frame") {
     val got = streaming.StreamOps.runToBatch(spark,
-      streaming.StreamOps.linkedStream(spark, sfDir), "sp_linked", "append")
+      streaming.StreamOps.linkedStream(spark, sfDir), "sp_linked")
       .collect().toSet
     val want = new Pipeline(spark, sfDir).linked.drop("text", "ts")
       .collect().toSet
