@@ -53,7 +53,10 @@ final class Pipeline(val spark: SparkSession, val dir: String) {
     * namespace), and a bare count over them prunes the string building
     * entirely. Measured (local[2] × scale-19 compute-only, interleaved
     * A/B): 55.7-57.7 s vs 248-355 s for a full-table checkpoint — the
-    * 58.7M-row copy materializes every string column and spills. */
+    * 58.7M-row copy materializes every string column and spills. The
+    * persisted `triples` also meet the contract, but canonicalizing them
+    * counted slower cold at sf0.1 (fresh JVMs, 4 cores): 28.8-31.1 s vs
+    * 22.4-22.8 s for this fact-only checkpoint. */
   def canonTriples: DataFrame = {
     val facts = Emit.factTriples(spark, dir, transcripts, linked)
       .localCheckpoint()
@@ -103,7 +106,9 @@ final class Pipeline(val spark: SparkSession, val dir: String) {
 
 object Pipeline {
 
-  /** The source plan, unpersisted: `Run` lays it out itself. */
+  /** The source plan, unpersisted, spread across the cores when the input
+    * has fewer files than cores (`Tables.spread`). The staged `Run` lays
+    * out its own stage instead (`Run.transcripts`). */
   def transcripts(s: SparkSession, d: String): DataFrame =
     SynthTranscripts(s, d)
 

@@ -2,7 +2,8 @@ package graft
 
 import graft.io.RunManifest
 import graft.operators._
-import org.apache.spark.sql.SparkSession
+import graft.sources.{SynthTranscripts, Tables}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** spark-submit entry point: staged, checkpoint-resumable execution of the
@@ -38,14 +39,7 @@ object Run {
   def execute(spark: SparkSession, sfDir: String, outDir: String,
               resume: Boolean): (Long, Long) = {
     val m = new RunManifest(spark, outDir, resume)
-    val transcripts = m.stage("transcripts") {
-      // the designed ingest layout (SURVEY §4): conv_id-bucketed — one file
-      // per bucket task, so every downstream stage reads in parallel even
-      // when the raw input arrives as one unsplittable row group, and
-      // per-conv work is co-located
-      Pipeline.transcripts(spark, sfDir)
-        .repartition(spark.sparkContext.defaultParallelism, col("conv_id"))
-    }
+    val transcripts = m.stage("transcripts") { Run.transcripts(spark, sfDir) }
     val linked = m.stage("linked") {
       Link.linkAll(spark, sfDir, Mentions.extract(transcripts))
     }
@@ -81,4 +75,13 @@ object Run {
     m.stage("metrics_stats") { Metrics.convStats(triples.drop("bucket")) }
     (m.rows("triples"), m.rows("canon"))
   }
+
+  /** The transcripts stage in the designed ingest layout (SURVEY §4):
+    * conv_id-bucketed — one file per bucket task, so every downstream stage
+    * reads in parallel even when the raw input arrives as one unsplittable
+    * row group, and per-conv work is co-located. The events scan feeds the
+    * hash exchange directly, so it is the stage's only shuffle. */
+  private[graft] def transcripts(spark: SparkSession, sfDir: String): DataFrame =
+    SynthTranscripts.project(Tables.events(spark, sfDir))
+      .repartition(spark.sparkContext.defaultParallelism, col("conv_id"))
 }

@@ -44,16 +44,6 @@ object SparkEntry {
     "kg_first_person" -> (p => p.firstPerson),
     // §2.8 F9/F10 partial-precision date literals + interval expansion
     "kg_dates" -> (p => operators.Dates.dateLiterals(p.transcripts)),
-
-    // Structured Streaming parity: same operators lifted onto readStream,
-    // drained to completion — checked against the SAME oracles as batch
-    "stream_mentions" -> (p => streaming.StreamOps.runToBatch(p.spark,
-      streaming.StreamOps.mentionStream(p.spark, p.dir),
-      "stream_mentions_tbl")),
-    // streaming extraction + broadcast linking (stream-static join)
-    "stream_linked" -> (p => streaming.StreamOps.runToBatch(p.spark,
-      streaming.StreamOps.linkedStream(p.spark, p.dir),
-      "stream_linked_tbl")),
     // §2.3 J3 retry-chain linking (primary → secondary dict → literal)
     "kg_retry_chain" -> (p =>
       operators.Extras.retryChainLink(p.spark, p.mentions)),

@@ -205,33 +205,6 @@ object Fns {
     when(s === "", s).otherwise(replace(acc, lit(".  ."), lit(". ")))
   }
 
-  /** F9 — the FULL 13-format date-parse cascade, one try per strptime
-    * pattern of `Utils/activity.py:82-169` in the reference's order
-    * (%Y-%m-%d, %Y-%m-%d-, %Y--, %Y-, %Y, %Y-%m-, %Y-%m, %B %Y, %d %B %Y,
-    * %Y-%m--, %b %Y, %d %b %Y) plus the full dateTime form the transcript
-    * payloads carry. Returns null (never throws) on unparseable input,
-    * like the reference's `parsed=False` path.
-    */
-  val dateFormats: Seq[String] = Seq(
-    "yyyy-MM-dd HH:mm:ss", // transcript full-precision form
-    "yyyy-MM-dd",
-    "yyyy-MM-dd-",  // trailing-dash variants the Orlando data carries
-    "yyyy--",
-    "yyyy-",
-    "yyyy",
-    "yyyy-MM-",
-    "yyyy-MM",
-    "MMMM yyyy",    // %B %Y
-    "d MMMM yyyy",  // %d %B %Y
-    "yyyy-MM--",
-    "MMM yyyy",     // %b %Y
-    "d MMM yyyy")   // %d %b %Y
-
-  def dateParseCascade(c: Column): Column = {
-    val t = trim(c)
-    coalesce(dateFormats.map(f => try_to_timestamp(t, lit(f))): _*)
-  }
-
   /** `format_date` length-dispatch (`Utils/activity.py:52-73`,
     * `Utils/event.py:90-110`): the reference tags the literal's datatype by
     * the LEXICAL LENGTH of the date string (19→dateTime, 10→date,

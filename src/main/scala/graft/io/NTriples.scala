@@ -10,7 +10,8 @@ import org.apache.spark.sql.functions._
   *
   * Export is a pure projection (concat) — safe at any scale. N-Triples is
   * the subset of Turtle with no prefixes and one triple per line, so the
-  * one Turtle lexer (`TurtleParse`) reads it back.
+  * one Turtle lexer (`TurtleParse.lex`) reads it back, with no prefix
+  * pass.
   */
 object NTriples {
 
@@ -41,10 +42,7 @@ object NTriples {
     ).as("line"))
 
   /** N-Triples lines → triple table, by the Turtle lexer (unparseable lines
-    * are dropped, like the reference's lenient fixture merge). */
-  def parse(lines: DataFrame): DataFrame = TurtleParse.parse(lines)
-
-  /** S5: merge fixture triples into a graph (union + set dedup). */
-  def mergeInto(graph: DataFrame, ntLines: DataFrame): DataFrame =
-    graph.unionAll(parse(ntLines)).distinct()
+    * are dropped, like the reference's lenient fixture merge). Launches no
+    * job until an action. */
+  def parse(lines: DataFrame): DataFrame = TurtleParse.lex(lines, Map.empty)
 }

@@ -12,10 +12,11 @@ import org.apache.spark.sql.functions._
   * conversation whose URIs its subject embeds (conv/context/activity nodes
   * all carry the conv id); triples about global entities (sameAs edges,
   * works) land in the uber graph — the same per-person-file vs uber-file
-  * split the reference serializes. The reference's 3-level BFS copy of
-  * neighbor subgraphs is visualization sugar and is not replayed.
+  * split the reference serializes. `bfs` replays the reference's 3-level
+  * BFS copy of neighbor subgraphs on top of that.
   *
-  * Scale: a pure projection over the triple table — zero shuffle.
+  * Scale: `export` is a pure projection over the triple table — zero
+  * shuffle.
   */
 object Quads {
 
@@ -42,12 +43,9 @@ object Quads {
     * on the driver beyond the loop counter. Output: original quads ∪ the
     * copied levels, set semantics. */
   def bfs(triples: DataFrame): DataFrame = {
-    // the triple table feeds the quad base AND the copy join — two
-    // branches of ONE final union. localCheckpoint, not persist: a
-    // self-union over a merely cached plan silently rebuilds one branch
-    // (Spark's cache substitution fails there — see SameAs.canonicalize
-    // input contract); the RDD-backed checkpoint is eagerly materialized
-    // once and read by every branch.
+    // the triple table feeds the quad base, the edge set AND the copy
+    // join — branches of ONE final union. The checkpoint is materialized
+    // once, whatever plan the caller passes, and read by every branch.
     val t = triples.localCheckpoint()
     val quads = export(t)
     // Frontier expansion factors through the DISTINCT IRI edge set: level
@@ -66,7 +64,7 @@ object Quads {
       .select(graphOf(col("subj")).as("g"), col("subj"),
         col("obj_value").as("dst"))
       .distinct()
-      .localCheckpoint() // feeds every frontier hop — same self-union rule
+      .localCheckpoint() // feeds every frontier hop: built once, not per hop
     // HOME-GRAPH PRUNING (pure narrow filter, no join): the graph label is
     // a FUNCTION of the subject, so a node n with graphOf(n) == g already
     // has ALL its triples in g — copying them is a no-op under the final

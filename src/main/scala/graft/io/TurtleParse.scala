@@ -16,12 +16,14 @@ import org.apache.spark.sql.types._
   * this lexer too.
   *
   * Design: `@prefix` directives are GLOBAL state, so they are collected
-  * driver-side first (a handful of rows — the header block) and broadcast
-  * into the per-line lexer. Statement lexing is genuinely imperative
-  * (a `;` or `>` inside a quoted literal must not split terms), which is
-  * the documented last-resort case for `mapPartitions`: a small
-  * allocation-light scanner per line, no driver loops, no shuffle — the
-  * parse stays a narrow per-partition map over the text.
+  * driver-side first (a handful of rows — the header block) and shipped
+  * with the per-line lexer (`lex`); N-Triples has none and skips that
+  * pass, so its parse launches no job before an action. Statement lexing
+  * is genuinely imperative (a `;` or `>` inside a quoted literal must not
+  * split terms), which is the documented last-resort case for
+  * `mapPartitions`: a small allocation-light scanner per line, no driver
+  * loops, no shuffle — the parse stays a narrow per-partition map over
+  * the text.
   */
 object TurtleParse {
 
@@ -108,7 +110,6 @@ object TurtleParse {
     * lex into full triples are dropped, matching the reference's lenient
     * fixture merge). */
   def parse(lines: DataFrame): DataFrame = {
-    val spark = lines.sparkSession
     // header pass: the @prefix block is config-sized — filter BEFORE the
     // collect so only directive rows ever reach the driver
     val pfx = lines.select("line")
@@ -116,24 +117,28 @@ object TurtleParse {
       .map(_.getString(0)).collect {
         case PrefixLine(p, ns) => p -> ns
       }.toMap
-    val pfxB = spark.sparkContext.broadcast(pfx)
+    lex(lines, pfx)
+  }
+
+  /** The statement lines of `lines` → triple table, prefixed names
+    * resolved through `pfx`; a narrow per-partition map, no job. */
+  private[io] def lex(lines: DataFrame, pfx: Map[String, String]): DataFrame = {
     val rows: Dataset[Row] = lines.select("line")
       .filter(!col("line").startsWith("@prefix"))
       .mapPartitions { it =>
-        val pm = pfxB.value
         it.flatMap { r =>
           val ts = tokens(r.getString(0))
           if (ts.length < 3) Iterator.empty
-          else iriOf(ts.head, pm) match {
+          else iriOf(ts.head, pfx) match {
             case None => Iterator.empty
             case Some(subj) =>
               // ts.tail = p o (';' p o)* '.'
               ts.tail.grouped(3).flatMap { g =>
                 if (g.length < 2) None
                 else for {
-                  pred <- iriOf(g(0), pm)
+                  pred <- iriOf(g(0), pfx)
                   obj = g(1)
-                  row <- objOf(obj, pm).map { case (v, isIri, lang, dt) =>
+                  row <- objOf(obj, pfx).map { case (v, isIri, lang, dt) =>
                     Row(subj, pred, v, isIri, lang, dt)
                   }
                 } yield row

@@ -44,29 +44,6 @@ object Triple {
     struct(cols(subj, pred, obj, isIri, lang, dtype): _*)
 }
 
-/** One transcript turn — the exact input shape demanded by BASELINE.json's
-  * input_hint: (conv_id, turn_idx, role, text, tool, ts).
-  */
-final case class Turn(
-    conv_id: String,
-    turn_idx: Int,
-    role: String,
-    text: String,
-    tool: String,
-    ts: java.sql.Timestamp
-)
-
-/** A detected mention inside one turn (the analog of a tagged XML mention —
-  * NAME/PLACE/ORGNAME/JOB — in the reference, SURVEY.md §2.2).
-  */
-final case class Mention(
-    conv_id: String,
-    turn_idx: Int,
-    kind: String,    // place | person | org | occupation | place_left
-    midx: Int,       // 0-based match position within (turn, kind) — document order
-    surface: String  // raw surface form as it appeared in text
-)
-
 /** Namespace registry — the analog of the reference's NS_DICT
   * (`Utils/utilities.py:35-84`). Ours is a small fixed set; all URIs the
   * engine mints are deterministic functions of input keys.

@@ -46,12 +46,9 @@ object Metrics {
   def termValidation(triples: DataFrame): DataFrame = {
     import graft.model.Ns
     // single pass: each row contributes its predicate role and — for
-    // rdf:type rows — its type role, exploded from one per-row array. The
-    // union-of-two-selects shape this replaces was a self-union over the
-    // (possibly cached) triple frame, which rebuilds one branch's whole
-    // upstream pipeline when cache substitution fails (the round-4
-    // self-union-over-cache trap, BENCH/BASELINE.md); set-identical under
-    // the trailing distinct.
+    // rdf:type rows — its type role, exploded from one per-row array: one
+    // read of the triple frame where a union of two selects reads it
+    // twice; set-identical under the trailing distinct.
     val predRT = struct(lit("predicate").as("role"), col("pred").as("term"))
     val typeRT = struct(lit("type").as("role"), col("obj_value").as("term"))
     triples.select(explode(when(col("pred") === Ns.rdfType,
@@ -75,9 +72,9 @@ object Metrics {
     def inNs(c: org.apache.spark.sql.Column) =
       namespaces.map(ns => c.startsWith(ns)).reduce(_ || _)
     // single pass over both URI positions (explode of the per-row hits)
-    // instead of a subj-select ∪ obj-select self-union — same round-4
-    // cache-trap avoidance as termValidation above; set-identical under
-    // the distinct. The pre-filter repeats the two startsWith tests so
+    // instead of a subj-select ∪ obj-select union — one read of the
+    // triple frame, as in termValidation above; set-identical under the
+    // distinct. The pre-filter repeats the two startsWith tests so
     // the overwhelming majority of rows (no vocab URI in either slot)
     // skip the per-row array allocation + explode entirely — rows it
     // drops contributed an empty array, so the output set is unchanged.

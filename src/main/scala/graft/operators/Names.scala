@@ -76,9 +76,8 @@ object Names {
         when(col("kind") === "birthname",
           element_at(split(col("surface"), " "), 2)).otherwise(lit(null)))
       // every emission row derives from this frame — materialized once
-      // (small: one row per distinct (conv, name)); localCheckpoint per
-      // the self-union-over-cache contract (BENCH/BASELINE.md round 4),
-      // released by the harness (Caches).
+      // (small: one row per distinct (conv, name)), released by the
+      // harness (Caches).
       .localCheckpoint()
     // ONE pass: all 16 per-name triples ride one exploded null-compacted
     // struct array (the former 16-branch self-union re-scanned the frame

@@ -203,12 +203,10 @@ object SameAs {
     * The map is joined as given: `closure` has hinted it or not.
     *
     * INPUT CONTRACT: `triples` is read TWICE (candidate + bypass branches
-    * of one union). Pass a frame that re-scans cheaply — a parquet stage
-    * (Run) or a localCheckpoint. A merely .persist()ed frame is NOT
-    * enough: Spark's cache substitution silently fails for one branch of
-    * a self-union over a cached plan, and that branch rebuilds the whole
-    * upstream pipeline (measured 30 s vs 3 s on the uber graph —
-    * round-3's entire kg_uber_canon heavy tail was this).
+    * of one union). Pass a frame that re-scans cheaply: a parquet stage
+    * (Run), a localCheckpoint, or a persisted frame (on Spark 4.1.2 both
+    * branches of the self-union read its cache — `SameAsSpec` pins this).
+    * An unmaterialized plan is rebuilt once per branch.
     */
   val canonDomain: Seq[String] = Seq(Ns.person, Ns.viaf)
 

@@ -274,8 +274,8 @@ reach AS (
 canon AS (SELECT n AS node, min(m) AS canon FROM reach GROUP BY n)
 """
 
-  // lazy: quadSelect and streamQueries are declared below and would
-  // otherwise still be null when this initializer runs.
+  // lazy: quadSelect is declared below and would otherwise still be null
+  // when this initializer runs.
   private lazy val baseQueries: Map[String, String] = Map(
     "kg_transcripts" ->
       (BASE + "SELECT conv_id, turn_idx, role, text, tool, ts FROM tr"),
@@ -421,7 +421,7 @@ SELECT conv_id, turn_idx, lexical,
        WHEN length(lexical) = 10 THEN lexical || ' 23:59:59'
        ELSE lexical END AS interval_end
 FROM lex""")
-  ) ++ extraQueries ++ round4Queries ++ round5Queries ++ streamQueries
+  ) ++ extraQueries ++ round4Queries ++ round5Queries
 
   // ----- round-5 families: education, friends/intimate, CF contexts -------
 
@@ -1204,14 +1204,4 @@ WHERE l.kind = 'person' AND l.matched"""),
        WHEN obj_dtype <> '' THEN '"' || obj_value || '"^^<' || obj_dtype || '>'
        ELSE '"' || obj_value || '"' END || ' .' AS line
 FROM all_triples"""))
-
-  /** Streaming queries reuse the batch oracles — streaming/batch parity IS
-    * the check. */
-  private val streamQueries: Map[String, String] = Map(
-    "stream_mentions" ->
-      (BASE + "SELECT conv_id, turn_idx, kind, midx, surface FROM men"),
-    // streaming broadcast-link ≡ the batch linked frame
-    "stream_linked" ->
-      (BASE + """SELECT conv_id, turn_idx, kind, midx, surface, matched,
-                 obj_value, obj_is_iri, obj_lang, obj_dtype FROM linked"""))
 }

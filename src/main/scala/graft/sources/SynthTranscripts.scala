@@ -37,11 +37,9 @@ object SynthTranscripts {
     "novelist", "Novels", "singer", "singing", "preacher", "school-teacher",
     "blacksmith", "zorbulator", "weaver", "Painter", "floozle", "Ontarian")
 
-  def apply(spark: SparkSession, dir: String): DataFrame = {
-    // the shuffled rows are the narrow raw events (Run additionally
-    // re-buckets by conv_id for the staged layout)
+  def apply(spark: SparkSession, dir: String): DataFrame =
+    // the shuffled rows, if any, are the narrow raw events
     project(Tables.spread(Tables.events(spark, dir)))
-  }
 
   /** CHILDLESSNESS/SHORTPROSE-style keyword payloads (lifeInfo.py:80-106 +
     * birthDeath.py:15,237-256): seven reproductive-history trigger words,
@@ -58,8 +56,9 @@ object SynthTranscripts {
   val fillerSentence: String =
     " We discussed the quarterly matters at some length and agreed to continue shortly."
 
-  /** The pure projection events → transcripts; shared by the batch reader
-    * above and the Structured Streaming source (graft.streaming).
+  /** The pure projection events → transcripts; shared by the reader above
+    * and `graft.Run.transcripts`, whose conv_id hash exchange takes the
+    * place of the reader's spread.
     *
     * Multi-mention clauses (find_all parity, `Utils/utilities.py:351-360`:
     * the reference collects ALL tagged mentions per paragraph, so some turns

@@ -5,7 +5,7 @@ import graft.io.NTriples
 import graft.model.Triple
 import org.apache.spark.sql.functions._
 
-/** N-Triples round-trip (S5/K2) + sentence-budget / date-cascade helpers. */
+/** N-Triples round-trip (S5/K2) + the sentence-budget helper. */
 class NTriplesSpec extends SparkSpec {
   import spark.implicits._
 
@@ -27,16 +27,14 @@ class NTriplesSpec extends SparkSpec {
     assert(back == tr)
   }
 
-  test("mergeInto unions fixture triples with set semantics (S5)") {
-    val g = Seq(Triple("s1", "p", "o", true, "", "")).toDS().toDF()
-    val nt = Seq(
-      """<s2> <p> "lit with \"quote\""@en .""",
-      """<s1> <p> <o> .""", // duplicate of g after parse
-      "garbage line").toDF("line")
-    val merged = NTriples.mergeInto(g, nt).as[Triple].collect().toSet
-    assert(merged == Set(
-      Triple("s1", "p", "o", true, "", ""),
-      Triple("s2", "p", "lit with \"quote\"", false, "en", "")))
+  test("NTriples.parse launches no job before an action") {
+    val dir = java.nio.file.Files.createTempDirectory("graftnt").toString
+    val t = Seq(Triple("http://ex.org/s", "http://ex.org/p", "o", false, "en", "")).toDS()
+    NTriples.export(t.toDF()).write.mode("overwrite").text(dir)
+    val lines = spark.read.text(dir).toDF("line")
+    var parsed: org.apache.spark.sql.DataFrame = null
+    assert(jobsOf { parsed = NTriples.parse(lines) } == 0)
+    assert(parsed.as[Triple].collect().toSeq == t.collect().toSeq)
   }
 
   test("Turtle export → TurtleParse round-trips the pipeline graph (S5 widened)") {
@@ -81,25 +79,5 @@ class SentenceAndDateSpec extends SparkSpec {
       == "One two three.Four five six.")
     assert(evalStr(Fns.limitToFullSentences(lit("   "), 5)) == "")
     assert(evalStr(Fns.limitToFullSentences(lit("Short."), 10)) == "Short.")
-  }
-
-  test("dateParseCascade accepts the format family, null on junk (F9)") {
-    def p(s: String) = spark.range(1)
-      .select(Fns.dateParseCascade(lit(s)).cast("string")).collect()(0).getString(0)
-    // the full activity.py:82-169 strptime family, incl. the Orlando
-    // trailing-dash variants
-    assert(p("1891-05-03") == "1891-05-03 00:00:00")
-    assert(p("1891-05-03-") == "1891-05-03 00:00:00")
-    assert(p("1891-05") == "1891-05-01 00:00:00")
-    assert(p("1891-05-") == "1891-05-01 00:00:00")
-    assert(p("1891-05--") == "1891-05-01 00:00:00")
-    assert(p("1891") == "1891-01-01 00:00:00")
-    assert(p("1891-") == "1891-01-01 00:00:00")
-    assert(p("1891--") == "1891-01-01 00:00:00")
-    assert(p("May 1891") == "1891-05-01 00:00:00")
-    assert(p("3 May 1891") == "1891-05-03 00:00:00")
-    assert(p("Jun 1891") == "1891-06-01 00:00:00")
-    assert(p("3 Jun 1891") == "1891-06-03 00:00:00")
-    assert(p("not a date") == null)
   }
 }

@@ -1,6 +1,8 @@
 package graft
 
 import graft.operators._
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.functions._
 
 /** Per-operator specs: closure shapes and the BASELINE per-row invariant
@@ -50,6 +52,13 @@ class SameAsSpec extends SparkSpec {
     val after = SameAs.closure(Seq(("a", "b"), ("m", "n"), ("b", "n")).toDF("a", "b"))
       .as[(String, String)].collect().toMap
     assert(Seq("a", "b", "m", "n").forall(after(_) == "a"))
+  }
+
+  test("canonicalize over a persisted frame reads both branches from the cache") {
+    val t = new Pipeline(spark, sfDir).triples // persisted on first use
+    val got = SameAs.canonicalize(t, SameAs.closure(SameAs.edgesOf(t)))
+    assert(planNodes(got) { case s: InMemoryTableScanExec => s }.size == 2)
+    assert(planNodes(got) { case s: FileSourceScanExec => s }.isEmpty)
   }
 }
 

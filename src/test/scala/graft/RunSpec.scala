@@ -4,13 +4,20 @@ import java.nio.file.{Files, Path, Paths, StandardOpenOption}
 import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import graft.io.RunManifest
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 
-/** Resume + streaming-parity specs (SURVEY.md §5 items 4-5). */
+/** The staged run (`graft.Run`): its resume, lineage and plan shape, and the
+  * run manifest that records it (SURVEY.md §5 item 4). */
 class RunSpec extends SparkSpec {
 
   private val stages =
     Seq("transcripts", "linked", "triples", "canon", "metrics_unmapped", "metrics_stats")
+
+  /** Jobs of one cold `Run.execute` over the sf0.001 fixture at local[4]. */
+  private val MaxRunJobs = 32
 
   private def manifest(out: String): Seq[JsonNode] =
     Files.readAllLines(Paths.get(s"$out/manifest.jsonl")).asScala.toSeq
@@ -53,11 +60,26 @@ class RunSpec extends SparkSpec {
       assert(filesOf(doneLine(out, s)).keySet == partFiles(s"$out/$s").map(_.toString).toSet, s)
   }
 
+  test("the transcripts stage shuffles once, hashed on conv_id") {
+    val df = Run.transcripts(spark, sfDir)
+    val exchanges = planNodes(df) { case e: ShuffleExchangeExec => e.outputPartitioning }
+    assert(exchanges.size == 1, df.queryExecution.executedPlan)
+    exchanges.head match {
+      case HashPartitioning(Seq(k: Attribute), _) => assert(k.name == "conv_id")
+      case p => fail(s"expected one conv_id hash exchange, got $p")
+    }
+  }
+
   test("staged run is checkpoint-resumable with per-partition lineage") {
     val out = Files.createTempDirectory("graftrun").toString
     def persistent = spark.sparkContext.getPersistentRDDs.keySet.toSet
     val before = persistent
-    val (t1, c1) = Run.execute(spark, sfDir, out, resume = false)
+    var counts = (0L, 0L)
+    val jobs = jobsOf { counts = Run.execute(spark, sfDir, out, resume = false) }
+    // the staged path's job count: an added job fails here, not only in a
+    // traced benchmark run
+    assert(jobs <= MaxRunJobs, s"Run.execute launched $jobs jobs")
+    val (t1, c1) = counts
     assert(t1 > 0 && c1 > 0 && c1 <= t1)
     // the stages are parquet: a run leaves no cache or checkpoint behind
     assert((persistent -- before).isEmpty,
@@ -154,44 +176,5 @@ class RunManifestSpec extends SparkSpec {
     assert(got.schema.map(f => f.name -> f.dataType) == df.schema.map(f => f.name -> f.dataType))
     assert(m.rows("bucketed") == 20000)
     assert(got.exceptAll(df).isEmpty && df.exceptAll(got).isEmpty)
-  }
-}
-
-class StreamParitySpec extends SparkSpec {
-
-  test("streaming mention extraction ≡ batch (same operators on readStream)") {
-    val got = streaming.StreamOps.runToBatch(spark,
-      streaming.StreamOps.mentionStream(spark, sfDir), "sp_mentions")
-      .collect().toSet
-    val want = new Pipeline(spark, sfDir).mentions
-      .select("conv_id", "turn_idx", "kind", "midx", "surface").collect().toSet
-    assert(got == want)
-    assert(got.nonEmpty)
-  }
-
-  test("streaming runner lands linked parquet; restart is exactly-once") {
-    val out = java.nio.file.Files.createTempDirectory("graft-stream-run").toString
-    val n1 = streaming.StreamOps.executeStreaming(spark, sfDir, out)
-    val want = new Pipeline(spark, sfDir).linked.drop("ts")
-    assert(n1 == want.count())
-    // landed rows equal the batch linked stage, column for column
-    val got = spark.read.parquet(s"$out/linked")
-      .select(want.columns.map(org.apache.spark.sql.functions.col): _*)
-      .collect().toSet
-    assert(got == want.collect().toSet)
-    // restart over the unchanged input: the checkpoint's file-source log
-    // must commit zero new rows (exactly-once per file)
-    val n2 = streaming.StreamOps.executeStreaming(spark, sfDir, out)
-    assert(n2 == n1, s"restart added ${n2 - n1} duplicate rows")
-  }
-
-  test("streaming broadcast-link ≡ batch linked frame") {
-    val got = streaming.StreamOps.runToBatch(spark,
-      streaming.StreamOps.linkedStream(spark, sfDir), "sp_linked")
-      .collect().toSet
-    val want = new Pipeline(spark, sfDir).linked.drop("text", "ts")
-      .collect().toSet
-    assert(got == want)
-    assert(got.nonEmpty)
   }
 }

@@ -3,7 +3,9 @@ package graft
 import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
@@ -32,9 +34,16 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     jobs.get
   }
+
+  /** The nodes of `df`'s physical plan that `pf` matches, looking through
+    * adaptive plans and query stages (not into cached relations). */
+  protected def planNodes[A](df: DataFrame)(pf: PartialFunction[SparkPlan, A]): Seq[A] =
+    SparkSpec.aqe.collect(df.queryExecution.executedPlan)(pf)
 }
 
 object SparkSpec {
+  private object aqe extends AdaptiveSparkPlanHelper
+
   lazy val session: SparkSession =
     SparkSessions.builder("graft-test", "local[4]", "4").getOrCreate()
 }
