@@ -3,12 +3,19 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.broadcast
 
-/** Freeing persistent RDD blocks, and the one broadcast rule.
+/** What is materialized, freeing persistent RDD blocks, and the one
+  * broadcast rule.
+  *
+  * The materialization rule: an operator materializes only a frame its
+  * own plan reads more than once (Catalyst shares no subtree across two
+  * readers; a count that sizes a later join is a read), and the caller
+  * materializes the operator's inputs. A frame read once stays a plain
+  * plan: checkpointing it costs an eager job at plan build and a copy.
   *
   * `localCheckpoint()` persists its backing RDD in the block store, and —
   * unlike DataFrame caches — `spark.catalog.clearCache()` never frees it:
   * only GC-driven cleaning does, which in a long-lived session (Verify's
-  * ~60-query pass, a bench loop, a production driver) accumulates blocks +
+  * 58-query pass, a bench loop, a production driver) accumulates blocks +
   * disk spill indefinitely. Release is therefore explicit:
   *
   *  - `unpersistIds` frees the given RDD ids — a harness keeps a stage

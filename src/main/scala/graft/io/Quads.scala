@@ -41,13 +41,14 @@ object Quads {
     * realized as 3 ITERATED equi-joins frontier⋈triples on subj — each
     * level is a plain shuffle join on the subject key, no recursion state
     * on the driver beyond the loop counter. Output: original quads ∪ the
-    * copied levels, set semantics. */
+    * copied levels, set semantics.
+    *
+    * INPUT CONTRACT: `triples` is read THREE times (the quad base, the edge
+    * set and the copy join). Pass a frame that re-scans cheaply: a parquet
+    * stage, a checkpoint or a persisted frame. An unmaterialized plan
+    * is rebuilt once per reader. */
   def bfs(triples: DataFrame): DataFrame = {
-    // the triple table feeds the quad base, the edge set AND the copy
-    // join — branches of ONE final union. The checkpoint is materialized
-    // once, whatever plan the caller passes, and read by every branch.
-    val t = triples.localCheckpoint()
-    val quads = export(t)
+    val quads = export(triples)
     // Frontier expansion factors through the DISTINCT IRI edge set: level
     // k+1's frontier = distinct (graph, obj) of frontier_k ⋈ triples, which
     // equals frontier_k ⋈ edges — so expand over the slim (subj, dst) edge
@@ -59,12 +60,12 @@ object Quads {
     // distinct cardinality as the edges), so level-0 derives from the
     // slim DISTINCT edge set instead of re-scanning + re-shuffling the
     // full IRI-triple projection a second time (the former frontier-0
-    // distinct was its own full-width pass over `t`).
-    val edges = t.filter(col("obj_is_iri"))
+    // distinct was its own full-width pass over the triple table).
+    val edges = triples.filter(col("obj_is_iri"))
       .select(graphOf(col("subj")).as("g"), col("subj"),
         col("obj_value").as("dst"))
       .distinct()
-      .localCheckpoint() // feeds every frontier hop: built once, not per hop
+      .localCheckpoint() // read by level 1 and both hops
     // HOME-GRAPH PRUNING (pure narrow filter, no join): the graph label is
     // a FUNCTION of the subject, so a node n with graphOf(n) == g already
     // has ALL its triples in g — copying them is a no-op under the final
@@ -77,12 +78,7 @@ object Quads {
     // the DuckDB oracle runs the unpruned definition and hashes equal.
     def pruneHome(f: DataFrame): DataFrame =
       f.filter(col("graph") =!= graphOf(col("subj")))
-    // Each level's frontier feeds TWO consumers (the next hop AND the
-    // reached union) — Catalyst shares no subtrees across them, so without
-    // per-level materialization level 1 was computed 3×, level 2 2× (each
-    // recompute replaying its distinct shuffles and edge joins; visible as
-    // duplicated subtrees in the r6 before-plan). Checkpointing each slim
-    // (graph, subj) frontier runs every hop exactly once.
+    // a frontier is read by the next hop and by the reached union
     var frontier = pruneHome(edges
       .select(col("g").as("graph"), col("dst").as("subj"))).distinct()
       .localCheckpoint()
@@ -97,12 +93,13 @@ object Quads {
     // orders of magnitude smaller than the triple table: broadcast while
     // small (`Caches.broadcastIfSmall`), so the FULL triple table is not
     // shuffled+sorted for this join (a SortMergeJoin moved all 3.1M rows).
-    // The job that materializes the checkpoint observes its row count.
+    // reached is read by its row count (observed by the job that
+    // materializes it), which sizes the broadcast, and by the copy join.
     val rows = Observation()
     val reachedCk = reached.distinct()
       .observe(rows, count(lit(1)).as("rows")).localCheckpoint()
     val copied = graft.Caches.broadcastIfSmall(reachedCk,
-      rows.get("rows").asInstanceOf[Long]).join(t, "subj")
+      rows.get("rows").asInstanceOf[Long]).join(triples, "subj")
       .select(col("graph"), col("subj"), col("pred"), col("obj_value"),
         col("obj_is_iri"), col("obj_lang"), col("obj_dtype"))
     // NO final set-distinct — it is provably a no-op here, and over the

@@ -104,20 +104,15 @@ object Education {
     val b = base.withColumn("n", row_number().over(w).cast("string"))
       .withColumn("ctx", concat(lit(Ns.ctx), col("conv_id"), lit("_"),
         col("ctype"), lit("_"), col("n")))
-      // 14 emission branches read this frame (no cross-branch subtree
-      // sharing in Catalyst) — materialize the small per-block frame once;
-      // released by the harness (Caches)
-      .localCheckpoint()
     val school = col("obj_value")
     val attendPred = element_at(
       array((levelPreds :+ "schoolAttended").map(p => lit(Ns.pred + p)): _*),
       col("lvl") + 1)
-    // ONE pass over the materialized block frame: every per-block triple
-    // rides one exploded struct array (fixed rows null-compacted by their
+    // ONE pass over the block frame: every per-block triple rides one
+    // exploded struct array (fixed rows null-compacted by their
     // m-arithmetic guards; the variable-length award-class rows as a
-    // concatenated transform over the precomputed dispatch table) — the
-    // former 16-branch self-union re-scanned the checkpoint per branch.
-    // Reference citations per row group are unchanged from r5:
+    // concatenated transform over the precomputed dispatch table).
+    // Reference citations per row group:
     //  - awards: skolemized BNode per (conv, turn, midx); classes from the
     //    award_keywords/award_map dispatch (education.py:146-180)
     //  - degrees: context credential (education.py:249)

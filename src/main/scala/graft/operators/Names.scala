@@ -75,15 +75,9 @@ object Names {
       .withColumn("family",
         when(col("kind") === "birthname",
           element_at(split(col("surface"), " "), 2)).otherwise(lit(null)))
-      // every emission row derives from this frame — materialized once
-      // (small: one row per distinct (conv, name)), released by the
-      // harness (Caches).
-      .localCheckpoint()
     // ONE pass: all 16 per-name triples ride one exploded null-compacted
-    // struct array (the former 16-branch self-union re-scanned the frame
-    // per branch). The per-conv PersonNameContext type triple is emitted
-    // per row — the trailing set-distinct collapses it to one per conv,
-    // exactly the old ranked.select(conv).distinct() branch's set.
+    // struct array. The per-conv PersonNameContext type triple is emitted
+    // per row — the trailing set-distinct collapses it to one per conv.
     val nu = col("name_uri")
     val pnctx = concat(lit(Ns.ctx), col("conv_id"), lit("_PersonNameContext_0"))
     val connType = concat(lit(Ns.kg + "type/"), element_at(

@@ -122,16 +122,13 @@ object Relations {
     * for the surviving relationship rows. */
   private def relationshipTriples(tags0: DataFrame, rels0: DataFrame,
       ctxType: String, eventType: String, labelPrefix: String): DataFrame = {
-    // each emission branch below re-evaluates its source frame (no
-    // cross-branch subtree sharing in Catalyst): tags feeds 2 context
-    // branches + the acts join, rels feeds the relation branch + the acts
-    // aggregation ×4 — materialize both once (small: one row per
-    // relationship tag/name); released by the harness (Caches)
+    // both frames are read twice, and Catalyst shares no subtree across
+    // the two readers: tags by ctxTriples and the acts join, rels by
+    // relTriples and the acts aggregation (small: one row per tag/name)
     val tags = tags0.localCheckpoint()
     val rels = rels0.localCheckpoint()
     val convUri = concat(lit(Ns.conv), col("conv_id"))
     // both context-type triples ride one exploded pass over the tag frame
-    // (the two-branch self-union re-scanned it per branch)
     val ctxTriples = tags.select(explode(array(
         Triple.row(col("ctx"), Ns.rdfType, lit(Ns.tContext), isIri = true),
         Triple.row(col("ctx"), Ns.rdfType, lit(Ns.kg + "type/" + ctxType),
@@ -155,11 +152,8 @@ object Relations {
             lit("interpersonalRelationshipWith"),
             lit(splitByCasing("interpersonalRelationshipWith").toLowerCase)): _*),
         col("prd"))))
-    // all four activity triples ride one exploded pass over the
-    // materialized activity frame — the former 4-branch self-union
-    // re-scanned the checkpoint per branch
-    val actsCk = acts.localCheckpoint()
-    val actTriples = actsCk.select(explode(array(
+    // all four activity triples ride one exploded pass over acts
+    val actTriples = acts.select(explode(array(
         Triple.row(col("ctx"), Ns.pred + "linksActivity", col("act"), isIri = true),
         Triple.row(col("act"), Ns.rdfType, lit(Ns.tActivity), isIri = true),
         Triple.row(col("act"), Ns.rdfType, lit(eventType), isIri = true),

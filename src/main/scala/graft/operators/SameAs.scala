@@ -111,7 +111,9 @@ object SameAs {
     val canon = es
       .union(input.flatMap { case (a, b) => Iterator((a, a), (b, b)) })
       .reduceByKey(part, least)
-    canon.localCheckpoint() // cuts the rounds' lineage off the result
+    // read by the count below and by the map's joins; the checkpoint also
+    // cuts the rounds' lineage off the result
+    canon.localCheckpoint()
     val nodes = canon.count()
     free()
     import spark.implicits._

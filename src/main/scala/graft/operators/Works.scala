@@ -117,8 +117,8 @@ object Works {
       col("c_nationkey")))
     // spread an under-split orders table across the cores: the
     // single-file fixture reads as ~4 scan tasks, and since the
-    // single-pass emission below no longer fans out into 23 union
-    // branches, those 4 tasks would otherwise carry the whole partial
+    // single-pass emission below has no union branches to fan out into,
+    // those 4 tasks would otherwise carry the whole partial
     // aggregation of the final distinct (measured: 5.3 s vs 1.4 s for the
     // same distinct at full width)
     val b = Tables.spread(orders).join(slim, Seq("o_custkey"))
@@ -136,17 +136,9 @@ object Works {
         concat(lit(Ns.work), ok.cast("string"), lit("_publisher_role_0")))
       .withColumn("place_uri",
         concat(lit(Ns.place), col("c_nationkey").cast("string")))
-      // materialize the computed columns ONCE: without this barrier
-      // CollapseProject substitutes every withColumn expression into each
-      // of the 23 struct use-sites below (role_name alone fans into 5+
-      // concats), and the resulting mega-projection measured 8.9 s vs
-      // 1.4 s warm — the checkpoint bounds each expression to one
-      // evaluation per row; released by the harness (Caches)
-      .localCheckpoint()
-    // ONE pass over the materialized frame: all 23 per-record triples (13
-    // unconditional, 8 publisher-gated, 2 place-gated) ride one exploded
-    // null-compacted struct array — the former 23-branch self-union
-    // re-scanned the checkpoint per branch. Same multiset.
+    // ONE pass: all 23 per-record triples (13 unconditional, 8
+    // publisher-gated, 2 place-gated) ride one exploded null-compacted
+    // struct array.
     val o = col("origin_uri")
     val personType = when(ck % 10 === 0, lit(Ns.tActor)) // corporate analog
       .otherwise(lit(Ns.tPersonE21))

@@ -1,5 +1,12 @@
 package graft
 
+import graft.operators.{Education, Names, Relations, Works}
+import graft.sources.Tables
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{FileSourceScanExec, RDDScanExec, SparkPlan}
+import org.apache.spark.sql.execution.joins.BaseJoinExec
+import org.apache.spark.sql.execution.window.WindowExec
+
 /** Plan-quality regression guards: the properties that make this pipeline
   * scale must stay visible in the physical plan (SURVEY.md §4) — a future
   * edit that silently turns a dictionary link into a fact-side shuffle or
@@ -79,12 +86,9 @@ class PlanQualitySpec extends SparkSpec {
       assert(!p.contains("BroadcastNestedLoopJoin") &&
         !p.contains("CartesianProduct"), name)
     }
-    // education + CF contexts: narrow projections + one window — no joins
-    // at all (the School link was paid in the linking stage; attrs inlined)
     // education: narrow projection + one window over linked — the ONLY
     // join class anywhere in its plan is linking's own dictionary
-    // broadcast (inlined once per union branch); it must add no shuffle
-    // join of its own
+    // broadcast; it must add no shuffle join of its own
     val edu = operators.Education.educationTriples(linked)
       .queryExecution.executedPlan.toString
     assert(!edu.contains("SortMergeJoin") && !edu.contains("CartesianProduct")
@@ -95,39 +99,53 @@ class PlanQualitySpec extends SparkSpec {
     assert(!cf.contains("Join"), "CF contexts must be join-free")
   }
 
-  test("family emission plans read materialized frames (no per-branch recompute)") {
+  test("family emission plans are single-pass (no per-branch recompute)") {
     spark.catalog.clearCache()
-    // Catalyst shares no common subtrees across union branches: without
-    // the localCheckpoint these emitters re-ran their extraction/window/
-    // join pipeline once PER BRANCH (16× in kg_names). The emission plan
-    // must therefore read the checkpointed frame (ExistingRDD) and carry
-    // no window or join of its own — those are paid once at
-    // materialization.
+    // the caller materializes the inputs, so each plan holds only the
+    // emitter's own operators. Catalyst shares no subtree across union
+    // branches: a self-union over the pre-explode frame would re-scan the
+    // inputs and replay the window or joins a branch needs, once per
+    // branch, and show up here as extra nodes.
+    val tr = Pipeline.transcripts(spark, sfDir).localCheckpoint()
+    val lk = linked.localCheckpoint()
+    def nodes(df: DataFrame)(pf: PartialFunction[SparkPlan, Any]) =
+      planNodes(df)(pf).size
+    val friends = Relations.friendTriples(lk)
+    // (emitter, plan, windows, joins, scans) of its one pass
     val cases = Seq(
-      "kg_names" -> operators.Names.nameTriples(Pipeline.transcripts(spark, sfDir)),
-      "kg_friends" -> operators.Relations.friendTriples(linked),
-      "kg_education" -> operators.Education.educationTriples(linked))
-    for ((name, df) <- cases) {
-      val p = df.queryExecution.executedPlan.toString
-      assert(p.contains("Scan ExistingRDD"),
-        s"$name must read its checkpointed emission frame")
-      assert(!p.contains("Window"),
-        s"$name emission must not replay its window per branch")
-      assert(!p.contains("Join"),
-        s"$name emission must not replay its joins per branch")
+      // two scans: the nickname and birth-name projections of the input
+      ("kg_names", Names.nameTriples(tr), 1, 0, 2),
+      ("kg_education", Education.educationTriples(lk), 1, 0, 1),
+      ("kg_works_agents", Works.agentTriples(Tables.orders(spark, sfDir),
+        Tables.customer(spark, sfDir)), 0, 1, 2),
+      // the activity frame's window + its join with the tags
+      ("kg_friends", friends, 1, 1, 4),
+      ("kg_intimate", Relations.intimateTriples(lk), 1, 1, 4))
+    for ((name, df, windows, joins, scans) <- cases) {
+      assert(nodes(df) { case w: WindowExec => w } == windows, s"$name windows")
+      assert(nodes(df) { case j: BaseJoinExec => j } == joins, s"$name joins")
+      assert(nodes(df) { case s: RDDScanExec => s; case s: FileSourceScanExec => s }
+        == scans, s"$name scans")
     }
-    // works_agents emits its 23 per-record triples as ONE exploded pass
-    // over its checkpointed frame (r6): the emission plan must read the
-    // materialized frame (join + computed columns paid once there) and
-    // carry no join/window of its own
-    val wa = operators.Works.agentTriples(
-      sources.Tables.orders(spark, sfDir), sources.Tables.customer(spark, sfDir))
-      .queryExecution.executedPlan.toString
-    assert(wa.contains("Scan ExistingRDD"),
-      "works_agents must read its checkpointed emission frame")
-    assert(!wa.contains("Join") && !wa.contains("Window"),
-      "works_agents emission must stay single-pass and join-free")
+    // the relationship families read their twice-read tags and rels from
+    // checkpoints: two readers each
+    assert(nodes(friends) { case s: RDDScanExec => s } == 4,
+      "kg_friends must read tags and rels from their checkpoints")
     Caches.releaseAll(spark)
+  }
+
+  test("family emitters launch no job before an action") {
+    // inputs built outside the count: only the emitters' construction is
+    // measured, and a frame they read once is a plain plan
+    val tr = Pipeline.transcripts(spark, sfDir)
+    val lk = linked
+    val (orders, customer) =
+      (Tables.orders(spark, sfDir), Tables.customer(spark, sfDir))
+    for ((name, build) <- Seq[(String, () => DataFrame)](
+        "kg_names" -> (() => Names.nameTriples(tr)),
+        "kg_education" -> (() => Education.educationTriples(lk)),
+        "kg_works_agents" -> (() => Works.agentTriples(orders, customer))))
+      assert(jobsOf(build()) == 0, name)
   }
 
   test("whole-stage codegen covers the extraction path (no UDF breaks)") {

@@ -20,11 +20,13 @@ class TripleTableSpec extends SparkSpec {
   }
 
   test("every kg_uber branch returns Triple's six columns and types, in order") {
-    // kg_uber unions its branches by position
+    // kg_uber unions its branches by position; every branch is read over
+    // one stage graph, as kg_uber reads them
     val layout = Encoders.product[Triple].schema.fields
       .map(f => (f.name, f.dataType)).toSeq
+    val p = new Pipeline(spark, sfDir)
     try OracleSql.uberParts.foreach { q =>
-      val got = SparkEntry.queries(q)(spark, sfDir).schema.fields
+      val got = SparkEntry.stages(q)(p).schema.fields
         .map(f => (f.name, f.dataType)).toSeq
       assert(got == layout, s"$q")
     } finally release()
