@@ -41,7 +41,7 @@ object Bench {
       import java.nio.file.{Files, Paths}
       import org.apache.spark.sql.functions._
       val tmp = Files.createTempDirectory("graft-bench-in")
-      Seq("nation", "region", "customer", "supplier", "part", "orders",
+      Seq("nation", "region", "customer", "supplier", "orders",
         "lineitem").foreach { t =>
         Files.createSymbolicLink(tmp.resolve(s"$t.parquet"),
           Paths.get(s"$sfDir/$t.parquet"))

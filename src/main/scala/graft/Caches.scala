@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions.broadcast
   * `localCheckpoint()` persists its backing RDD in the block store, and —
   * unlike DataFrame caches — `spark.catalog.clearCache()` never frees it:
   * only GC-driven cleaning does, which in a long-lived session (Verify's
-  * 58-query pass, a bench loop, a production driver) accumulates blocks +
+  * 46-query pass, a bench loop, a production driver) accumulates blocks +
   * disk spill indefinitely. Release is therefore explicit:
   *
   *  - `unpersistIds` frees the given RDD ids — a harness keeps a stage

@@ -4,8 +4,6 @@ import graft.operators._
 import graft.sources.SynthTranscripts
 import org.apache.spark.storage.StorageLevel
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
 
 /** The stage graph of one input (SURVEY.md §3.1 Spark trace):
   * transcripts → mentions → broadcast-linked → triple emit → sameAs closure
@@ -72,36 +70,6 @@ final class Pipeline(val spark: SparkSession, val dir: String) {
   def ordinals: DataFrame =
     Emit.ctxFrame(linked)
       .select("conv_id", "turn_idx", "kind", "midx", "ordinal", "ctx_uri")
-
-  /** W2 "closest heading": each turn gets the text of the nearest
-    * role=system turn at-or-before it, falling back to the nearest after
-    * (`Utils/context.py:61-92`). Pure window functions, co-partitioned with
-    * the conv bucketing — one shuffle on conv_id.
-    */
-  def headings: DataFrame = {
-    val h = when(col("role") === "system", col("text"))
-    val before = Window.partitionBy("conv_id").orderBy("turn_idx")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val after = Window.partitionBy("conv_id").orderBy("turn_idx")
-      .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    transcripts.select(col("conv_id"), col("turn_idx"),
-      coalesce(
-        last(h, ignoreNulls = true).over(before),
-        first(h, ignoreNulls = true).over(after),
-        lit("")).as("heading"))
-  }
-
-  /** A7 "first mentioned" person per conversation
-    * (`Biography/biography.py:139-144`: mother/father = first mentioned).
-    * Order key is document order (turn_idx, midx) packed into one BIGINT
-    * with a 10^6 radix — collision-free for any realistic mention count
-    * per turn and overflow-free for any turn index. */
-  def firstPerson: DataFrame =
-    linked.filter(col("kind") === "person")
-      .groupBy("conv_id")
-      .agg(min_by(col("obj_value"),
-        col("turn_idx").cast("long") * 1000000L + col("midx"))
-        .as("first_person"))
 }
 
 object Pipeline {

@@ -38,33 +38,10 @@ object SparkEntry {
     "kg_unmapped" -> (p => Metrics.unmappedHistogram(p.linked)),
     // §2.4 A3 run statistics
     "kg_stats" -> (p => Metrics.convStats(p.triples)),
-    // §2.5 W2 closest heading
-    "kg_heading" -> (p => p.headings),
-    // §2.4 A7 first-mention selection
-    "kg_first_person" -> (p => p.firstPerson),
     // §2.8 F9/F10 partial-precision date literals + interval expansion
     "kg_dates" -> (p => operators.Dates.dateLiterals(p.transcripts)),
-    // §2.3 J3 retry-chain linking (primary → secondary dict → literal)
-    "kg_retry_chain" -> (p =>
-      operators.Extras.retryChainLink(p.spark, p.mentions)),
-    // §2.4 A2 attribute regrouping (sorted deterministic lists)
-    "kg_grouped_attrs" -> (p => operators.Extras.groupedAttrs(p.linked)),
-    // §2.2 P8 keyword role detection
-    "kg_writer_acquaintances" -> (p =>
-      operators.Extras.writerAcquaintances(p.linked)),
-    // §2.7 U2 retraction-as-precedence org retyping
-    "kg_org_types" -> (p => operators.Extras.orgTypeTriples(p.linked)),
     // §2.6 O3 deterministic top-k failure report
-    "kg_top_unmapped" -> (p => operators.Extras.topUnmapped(p.linked)),
-    // §2.3 J4 fuzzy (levenshtein≤1) place retry on exact-miss
-    "kg_fuzzy_place" -> (p =>
-      operators.Extras.fuzzyPlaceLink(p.spark, p.dir, p.linked)),
-    // §2.2 P11 generic-name stoplist suppression
-    "kg_stoplist" -> (p => operators.Extras.stoplistFiltered(p.linked)),
-    // §2.3 J9 employer attach (co-mention join)
-    "kg_employer" -> (p => operators.Extras.employerAttach(p.linked)),
-    // §2.6 O2 deterministic sample selection
-    "kg_sample" -> (p => operators.Extras.sampleConvs(p.transcripts)),
+    "kg_top_unmapped" -> (p => Metrics.topUnmapped(p.linked)),
     // §2.1 K2 N-Triples text export (pure projection)
     "kg_nt_lines" -> (p => io.NTriples.export(p.triples)),
     // §2.1 K2 Turtle export: @prefix table + grouped-by-subject statements
@@ -74,9 +51,6 @@ object SparkEntry {
     "kg_works" -> (p => operators.Works.workTriples(
       sources.Tables.orders(p.spark, p.dir),
       sources.Tables.lineitem(p.spark, p.dir))),
-    // §2.3 J11 family sex-consistency placeholder (writers_sex.csv analog)
-    "kg_family_placeholder" -> (p =>
-      operators.Extras.familyPlaceholder(p.spark, p.dir, p.linked)),
     // §2.1 K4 quad export: subject-centric named graphs (huvizQuads analog)
     "kg_quads" -> (p => io.Quads.export(p.triples)),
     // §2.1 K2 JSON-LD-lines export (one sorted node object per subject)
@@ -87,12 +61,10 @@ object SparkEntry {
     "kg_freestanding" -> (p =>
       operators.Emit.freestandingEvents(p.transcripts)),
     // xsd:int-typed literal emission (children counts, lifeInfo.py:346-347)
-    "kg_children" -> (p => operators.Extras.childrenCounts(p.linked)),
+    "kg_children" -> (p => operators.Families.childrenCounts(p.linked)),
     // ontology-term validation (verify_terms.py analog): distinct predicate
     // / type inventory with a known-in-vocabulary flag
     "kg_term_validation" -> (p => operators.Metrics.termValidation(p.triples)),
-    // §2.8 F15 real %-encoding in minted agent URIs (modsBib.py:960-961)
-    "kg_agent_uris" -> (p => operators.Extras.agentUris(p.mentions)),
     // personname family (personname.py): typed NameEntity variants with
     // connotation dispatch, birth-name part graphs, IndexedName std entry
     "kg_names" -> (p => operators.Names.nameTriples(p.transcripts)),

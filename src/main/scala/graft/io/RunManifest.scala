@@ -5,9 +5,6 @@ import scala.jdk.CollectionConverters._
 import scala.util.Try
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.ObjectNode
-import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.{DataType, StructType}
 
@@ -58,25 +55,12 @@ class RunManifest(spark: SparkSession, out: String, resume: Boolean) {
         DataType.fromJson(l.get("schema").asText).asInstanceOf[StructType])).toOption)
       .toMap
 
-  /** Every `part-*` file under `dir`, recursively and relative to it, →
+  /** Every data file under `dir` (its `part-*` files), relative to it, →
     * the row count in its parquet footer. Runs on the driver. */
-  private def committed(dir: String): Map[String, Long] = {
-    val conf = spark.sessionState.newHadoopConf()
-    val root = new Path(dir)
-    val fs = root.getFileSystem(conf)
-    val base = fs.makeQualified(root).toUri
-    val it = fs.listFiles(root, true)
-    val files = Map.newBuilder[String, Long]
-    while (it.hasNext) {
-      val st = it.next()
-      if (st.getPath.getName.startsWith("part-")) {
-        val r = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
-        try files += base.relativize(st.getPath.toUri).getPath -> r.getRecordCount
-        finally r.close()
-      }
-    }
-    files.result()
-  }
+  private def committed(dir: String): Map[String, Long] =
+    Footers(spark, dir).map { case (f, footer) =>
+      f -> footer.getBlocks.asScala.map(_.getRowCount).sum
+    }.toMap
 
   private def appendLine(line: ObjectNode): Unit =
     Files.writeString(manifestPath, json.writeValueAsString(line) + "\n",

@@ -6,12 +6,13 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Round-4 reference-breadth families: gender extraction, per-relation
-  * family predicates, cause-of-death linking, and title↔BIBCIT matching.
+  * family predicates and children counts, cause-of-death linking, and
+  * title↔BIBCIT matching.
   *
-  * All four are narrow projections / broadcast joins over the shared
-  * mention or transcript frames — no new fact-side shuffles beyond one
-  * ordinal window (titleRefs) and one tiny near-miss theta-join against a
-  * ~10-row broadcast (codNearMiss).
+  * All are narrow projections / broadcast joins over the shared mention or
+  * transcript frames — no new fact-side shuffles beyond one per-conv
+  * aggregate (childrenCounts), one ordinal window (titleRefs) and one tiny
+  * near-miss theta-join against a ~10-row broadcast (codNearMiss).
   */
 object Families {
 
@@ -105,6 +106,18 @@ object Families {
         .otherwise(col("obj_value")), isIri = true): _*)
       .distinct()
   }
+
+  /** kg_children (`Biography/lifeInfo.py:346-347`: CHILDREN tag NUMBER
+    * attrs become xsd:int-typed literals): the conversation's count of
+    * distinct known persons, emitted with the canonical integer lexical
+    * form — the one output datatype the other emitters don't exercise. */
+  def childrenCounts(linked: DataFrame): DataFrame =
+    linked.filter(col("kind") === "person")
+      .groupBy("conv_id")
+      .agg(countDistinct(col("obj_value")).as("n"))
+      .select(Triple.cols(concat(lit(Ns.conv), col("conv_id")),
+        Ns.pred + "childrenCount", col("n").cast("string"),
+        isIri = false, dtype = Ns.xsdInt): _*)
 
   // ---- birth-position family ---------------------------------------------
 

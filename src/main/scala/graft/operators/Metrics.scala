@@ -3,9 +3,10 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Run metrics — the analog of the reference's mapping-failure histograms
-  * (`Biography/culturalForm.py:546-638`, `Utils/place.py:100-113`) and
-  * run statistics (`Biography/bio_extraction.py:84-90`). These are emitted
+/** Run metrics — the analog of the reference's mapping-failure histograms,
+  * sorted into a top-k report (`Biography/culturalForm.py:546-638`,
+  * `Utils/place.py:100-113`), and of its run statistics
+  * (`Biography/bio_extraction.py:84-90`). These are emitted
   * as queryable DataFrames (and persisted next to the output by the sink)
   * instead of log lines.
   */
@@ -16,6 +17,14 @@ object Metrics {
     linked.filter(!col("matched"))
       .groupBy(col("kind"), col("surface"))
       .agg(count(lit(1)).as("n"))
+
+  /** O3: the `k` most frequent unmapped values as a deterministic top-k
+    * report (`culturalForm.py:626` sorts fails desc): full tie-break
+    * (n desc, kind, surface) so LIMIT is reproducible. */
+  def topUnmapped(linked: DataFrame, k: Int = 5): DataFrame =
+    unmappedHistogram(linked)
+      .orderBy(col("n").desc, col("kind"), col("surface"))
+      .limit(k)
 
   /** A3: triples-per-conversation statistics (total/max/min/avg), one row.
     * The conv of a triple is read off its subject URI (`Fns.convOf`: one
@@ -105,7 +114,9 @@ object Vocabulary {
     Ns.memberOf, Ns.hasOccupation, Ns.hasEducation, Ns.hasTimeSpan,
     Ns.atSomeTimeWithin, Ns.beginOfBegin, Ns.endOfEnd, Ns.hasCertainty,
     Ns.hasGenre, Ns.authoredBy, Ns.relatedWork,
-    // emitted by standalone operators (Extras), outside Pipeline.triples
+    // childrenCount is emitted by Families.childrenCounts, outside
+    // Pipeline.triples; employedAt and knowsWriter are ontology terms that
+    // no emitter uses
     Ns.pred + "employedAt", Ns.pred + "childrenCount", Ns.pred + "knowsWriter",
     Ns.tPerson, Ns.tContext, Ns.tActivity, Ns.tTimeSpan, Ns.tEvent, Ns.tWork)
 

@@ -328,10 +328,6 @@ SELECT ev_uri, '${Ns.atSomeTimeWithin}', lexical, FALSE, '',
             WHEN length(lexical) IN (4,5) THEN '${Ns.xsdGYear}'
             ELSE '${Ns.xsdString}' END FROM evu"""),
     "kg_quads" -> (BASE + quadSelect),
-    "kg_agent_uris" ->
-      (BASE + s"""SELECT DISTINCT surface,
-  '${Ns.kg}agent/' || replace(surface, '#', '%23') AS agent_uri
-FROM men WHERE kind IN ('person','org')"""),
     "kg_jsonld_lines" -> {
       val e = graft.io.Turtle.escJsonSql("obj_value")
       (BASE + s""", objs AS (
@@ -385,19 +381,6 @@ LEFT JOIN canon co ON t.obj_is_iri AND t.obj_value = co.node"""),
 SELECT count(*) AS n_convs, CAST(sum(n) AS BIGINT) AS total_triples, max(n) AS max_per_conv,
        min(n) AS min_per_conv, CAST(sum(n) AS DOUBLE)/count(*) AS avg_per_conv
 FROM per"""),
-    "kg_heading" ->
-      (BASE + """SELECT conv_id, turn_idx,
-  COALESCE(
-    last_value(CASE WHEN role='system' THEN text END IGNORE NULLS)
-      OVER (PARTITION BY conv_id ORDER BY turn_idx ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
-    first_value(CASE WHEN role='system' THEN text END IGNORE NULLS)
-      OVER (PARTITION BY conv_id ORDER BY turn_idx ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING),
-    '') AS heading
-FROM tr"""),
-    "kg_first_person" ->
-      (BASE + """SELECT conv_id,
-  min_by(obj_value, CAST(turn_idx AS BIGINT) * 1000000 + midx) AS first_person
-FROM linked WHERE kind = 'person' GROUP BY conv_id"""),
     "kg_dates" ->
       (BASE + s""", lex AS (
   SELECT conv_id, turn_idx,
@@ -1082,11 +1065,6 @@ UNION ALL SELECT act_uri, '${Ns.rdfType}', '${Ns.kg}event/' || fam || 'Event', T
 UNION ALL SELECT act_uri, '${Ns.rdfsLabel}', lab, FALSE, 'en', '' FROM oc3"""
   }
 
-  /** PA dictionary rows for the retry chain (mirrors Dicts.paRows). */
-  private val paDictValues = Dicts.paRows
-    .flatMap { case (rid, term, alts) => alts.map(a => s"($rid,'$term','$a')") }
-    .mkString(",")
-
   private lazy val extraQueries: Map[String, String] = Map(
     "kg_works_agents" -> worksAgentsQuery,
     "kg_labels" -> labelsQuery,
@@ -1096,66 +1074,9 @@ UNION ALL SELECT act_uri, '${Ns.rdfsLabel}', lab, FALSE, 'en', '' FROM oc3"""
     "kg_titles" -> titlesQuery,
     "kg_writing" -> writingQuery,
     "kg_lifeinfo" -> lifeinfoQuery,
-    "kg_retry_chain" ->
-      (BASE + s""", pa_dict_raw(row_id, term, alt) AS (VALUES $paDictValues),
-pa_dict AS (SELECT ${stem("alt")} AS key, min_by(term, row_id) AS term
-            FROM pa_dict_raw GROUP BY 1)
-SELECT m.conv_id, m.turn_idx, m.surface,
-  CASE WHEN p.term LIKE 'http%' THEN p.term
-       WHEN p.term IS NOT NULL THEN 'ISO-3166-2:' || p.term
-       ELSE COALESCE(s.term, m.surface) END AS obj_value,
-  CASE WHEN p.term IS NOT NULL THEN 'primary'
-       WHEN s.term IS NOT NULL THEN 'retry' ELSE 'literal' END AS source
-FROM men m
-LEFT JOIN occ_dict p ON ${stem("m.surface")} = p.key
-LEFT JOIN pa_dict s ON ${stem("m.surface")} = s.key
-WHERE m.kind = 'occupation'"""),
-    "kg_grouped_attrs" ->
-      (BASE + """SELECT conv_id, kind,
-  string_agg(DISTINCT obj_value, '|' ORDER BY obj_value) AS vals,
-  count(*) AS n_mentions
-FROM emitting GROUP BY conv_id, kind"""),
-    "kg_writer_acquaintances" ->
-      (BASE + s"""SELECT DISTINCT '${Ns.conv}' || conv_id AS subj,
-  '${Ns.pred}knowsWriter' AS pred, obj_value
-FROM linked WHERE kind = 'person' AND lower(text) LIKE '%working as novel%'"""),
-    "kg_org_types" ->
-      (BASE + s""", orgs AS (
-  SELECT obj_value AS org_uri, count(*) AS n FROM linked
-  WHERE kind = 'org' AND matched GROUP BY 1)
-SELECT org_uri,
-  CASE WHEN n >= 3 THEN '${Ns.kg}type/MajorOrg' ELSE '${Ns.kg}type/Org' END AS type_uri
-FROM orgs"""),
     "kg_top_unmapped" ->
       (BASE + """SELECT kind, surface, count(*) AS n FROM linked WHERE NOT matched
 GROUP BY 1, 2 ORDER BY n DESC, kind, surface LIMIT 5"""),
-    "kg_fuzzy_place" ->
-      (BASE + s""", misses AS (
-  SELECT conv_id, turn_idx, surface, ${cleanSimple("surface")} AS key
-  FROM linked WHERE kind = 'place' AND NOT matched),
-cands AS (
-  SELECT m.conv_id, m.turn_idx, m.surface, d.uri,
-         levenshtein(m.key, d.key) AS lev
-  FROM misses m JOIN place_dict d ON levenshtein(m.key, d.key) <= 1),
-ranked AS (
-  SELECT *, row_number() OVER (PARTITION BY conv_id, turn_idx, surface
-                               ORDER BY lev, uri) AS rn
-  FROM cands)
-SELECT conv_id, turn_idx, surface, uri, lev FROM ranked WHERE rn = 1"""),
-    "kg_stoplist" ->
-      (BASE + s"""SELECT DISTINCT conv_id, turn_idx, surface FROM linked
-WHERE kind = 'occupation' AND surface NOT IN (${
-        graft.operators.Extras.genericStoplist.map(w => s"'$w'").mkString(",")
-      })"""),
-    "kg_employer" ->
-      (BASE + s"""SELECT DISTINCT '${Ns.conv}' || o.conv_id AS subj,
-  '${Ns.pred}employedAt' AS pred, o.obj_value
-FROM linked o JOIN linked c
-  ON c.conv_id = o.conv_id AND c.turn_idx = o.turn_idx AND c.kind = 'occupation'
-WHERE o.kind = 'org' AND o.matched"""),
-    "kg_sample" ->
-      (BASE + """SELECT conv_id, turn_idx, role, text, tool, ts FROM tr
-WHERE CAST(substr(conv_id, 6) AS INT) % 10 = 0"""),
     "kg_works" -> s"""
 WITH gmap AS (
   SELECT l_orderkey AS o_orderkey,
@@ -1182,15 +1103,6 @@ FROM (SELECT o_orderkey,
              lag(o_orderkey) OVER (PARTITION BY o_custkey ORDER BY o_orderkey) AS prev
       FROM orders)
 WHERE prev IS NOT NULL""",
-    "kg_family_placeholder" ->
-      (BASE + s"""SELECT l.conv_id, l.turn_idx, l.midx,
-  CASE WHEN l.turn_idx % 2 = 0 THEN 'mother' ELSE 'father' END AS relation,
-  CASE WHEN d.gender <> (CASE WHEN l.turn_idx % 2 = 0 THEN 'female' ELSE 'male' END)
-       THEN '${Ns.conv}' || l.conv_id || '_PLACEHOLDER_' ||
-            (CASE WHEN l.turn_idx % 2 = 0 THEN 'mother' ELSE 'father' END)
-       ELSE l.obj_value END AS member_uri
-FROM linked l JOIN people_dict d ON d.uri = l.obj_value
-WHERE l.kind = 'person' AND l.matched"""),
     "kg_ttl_lines" -> ttlQuery,
     // N3 ⊇ Turtle for plain graphs — the N3 exporter shares the Turtle
     // renderer, so its oracle IS the Turtle oracle

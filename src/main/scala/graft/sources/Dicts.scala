@@ -38,14 +38,6 @@ object Dicts {
     (8, "CA-ON",             Seq("Ontarian")) // non-http term → ISO literal path
   )
 
-  /** Secondary "political affiliation"-style dictionary for the retry
-    * chain (J3, `Biography/culturalForm.py:247-273`: Religion-with-retry →
-    * PoliticalAffiliation → Religion): terms absent from the primary
-    * occupation dictionary may still resolve here. */
-  val paRows: Seq[(Int, String, Seq[String])] = Seq(
-    (0, Ns.kg + "pa/shadow-cabinet", Seq("zorbulator"))
-  )
-
   /** Education authority rows — EDU_MAP analog
     * (`Biography/education.py:459-472`): even-numbered academies carry
     * LINCS-style authority URIs; odd ones miss and get skolemized
@@ -68,10 +60,6 @@ object Dicts {
   /** Education dictionary: (key, uri), lowercase keys, first-row-wins. */
   def educations(spark: SparkSession): DataFrame =
     inlineDict(spark, educationRows, lower).withColumnRenamed("term", "uri")
-
-  /** The retry-chain fallback dictionary, normalized like occupations. */
-  def politicalAffiliations(spark: SparkSession): DataFrame =
-    inlineDict(spark, paRows, Fns.cleanTerm)
 
   /** Occupations: normalized with the cf clean_term stemmer, first row per
     * key. Output: (key, term, is_iri). */

@@ -19,8 +19,12 @@ object Tables {
     if (df.inputFiles.length < parts) df.repartition(parts) else df
   }
 
-  def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** Table `name` of `dir`, read with the schema of its parquet footer
+    * (`Footers.schema`): building the frame launches no Spark job. */
+  def t(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    spark.read.schema(graft.io.Footers.schema(spark, path)).parquet(path)
+  }
 
   def events(s: SparkSession, d: String): DataFrame    = t(s, d, "events")
   def nation(s: SparkSession, d: String): DataFrame    = t(s, d, "nation")

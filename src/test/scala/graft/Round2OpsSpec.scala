@@ -1,7 +1,7 @@
 package graft
 
 import graft.model.Ns
-import graft.operators.{Extras, Works}
+import graft.operators.Works
 import org.apache.spark.sql.functions._
 
 /** Unit specs for the round-2 operators (each is also oracle-gated; these
@@ -41,24 +41,5 @@ class Round2OpsSpec extends SparkSpec {
     assert(term(Ns.kg + "pa/shadow-cabinet") == s"<${Ns.kg}pa/shadow-cabinet>")
     assert(term("http://www.w3.org/2001/XMLSchema#string") == "xsd:string")
     assert(term("http://elsewhere.example/x") == "<http://elsewhere.example/x>")
-  }
-
-  test("family placeholder: conflict rewrites to _PLACEHOLDER_<relation>") {
-    val got = Extras.familyPlaceholder(spark, sfDir, new Pipeline(spark, sfDir).linked)
-      .as[(String, Int, Int, String, String)].collect()
-    assert(got.nonEmpty)
-    got.foreach { case (conv, turn, _, rel, uri) =>
-      assert(rel == (if (turn % 2 == 0) "mother" else "father"))
-      // placeholders carry the relation; authority URIs parse as person ids
-      // with the matching gender parity (mother↔even custkey, father↔odd)
-      if (uri.contains("_PLACEHOLDER_")) {
-        assert(uri == s"${Ns.conv}${conv}_PLACEHOLDER_$rel")
-      } else {
-        val id = uri.stripPrefix(Ns.person).toLong
-        assert(((id / 2) % 2 == 0) == (rel == "mother"))
-      }
-    }
-    assert(got.exists(_._5.contains("_PLACEHOLDER_")))
-    assert(got.exists(!_._5.contains("_PLACEHOLDER_")))
   }
 }

@@ -17,7 +17,7 @@ class RunSpec extends SparkSpec {
     Seq("transcripts", "linked", "triples", "canon", "metrics_unmapped", "metrics_stats")
 
   /** Jobs of one cold `Run.execute` over the sf0.001 fixture at local[4]. */
-  private val MaxRunJobs = 32
+  private val MaxRunJobs = 26
 
   private def manifest(out: String): Seq[JsonNode] =
     Files.readAllLines(Paths.get(s"$out/manifest.jsonl")).asScala.toSeq

@@ -15,8 +15,8 @@ import sys
 import duckdb
 import pandas as pd
 
-TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events"]
+TABLES = ["region", "nation", "customer", "supplier", "orders", "lineitem",
+          "events"]
 
 
 def normalize(df: pd.DataFrame) -> pd.DataFrame:
