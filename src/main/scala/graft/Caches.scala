@@ -25,8 +25,10 @@ import org.apache.spark.sql.functions.broadcast
   *
   * Ids come from `SparkContext.getPersistentRDDs`: a caller diffs its key
   * set around the work whose blocks it owns — there is no public API from a
-  * checkpointed Dataset to its backing RDD. (Code that holds the RDD itself,
-  * like SameAs' iterative closure, unpersists it directly.)
+  * checkpointed Dataset to its backing RDD. (SameAs' star rounds hold their
+  * RDDs and unpersist each superseded round directly; the labels behind a
+  * closure's map stay persisted, so the map reads them until their owner
+  * frees them like any other block.)
   */
 object Caches {
 

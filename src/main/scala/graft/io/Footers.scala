@@ -1,7 +1,7 @@
 package graft.io
 
 import scala.util.Try
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
@@ -16,14 +16,19 @@ object Footers {
   /** The data files under `path` (recursively; `path` itself when it is a
     * file), each relative to `path`, with its footer. Lazy: a footer is
     * read when the iterator reaches its file. Names Spark's reader skips
-    * (`_SUCCESS`, `.crc` files) are skipped. */
+    * (`_SUCCESS`, `.crc` files) are skipped. Directories are listed with
+    * `listStatus`: `listFiles` builds a `LocatedFileStatus` per file, which
+    * on the local filesystem without Hadoop's native library forks an
+    * `ls -ld` per file to read its permissions. */
   def apply(spark: SparkSession, path: String): Iterator[(String, ParquetMetadata)] = {
     val conf = spark.sessionState.newHadoopConf()
     val root = new Path(path)
     val fs = root.getFileSystem(conf)
     val base = fs.makeQualified(root).toUri
-    val it = fs.listFiles(root, true)
-    Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+    def files(st: FileStatus): Iterator[FileStatus] =
+      if (st.isDirectory) fs.listStatus(st.getPath).iterator.flatMap(files)
+      else Iterator(st)
+    files(fs.getFileStatus(root))
       .filterNot { st =>
         val n = st.getPath.getName
         n.startsWith("_") || n.startsWith(".")

@@ -115,9 +115,8 @@ object Vocabulary {
     Ns.atSomeTimeWithin, Ns.beginOfBegin, Ns.endOfEnd, Ns.hasCertainty,
     Ns.hasGenre, Ns.authoredBy, Ns.relatedWork,
     // childrenCount is emitted by Families.childrenCounts, outside
-    // Pipeline.triples; employedAt and knowsWriter are ontology terms that
-    // no emitter uses
-    Ns.pred + "employedAt", Ns.pred + "childrenCount", Ns.pred + "knowsWriter",
+    // Pipeline.triples
+    Ns.pred + "childrenCount",
     Ns.tPerson, Ns.tContext, Ns.tActivity, Ns.tTimeSpan, Ns.tEvent, Ns.tWork)
 
   /** English vocabulary labels (the analog of the reviewTerms vocab ttl

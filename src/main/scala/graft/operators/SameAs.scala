@@ -13,27 +13,48 @@ import org.apache.spark.storage.StorageLevel
   * transitive closure to consumers; the north_rule mandates a real closure.
   *
   * Algorithm: connected components, each node labelled with the least name
-  * of its component. Edge sets up to `DriverClosureCap` are closed with a
-  * union-find on the driver; larger ones with alternating large-star /
-  * small-star rounds over pair RDDs (Kiveris et al., "Connected Components
-  * in MapReduce and Beyond", SoCC 2014), which rewire every component into
-  * a star around its least node. The rounds grow with the log of the
-  * component's diameter whatever the order of the names: scrambled-name
-  * chains of 100 / 400 / 5,000 / 100,000 nodes close in 6–7 / 8 / 11–12 /
-  * 14–15 rounds over three name orders. Each round is one Spark job;
-  * per-node minima are combinable `reduceByKey`s and edges stream against
-  * a per-partition hash map of them, so a hub's neighbour list is never
-  * held in memory at once.
+  * (`String.compareTo`) of its component, in one shuffle:
+  *
+  *  1. each input partition runs a union-find over its own edges and emits
+  *     (node, least node of its local component). A task holds at most
+  *     `UnionFindNodeCap` nodes: past it, it emits its labels and restarts
+  *     with an empty forest;
+  *  2. one hash shuffle by node gathers each node's distinct local labels.
+  *     The least is the node's label; every other label l gives a boundary
+  *     edge (l, least), which links two local components. The job that
+  *     materializes the labels also counts the nodes and the boundary.
+  *
+  * The boundary size picks the finish:
+  *  - no boundary edge: every local component is a whole component, and
+  *    the labels are the map;
+  *  - up to `DriverClosureCap` boundary edges: the driver collects them,
+  *    closes them with a union-find and broadcasts the label → canon map,
+  *    which remaps the labels lazily;
+  *  - more: alternating large-star / small-star rounds over pair RDDs
+  *    (Kiveris et al., "Connected Components in MapReduce and Beyond",
+  *    SoCC 2014) close the boundary alone, and their map is joined back.
+  *    The rounds grow with the log of the component's diameter whatever
+  *    the order of the names: scrambled-name chains of 100 / 400 / 5,000 /
+  *    100,000 nodes close in 6–7 / 8 / 11–12 / 14–15 rounds over three name
+  *    orders. Each round is one Spark job; per-node minima are combinable
+  *    `reduceByKey`s and edges stream against a per-partition hash map of
+  *    them, so a hub's neighbour list is never held in memory at once.
+  *
+  * A boundary is small when each component's edges sit in few partitions
+  * (the 101,000-edge perfbench identity input, written cluster by cluster,
+  * leaves 2 boundary edges; the same edges in random order, as 2 files,
+  * leave 11,381).
   */
 object SameAs {
 
-  /** Driver fast-path bound: identity-edge sets up to this size are
-    * closed with an in-memory union-find (one collect, zero iterative
-    * Spark jobs — the per-round job overhead dominates the iterative
-    * closure at small scale). Beyond it the large-star/small-star rounds
-    * below run — the 10⁹-entity scale path. Both produce the identical
-    * (node, min-of-component) map. */
+  /** Driver finish bound: a boundary of up to this many edges is collected
+    * and closed on the driver; past it, the star rounds close it in Spark.
+    * The driver never holds more boundary edges than this. */
   val DriverClosureCap = 100000L
+
+  /** Nodes one task's local union-find holds at most before it emits its
+    * labels and restarts; a restart only adds boundary edges. */
+  val UnionFindNodeCap = 500000
 
   /** Round cap of the iterative closure: a guard against a defect, not a
     * limit real inputs reach. Rounds grow by about 3 per 10× of chain
@@ -42,23 +63,72 @@ object SameAs {
   val MaxClosureRounds = 40
 
   /** edges(a, b) → (node, canon): every node of the edge set mapped to the
-    * lexicographic min of its connected component.
-    *
-    * Dispatch is a single limit(cap+1) collect: it both answers "is it
-    * small?" and, when yes, IS the edge set the union-find consumes. The
-    * collect is a CollectLimit, which scans one partition and then scales
-    * up (`spark.sql.limit.scaleUpFactor`) until it holds cap+1 rows or has
-    * read every partition, so it costs one Spark job or more: 3 on a
-    * ≈104 k-edge input, as many as the rounds that close it. Either path
-    * hints the map by its exact node count (`Caches.broadcastIfSmall`);
-    * `canonicalize` joins it as given. */
-  def closure(edges: DataFrame): DataFrame = {
-    val probe = edges.select(col("a"), col("b"))
-      .limit((DriverClosureCap + 1).toInt).collect()
-    if (probe.length <= DriverClosureCap)
-      closureOnDriver(edges.sparkSession,
-        probe.map(r => (r.getString(0), r.getString(1))))
-    else starClosure(edges)._1
+    * lexicographic min of its connected component. The map reads the
+    * persisted labels, so it stays readable without a recompute until its
+    * owner frees the session's blocks (`Caches`). It is hinted by its exact
+    * node count (`Caches.broadcastIfSmall`); `canonicalize` joins it as
+    * given. Spark jobs: one for the labels, one more for the driver finish,
+    * one per round for the star finish. */
+  def closure(edges: DataFrame): DataFrame =
+    close(edges, DriverClosureCap, UnionFindNodeCap).map
+
+  /** A closure's map, its node count, its boundary size and the finish
+    * that closed the boundary: "none", "driver" or "star". */
+  private[graft] final case class Closed(map: DataFrame, nodes: Long,
+                                         boundary: Long, finish: String)
+
+  /** `closure` with its two bounds as arguments. */
+  private[graft] def close(edges: DataFrame, driverCap: Long,
+                           nodeCap: Int): Closed = {
+    val spark = edges.sparkSession
+    import spark.implicits._
+    val part = new HashPartitioner(
+      spark.conf.get("spark.sql.shuffle.partitions").toInt)
+    val local = edges.select(col("a"), col("b")).queryExecution.toRdd
+      .mapPartitions { rows =>
+        val uf = new UnionFind
+        // drain before a union could take the forest past `nodeCap`
+        rows.flatMap { r =>
+          val out =
+            if (uf.size > nodeCap - 2) uf.drain() else Array.empty[(String, String)]
+          uf.union(r.getUTF8String(0).toString, r.getUTF8String(1).toString)
+          out
+        } ++ uf.drain()
+      }
+    // each task emits a node once per forest, so there is nothing to
+    // combine before the shuffle
+    val labels = local.combineByKey[Array[String]](Array(_),
+        (ls, l) => if (ls.contains(l)) ls else ls :+ l,
+        (x, y) => x ++ y.filterNot(x.contains), part, mapSideCombine = false)
+      .map { case (node, ls) =>
+        val label = ls.min
+        (node, label, ls.filter(_ != label))
+      }
+      .persist(StorageLevel.MEMORY_AND_DISK) // filled by the fold below
+    val (nodes, boundary) = labels
+      .map { case (_, _, others) => (1L, others.length.toLong) }
+      .fold((0L, 0L)) { case ((n1, b1), (n2, b2)) => (n1 + n2, b1 + b2) }
+    def boundaryEdges = labels.flatMap { case (_, label, others) =>
+      others.iterator.map((_, label)) }
+    def nodeLabels = labels.map { case (node, label, _) => (node, label) }
+    val (map, finish) =
+      if (boundary == 0) (nodeLabels.toDF("node", "canon"), "none")
+      else if (boundary <= driverCap) {
+        val uf = new UnionFind
+        boundaryEdges.collect().foreach { case (a, b) => uf.union(a, b) }
+        val canon = spark.sparkContext.broadcast(uf.drain().toMap)
+        (labels.map { case (node, label, _) =>
+          (node, canon.value.getOrElse(label, label)) }.toDF("node", "canon"),
+          "driver")
+      } else {
+        val star = starClosure(boundaryEdges.toDF("a", "b"))._1
+          .toDF("label", "label_canon")
+        (nodeLabels.toDF("node", "label")
+          .join(star, Seq("label"), "left")
+          .select(col("node"), coalesce(col("label_canon"), col("label")).as("canon")),
+          "star")
+      }
+    Closed(Caches.broadcastIfSmall(map, nodes), nodes, boundary, finish)
   }
 
   /** The large-star/small-star closure and the rounds it took. The state
@@ -72,10 +142,11 @@ object SameAs {
     * lineage. Throws once `maxRounds` rounds still change edges — the cap
     * is never silent.
     *
-    * This is the big-edge-set path of `closure`, kept equivalence-tested
-    * against the driver union-find (Round4OpsSpec). `edges` is read three
-    * times (twice by the first round, once for the final node list), so
-    * pass a frame that re-scans cheaply. */
+    * This is `closure`'s finish for a boundary past `DriverClosureCap`,
+    * kept equivalence-tested against an independent union-find
+    * (Round4OpsSpec). `edges` is read three times (twice by the first
+    * round, once for the final node list), so pass a frame that re-scans
+    * cheaply: `closure` passes the boundary of its persisted labels. */
   private[graft] def starClosure(edges: DataFrame,
       maxRounds: Int = MaxClosureRounds): (DataFrame, Int) = {
     val spark = edges.sparkSession
@@ -157,30 +228,39 @@ object SameAs {
     }
   }
 
-  /** Union-find (path-halving) closure over an already-collected edge set.
-    * A union links the larger root under the smaller, so every root is its
-    * component's lexicographic min and canon = find(n) — the same map as
-    * the large-star/small-star fixpoint. */
-  private def closureOnDriver(spark: org.apache.spark.sql.SparkSession,
-                              es: Array[(String, String)]): DataFrame = {
-    import spark.implicits._
-    val parent = scala.collection.mutable.HashMap.empty[String, String]
-    def find(x0: String): String = {
+  /** Union-find with path halving. A union links the larger root under
+    * the smaller, so every root is its component's least node. */
+  private final class UnionFind {
+    private val parent = new java.util.HashMap[String, String]
+
+    def size: Int = parent.size
+
+    def union(a: String, b: String): Unit = {
+      parent.putIfAbsent(a, a)
+      parent.putIfAbsent(b, b)
+      val ra = find(a)
+      val rb = find(b)
+      if (ra < rb) parent.put(rb, ra) else if (rb < ra) parent.put(ra, rb)
+    }
+
+    private def find(x0: String): String = {
       var x = x0
-      while (parent.getOrElse(x, x) != x) {
-        val p = parent(x)
-        parent(x) = parent.getOrElse(p, p) // path halving
-        x = parent(x)
+      var p = parent.get(x)
+      while (p != x) {
+        val g = parent.get(p)
+        parent.put(x, g) // path halving
+        x = g
+        p = parent.get(x)
       }
       x
     }
-    es.foreach { case (a, b) =>
-      val (ra, rb) = (find(a), find(b))
-      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+
+    /** Every node with its root; the forest is empty afterwards. */
+    def drain(): Array[(String, String)] = {
+      val out = parent.keySet.toArray(Array.empty[String]).map(n => (n, find(n)))
+      parent.clear()
+      out
     }
-    val nodes = es.iterator.flatMap { case (a, b) => Iterator(a, b) }.toSet
-    val canon = nodes.toSeq.sorted.map(n => (n, find(n))).toDF("node", "canon")
-    Caches.broadcastIfSmall(canon, nodes.size)
   }
 
   /** Extract sameAs edges from a triple table. */

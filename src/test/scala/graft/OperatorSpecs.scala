@@ -27,22 +27,12 @@ class SameAsSpec extends SparkSpec {
     val n = 200
     val edges = Seq.fill(500)((s"n${rnd.nextInt(n)}", s"n${rnd.nextInt(n)}"))
       .filter { case (a, b) => a != b }
-    // reference implementation: classic union-find with min-label canon
-    val parent = scala.collection.mutable.Map.empty[String, String]
-    def find(x: String): String = {
-      val p = parent.getOrElseUpdate(x, x)
-      if (p == x) x else { val r = find(p); parent(x) = r; r }
-    }
-    def union(a: String, b: String): Unit = {
-      val (ra, rb) = (find(a), find(b))
-      if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
-    }
-    edges.foreach { case (a, b) => union(a, b) }
+    val canon = SameAsSpec.leastOfComponent(edges)
     val got = SameAs.closure(edges.toDF("a", "b"))
       .as[(String, String)].collect().toMap
     // every node present in an edge maps to its component's min label
     assert(got.keySet == edges.flatMap(e => Seq(e._1, e._2)).toSet)
-    got.foreach { case (k, v) => assert(v == find(k), s"canon($k)") }
+    got.foreach { case (k, v) => assert(v == canon(k), s"canon($k)") }
   }
 
   test("two-cluster merge via a bridging edge") {
@@ -59,6 +49,25 @@ class SameAsSpec extends SparkSpec {
     val got = SameAs.canonicalize(t, SameAs.closure(SameAs.edgesOf(t)))
     assert(planNodes(got) { case s: InMemoryTableScanExec => s }.size == 2)
     assert(planNodes(got) { case s: FileSourceScanExec => s }.isEmpty)
+  }
+}
+
+object SameAsSpec {
+  /** The reference closure: classic union-find with min-label canon, each
+    * node of `edges` (self-loops included) mapped to its component's least
+    * name. */
+  def leastOfComponent(edges: Seq[(String, String)]): Map[String, String] = {
+    val parent = scala.collection.mutable.Map.empty[String, String]
+    def find(x: String): String = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    def union(a: String, b: String): Unit = {
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
+    }
+    edges.foreach { case (a, b) => union(a, b) }
+    parent.keys.map(k => k -> find(k)).toMap
   }
 }
 

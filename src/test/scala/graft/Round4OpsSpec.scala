@@ -1,7 +1,7 @@
 package graft
 
 import graft.model.Ns
-import graft.operators.Families
+import graft.operators.{Families, SameAs}
 import java.sql.Timestamp
 import org.apache.spark.sql.functions._
 
@@ -97,9 +97,9 @@ class Round4OpsSpec extends SparkSpec {
       ("n5", "n4"), ("n4", "n3"), ("n3", "n2"), ("n2", "n1"),
       ("hub", "s1"), ("hub", "s2"), ("hub", "s3"), ("s3", "a0"),
       ("x2", "x1"), ("z9", "z8")).toDF("a", "b")
-    val fast = operators.SameAs.closure(edges)
+    val fast = SameAs.closure(edges)
       .as[(String, String)].collect().toSet
-    val iter = operators.SameAs.starClosure(edges)._1
+    val iter = SameAs.starClosure(edges)._1
       .as[(String, String)].collect().toSet
     assert(fast == iter, s"driver=$fast iterative=$iter")
     assert(fast.contains(("n5", "n1")) && fast.contains(("hub", "a0")))
@@ -125,29 +125,64 @@ class Round4OpsSpec extends SparkSpec {
       .map(n => (s"chain$n", chain(n, s"c${n}_"), Some(n)))
     val cases = chains ++
       Seq(("star", star, None), ("zigzag", zigzag, None), ("odd", odd, None))
+    // (input partitions, driver cap, union-find node cap): the shipped
+    // bounds and a node cap that restarts each task's forest many times, on
+    // 1, 3 and 8 partitions; a driver cap that sends the boundary to the
+    // star rounds
+    val runs = Seq(1, 3, 8).flatMap(n => Seq(
+      (n, SameAs.DriverClosureCap, SameAs.UnionFindNodeCap), (n, SameAs.DriverClosureCap, 64))) :+
+      ((8, 0L, SameAs.UnionFindNodeCap))
+    val finishes = scala.collection.mutable.Set.empty[String]
+    var restarted = false
     val key = "spark.sql.shuffle.partitions"
     val saved = spark.conf.get(key)
     try for (parts <- Seq("1", "3")) {
       spark.conf.set(key, parts)
       for ((name, es, chainLen) <- cases) {
-        val edges = es.toDF("a", "b")
-        val fast = operators.SameAs.closure(edges)
-          .as[(String, String)].collect().toSet
-        val (iterDf, rounds) = operators.SameAs.starClosure(edges)
-        val iter = iterDf.as[(String, String)].collect().toSet
-        val wrong = (iter -- fast).size + (fast -- iter).size
-        assert(wrong == 0, s"$name at $parts partitions: $wrong " +
-          s"(node, canon) pairs in one map only (${fast.size} nodes), e.g. " +
-          (iter -- fast).take(3).mkString(", "))
+        val expected = SameAsSpec.leastOfComponent(es)
+        def check(map: org.apache.spark.sql.DataFrame, how: String): Unit = {
+          val got = map.as[(String, String)].collect()
+          val wrong = got.filter { case (n, c) => !expected.get(n).contains(c) }
+          assert(got.length == expected.size && wrong.isEmpty, s"$name at $parts " +
+            s"partitions, $how: ${got.length} nodes for ${expected.size}, " +
+            s"${wrong.length} not mapped to their component's least, e.g. " +
+            wrong.take(3).mkString(", "))
+        }
+        val (iterDf, rounds) = SameAs.starClosure(es.toDF("a", "b"))
+        check(iterDf, "star rounds")
         // rounds grow with the log of a chain: ≈3 more per 10× length
         chainLen.foreach(n =>
           assert(rounds <= 3 * math.log10(n) + 3, s"$name: $rounds rounds"))
+        for ((inputs, driverCap, nodeCap) <- runs) {
+          val edges = spark.sparkContext.parallelize(rnd.shuffle(es), inputs).toDF("a", "b")
+          val c = SameAs.close(edges, driverCap, nodeCap)
+          check(c.map, s"$inputs input partitions, caps $driverCap/$nodeCap, ${c.finish} finish")
+          finishes += c.finish
+          // one partition leaves a boundary only when its forest restarted
+          if (inputs == 1 && c.boundary > 0) restarted = true
+        }
       }
     } finally spark.conf.set(key, saved)
+    assert(finishes == Set("none", "driver", "star"))
+    assert(restarted)
     // a closure that is still changing at the cap throws, never truncates
-    val e = intercept[IllegalStateException](operators.SameAs.starClosure(
+    val e = intercept[IllegalStateException](SameAs.starClosure(
       chains.head._2.toDF("a", "b"), maxRounds = 2))
     assert(e.getMessage.contains("after 2 rounds"), e.getMessage)
+  }
+
+  test("closure: a small input takes one Spark job, two when the driver closes a boundary") {
+    val es = Seq(("n3", "n2"), ("n2", "n1"), ("m2", "m1"), ("m1", "n3"))
+    def jobs(inputs: Int): (Int, String) = {
+      var c: SameAs.Closed = null
+      val n = jobsOf {
+        c = SameAs.close(spark.sparkContext.parallelize(es, inputs).toDF("a", "b"),
+          SameAs.DriverClosureCap, SameAs.UnionFindNodeCap)
+      }
+      (n, c.finish)
+    }
+    assert(jobs(1) == (1, "none"))
+    assert(jobs(4) == (2, "driver"))
   }
 
   test("birth position: MIDDLE never maps (the reference's MIDDLE: typo)") {
